@@ -464,6 +464,11 @@ def decode_media_units(
                 f"valid names are {all_names}"
             )
         want = [c for c in all_names if c in set(columns)]
+        if not want:
+            raise ValueError(
+                f"decode_media_units: columns {columns!r} selects no field; "
+                f"valid names are {all_names}"
+            )
     schema = T.StructType(
         [f for f in MEDIA_UNITS_SCHEMA.fields if f.name in want]
     )

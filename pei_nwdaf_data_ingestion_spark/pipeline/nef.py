@@ -13,11 +13,14 @@ dimension.  Output: the normalized record relation
 Tags are typed nullable columns (not a map) so parquet stats / pruning /
 predicate pushdown work on them at 100TB (SURVEY.md 1.4).
 
-The whole path is: broadcast join -> double explode -> per-type select ->
-union - a single static DAG replacing the reference's per-record dict
-dispatch (receiver.py:199-203).  Used identically by batch tests and the
-Structured Streaming ingest (streaming/ingest.py), so stream/batch
-semantics cannot diverge.
+The whole path is: subscription-map lookup -> double explode -> per-type
+select -> union - a single static DAG replacing the reference's per-record
+dict dispatch (receiver.py:199-203).  It has no join and no exchange: the
+tiny subscription dimension is collected once, when the plan is built, into
+a literal map (the reference's in-memory registry cache, registry.py:22-109),
+so a micro-batch plans and runs without adaptive query stages.  Used
+identically by batch tests and the Structured Streaming ingest
+(streaming/ingest.py), so stream/batch semantics cannot diverge.
 """
 
 from __future__ import annotations
@@ -175,8 +178,57 @@ COMMS_T = T.ArrayType(
 )
 
 
+# subscription context per notif_id: the registry cache entry the reference
+# reads per notification (receiver.py:367-374)
+CONTEXT_MAP_T = T.MapType(
+    T.StringType(),
+    T.StructType(
+        [
+            T.StructField("sst", T.IntegerType()),
+            T.StructField("sd", T.StringType()),
+            T.StructField("dnn", T.StringType()),
+        ]
+    ),
+)
+
+
 def _null(dt: T.DataType) -> Column:
     return F.lit(None).cast(dt)
+
+
+def _context_map(subscriptions: DataFrame) -> Column:
+    """The subscription dimension as a literal `map<notif_id, struct<sst,
+    sd, dnn>>`, collected once.  sst is kept when `is not None` (0 is a
+    legal slice type); sd/dnn are truthiness-guarded strings
+    (receiver.py:368-374).  A null or duplicate notif_id raises ValueError:
+    a join would silently ignore a null id and emit every record once per
+    duplicate row."""
+    rows = subscriptions.select(
+        F.col("notif_id"),
+        F.col("snssai.sst").alias("sst"),
+        nz(F.col("snssai.sd")).alias("sd"),
+        nz(F.col("dnn")).alias("dnn"),
+    ).collect()
+    seen: set[str] = set()
+    entries: list[Column] = []
+    for r in rows:
+        notif_id = r["notif_id"]
+        if notif_id is None:
+            raise ValueError("normalize_notifications: a subscription row has a null notif_id")
+        if notif_id in seen:
+            raise ValueError(
+                f"normalize_notifications: duplicate subscription notif_id {notif_id!r}"
+            )
+        seen.add(notif_id)
+        entries += [
+            F.lit(notif_id),
+            F.struct(
+                F.lit(r["sst"]).cast(T.IntegerType()).alias("sst"),
+                F.lit(r["sd"]).cast(T.StringType()).alias("sd"),
+                F.lit(r["dnn"]).cast(T.StringType()).alias("dnn"),
+            ),
+        ]
+    return F.create_map(*entries).cast(CONTEXT_MAP_T)
 
 
 def normalize_notifications(
@@ -188,37 +240,45 @@ def normalize_notifications(
 
     Steps (reference receiver.py:354-445 -> Spark):
       2. drop missing notifId           -> filter isNotNull   (:358-361)
-      3. unknown notifId drops out      -> broadcast inner join (:363-365)
-      4. context tags from subscription -> projected join columns (:367-374)
+      3. unknown notifId drops out      -> map lookup is null  (:363-365)
+      4. context tags from subscription -> map value fields    (:367-374)
       5. eventNotifs[] x infos[]        -> explode + explode   (:377-387)
          per-type dispatch              -> one filtered branch per type, union
       -. tagless records dropped        -> any_tag_present filter (:386-389)
 
-    `fallback_ts` replaces the reference's now() fallback (receiver.py:128);
-    the streaming path passes current_timestamp(), tests pass a literal.
+    `subscriptions` is collected once, here, into a literal map, so the
+    plan holds a snapshot of the dimension taken when it is built: restart
+    the stream to pick up subscription changes.  A null or duplicate
+    notif_id raises ValueError.
+
+    `fallback_ts` (unix seconds) replaces the reference's now() fallback
+    (receiver.py:128).  It may be any column of `notifications`, e.g. the
+    streaming path's spool-file receive time; it defaults to
+    current_timestamp(), and tests pass a literal.
     """
     if fallback_ts is None:
         fallback_ts = F.unix_timestamp(F.current_timestamp())
 
-    subs = subscriptions.select(
-        F.col("notif_id"),
-        # sst is kept when `is not None` (0 is a legal slice type); sd/dnn
-        # are truthiness-guarded strings (receiver.py:368-374)
-        F.col("snssai.sst").alias("ctx_sst"),
-        nz(F.col("snssai.sd")).alias("ctx_sd"),
-        nz(F.col("dnn")).alias("ctx_dnn"),
-    )
+    ctx_map = _context_map(subscriptions)
     base = (
         notifications.filter(F.col("notifId").isNotNull())
-        .join(F.broadcast(subs), F.col("notifId") == F.col("notif_id"), "inner")
         .select(
             "notifId",
-            "ctx_sst",
-            "ctx_sd",
-            "ctx_dnn",
+            F.try_element_at(ctx_map, F.col("notifId")).alias("ctx"),
+            fallback_ts.alias("fallback_ts"),
+            "eventNotifs",
+        )
+        .filter(F.col("ctx").isNotNull())
+        .select(
+            "notifId",
+            F.col("ctx.sst").alias("ctx_sst"),
+            F.col("ctx.sd").alias("ctx_sd"),
+            F.col("ctx.dnn").alias("ctx_dnn"),
+            "fallback_ts",
             F.explode("eventNotifs").alias("en"),
         )
     )
+    fallback = F.col("fallback_ts")
 
     ctx = [
         F.col("ctx_sst").alias("snssai_sst"),
@@ -228,7 +288,7 @@ def normalize_notifications(
 
     # --- PERF_DATA branch (receiver.py:89-135) ---
     pd_rows = base.filter(F.col("en.event") == "PERF_DATA").select(
-        "notifId", "ctx_sst", "ctx_sd", "ctx_dnn",
+        "notifId", "ctx_sst", "ctx_sd", "ctx_dnn", "fallback_ts",
         F.col("en.timeStamp").alias("en_ts"),
         F.explode("en.perfDataInfos").alias("info"),
     )
@@ -245,7 +305,7 @@ def normalize_notifications(
     perf = pd_rows.select(
         F.col("notifId"),
         F.coalesce(
-            parse_iso8601_unix_seconds(F.col("info.timeStamp")), fallback_ts
+            parse_iso8601_unix_seconds(F.col("info.timeStamp")), fallback
         ).alias("ts_unix"),
         F.lit("PERF_DATA").alias("event"),
         *ctx,
@@ -267,7 +327,7 @@ def normalize_notifications(
 
     # --- UE_MOBILITY branch (receiver.py:138-165) ---
     mob_rows = base.filter(F.col("en.event") == "UE_MOBILITY").select(
-        "notifId", "ctx_sst", "ctx_sd", "ctx_dnn",
+        "notifId", "ctx_sst", "ctx_sd", "ctx_dnn", "fallback_ts",
         F.explode("en.ueMobilityInfos").alias("info"),
     )
     traj = F.transform(
@@ -283,7 +343,7 @@ def normalize_notifications(
         # event-time = first trajectory point's ts, else fallback (:158)
         # try_element_at: ANSI mode errors on out-of-bounds (empty ueTrajs is
         # a legal payload, test_receiver.py:434-451)
-        F.coalesce(F.try_element_at(traj, F.lit(1))["ts"], fallback_ts).alias("ts_unix"),
+        F.coalesce(F.try_element_at(traj, F.lit(1))["ts"], fallback).alias("ts_unix"),
         F.lit("UE_MOBILITY").alias("event"),
         *ctx,
         _null(T.StringType()).alias("ueIpv4Addr"),
@@ -302,7 +362,7 @@ def normalize_notifications(
 
     # --- UE_COMM branch (receiver.py:168-196) ---
     comm_rows = base.filter(F.col("en.event") == "UE_COMM").select(
-        "notifId", "ctx_sst", "ctx_sd", "ctx_dnn",
+        "notifId", "ctx_sst", "ctx_sd", "ctx_dnn", "fallback_ts",
         F.explode("en.ueCommInfos").alias("info"),
     )
     comms = F.transform(
@@ -317,7 +377,7 @@ def normalize_notifications(
     comm = comm_rows.select(
         F.col("notifId"),
         # event-time = first comm's endTime, else fallback (:189)
-        F.coalesce(F.try_element_at(comms, F.lit(1))["endTime"], fallback_ts).alias("ts_unix"),
+        F.coalesce(F.try_element_at(comms, F.lit(1))["endTime"], fallback).alias("ts_unix"),
         F.lit("UE_COMM").alias("event"),
         *ctx,
         _null(T.StringType()).alias("ueIpv4Addr"),

@@ -12,9 +12,10 @@ not in this image).  Semantics preserved:
 - state survives 'restart' (a new instance on the same path sees the same
   rows - asserted like tests/test_registry.py:63-112)
 
-The read path for the DATA PLANE is a broadcast join (pipeline/nef.py), not
-point lookups - the in-memory cache of the reference is obviated by
-Catalyst broadcasting the whole (tiny) dim to every executor.
+The DATA PLANE reads the store once, when a pipeline is built:
+pipeline/nef.py collects load() into a literal notif_id -> context map, the
+dual of the reference's in-memory cache.  A running stream keeps that
+snapshot; restart it to pick up subscription changes.
 """
 
 from __future__ import annotations
@@ -23,8 +24,15 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .nef import SUBSCRIPTION
+
+# the append log's rows: declared, so a read resolves no parquet footers
+_LOG_SCHEMA = T.StructType(
+    SUBSCRIPTION.fields
+    + [T.StructField("_seq", T.LongType()), T.StructField("_deleted", T.BooleanType())]
+)
 
 
 class SubscriptionStore:
@@ -52,12 +60,16 @@ class SubscriptionStore:
         created_at resolve to the later write, matching INSERT OR REPLACE."""
         if not self._exists():
             return self.spark.createDataFrame([], SUBSCRIPTION)
-        raw = self.spark.read.parquet(self.path)
+        raw = self.spark.read.schema(_LOG_SCHEMA).parquet(self.path)
         w = W.partitionBy("notif_id").orderBy(F.desc("_seq"))
         # rank BEFORE dropping tombstones: a delete must shadow every older
-        # live version of the key, not be filtered out from under it
+        # live version of the key, not be filtered out from under it.
+        # coalesce(1): the dimension is tiny by design (pipelines collect it
+        # whole, pipeline/nef.py) and one partition already satisfies the
+        # window's clustering, so the ranking needs no shuffle.
         return (
-            raw.withColumn("_rn", F.row_number().over(w))
+            raw.coalesce(1)
+            .withColumn("_rn", F.row_number().over(w))
             .filter((F.col("_rn") == 1) & ~F.col("_deleted"))
             .drop("_rn", "_seq", "_deleted")
         )
@@ -83,7 +95,11 @@ class SubscriptionStore:
             return self._seq_cache + 1
         if not self._exists():
             return 1
-        m = self.spark.read.parquet(self.path).agg(F.max("_seq").alias("m")).collect()
+        m = (
+            self.spark.read.schema(_LOG_SCHEMA).parquet(self.path)
+            .agg(F.max("_seq").alias("m"))
+            .collect()
+        )
         return int(m[0]["m"] or 0) + 1
 
     def _append(self, rows: list[dict], deleted: bool) -> None:

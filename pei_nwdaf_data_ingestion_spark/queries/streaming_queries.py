@@ -844,10 +844,11 @@ def stream_static_enrich(spark: SparkSession, sf: str) -> DataFrame:
     """Stream-static join: the event stream enriched against the (batch)
     customer dimension - Spark re-plans the static side per micro-batch,
     and a broadcast-sized dim makes the join shuffle-free on the stream
-    side (the exact posture of the reference's subscription-context
-    enrichment, receiver.py:363-374, which pipeline/nef.py implements for
-    the NEF schema).  Aggregated per (market segment, event type) so the
-    drained output is small and deterministic."""
+    side (the reference's subscription-context enrichment,
+    receiver.py:363-374, as a join; pipeline/nef.py serves the NEF
+    schema's tiny subscription dimension as a literal map lookup instead).
+    Aggregated per (market segment, event type) so the drained output is
+    small and deterministic."""
     ev = _events_stream(spark, sf)
     cust = load(spark, sf, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_mktsegment"

@@ -40,11 +40,20 @@ def build_ingest_stream(
     json_dir: str,
     subscriptions: DataFrame,
 ) -> DataFrame:
-    """Streaming normalized-record relation: stream x broadcast dim join +
-    the shared normalizer DAG.  Caller attaches the sink (foreachBatch for
-    Kafka/keyed fan-out, memory for tests)."""
+    """Streaming normalized-record relation: the shared normalizer DAG over
+    the notification stream.  Caller attaches the sink (foreachBatch for
+    Kafka/keyed fan-out, memory for tests).
+
+    The subscription dimension is read once, now, into the plan's literal
+    context map: restart the stream to pick up subscription changes.  The
+    timestamp fallback is the spool file's modification time, i.e. when
+    the shim accepted the POST (the reference's now(), receiver.py:128).
+    It is a column, not a per-batch literal, so it stays the same when an
+    epoch is replayed and every micro-batch reuses the same generated
+    code."""
     raw = read_notification_stream(spark, json_dir)
-    return normalize_notifications(raw, subscriptions)
+    received = F.unix_timestamp(F.col("_metadata.file_modification_time"))
+    return normalize_notifications(raw, subscriptions, fallback_ts=received)
 
 
 def run_to_memory(

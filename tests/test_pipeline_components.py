@@ -1152,6 +1152,21 @@ class TestMediaUnits:
         ]
         assert img.fmt.unique().tolist() == ["bmp"]
 
+    @pytest.mark.parametrize("columns", [[], ""])
+    def test_decode_units_rejects_an_empty_column_list(self, spark, columns):
+        """An empty selection would build a zero-field schema that fails
+        far from the call site; it must raise at the call."""
+        from pei_nwdaf_data_ingestion_spark.pipeline.multimodal import (
+            decode_media_units,
+        )
+
+        blobs = spark.createDataFrame(
+            [(1, "audio", build_media_blob(1))],
+            "asset_id long, media_type string, content binary",
+        )
+        with pytest.raises(ValueError, match="selects no field"):
+            decode_media_units(blobs, columns=columns)
+
 
 class TestAudioVad:
     def test_vad_ledger_is_internally_consistent(self, spark):

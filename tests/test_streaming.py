@@ -18,6 +18,7 @@ from pei_nwdaf_data_ingestion_spark.pipeline.nef import (
     SUBSCRIPTION,
     normalize_notifications,
 )
+from pei_nwdaf_data_ingestion_spark.pipeline.subscriptions import SubscriptionStore
 from pei_nwdaf_data_ingestion_spark.streaming.ingest import (
     DiscoveredFieldsAccumulator,
     build_ingest_stream,
@@ -50,10 +51,133 @@ def test_stream_matches_batch(spark):
         batch_df = spark.createDataFrame(payloads, NOTIFICATION)
         want = normalize_notifications(batch_df, subs).drop("ts_unix").collect()
 
-    # ts_unix dropped: the streaming fallback is current_timestamp (only the
-    # golden payloads with event-time are asserted in the fidelity tests)
+    # ts_unix dropped: the streaming fallback is the spool file's mtime and
+    # the batch one current_timestamp (the fallback has its own test below)
     assert _canon(got) == _canon(want)
     assert len(got) == 3
+
+
+def _spool(spool, name: str, payload: dict, mtime: int | None = None) -> None:
+    """Atomically place one notification file in the stream's spool (write
+    aside, then rename), optionally with a given modification time."""
+    tmp = spool.parent / (name + ".tmp")
+    tmp.write_text(json.dumps(payload) + "\n")
+    if mtime is not None:
+        os.utime(tmp, (mtime, mtime))
+    os.replace(tmp, spool / name)
+
+
+def _plan_node_names(plan) -> list[str]:
+    names = [plan.nodeName()]
+    children = plan.children()
+    for i in range(children.size()):
+        names += _plan_node_names(children.apply(i))
+    return names
+
+
+def _start_collecting(stream, checkpoint: str, out: list):
+    return (
+        stream.writeStream.foreachBatch(lambda batch, _: out.extend(batch.collect()))
+        .option("checkpointLocation", checkpoint)
+        .start()
+    )
+
+
+def test_ingest_plan_stays_compiled_and_join_free(spark, tmp_path):
+    """Every NEF micro-batch reuses the generated code of the first (no
+    per-batch literal reaches whole-stage codegen) and runs without a join,
+    an exchange or adaptive query stages: the subscription context is a
+    literal map lookup."""
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    subs = spark.createDataFrame([SUB], SUBSCRIPTION)
+    spool = tmp_path / "spool"
+    spool.mkdir()
+    got: list = []
+    q = _start_collecting(
+        build_ingest_stream(spark, str(spool), subs), str(tmp_path / "ckpt"), got
+    )
+    try:
+        counts = []
+        for i, payload in enumerate([PERF_NOTIF, MOBILITY_NOTIF, COMM_NOTIF, PERF_NOTIF]):
+            _spool(spool, f"notif_{i}.json", payload)
+            q.processAllAvailable()
+            counts.append(compiles.getCount())
+        names = _plan_node_names(q._jsq.streamingQuery().lastExecution().executedPlan())
+    finally:
+        q.stop()
+    assert len(got) == 4
+    assert counts[1:] == [counts[0]] * 3, counts
+    shuffling = [n for n in names if "Join" in n or "Exchange" in n or n == "AdaptiveSparkPlan"]
+    assert not shuffling, names
+
+
+def test_stream_fallback_is_the_spool_receive_time(spark, tmp_path):
+    """In a stream, an info without a usable event time gets the time the
+    shim accepted the POST: the spool file's modification time, in seconds
+    (the reference's now(), receiver.py:128)."""
+    received = 1_700_000_123
+    perf = json.loads(json.dumps(PERF_NOTIF))
+    perf["eventNotifs"][0]["perfDataInfos"][0]["timeStamp"] = "not-a-date"
+    mob = json.loads(json.dumps(MOBILITY_NOTIF))
+    mob["eventNotifs"][0]["ueMobilityInfos"][0]["ueTrajs"] = []
+    spool = tmp_path / "spool"
+    spool.mkdir()
+    _spool(spool, "notif_0.json", perf, mtime=received)
+    _spool(spool, "notif_1.json", mob, mtime=received)
+    subs = spark.createDataFrame([SUB], SUBSCRIPTION)
+    run_to_memory(build_ingest_stream(spark, str(spool), subs), "nef_fallback_out")
+    rows = spark.table("nef_fallback_out").collect()
+    assert sorted((r["event"], r["ts_unix"]) for r in rows) == [
+        ("PERF_DATA", received),
+        ("UE_MOBILITY", received),
+    ]
+
+
+def test_stream_reads_the_subscription_snapshot_it_was_built_with(spark, tmp_path):
+    """The running stream holds the subscription dimension as read when it
+    was built: a subscription added later is in the store but gets no
+    records through until the stream is restarted."""
+    store = SubscriptionStore(spark, str(tmp_path / "subs"))
+    store.add(dict(SUB))
+    late = dict(SUB, notif_id="late-notif")
+    spool, ckpt = tmp_path / "spool", str(tmp_path / "ckpt")
+    spool.mkdir()
+    got: list = []
+    q = _start_collecting(build_ingest_stream(spark, str(spool), store.load()), ckpt, got)
+    try:
+        _spool(spool, "notif_0.json", PERF_NOTIF)
+        q.processAllAvailable()
+        store.add(late)
+        _spool(spool, "notif_1.json", dict(PERF_NOTIF, notifId="late-notif"))
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    assert "late-notif" in {s["notif_id"] for s in store.list()}
+    assert len(got) == 1 and got[0]["dnn"] == "internet"
+
+    # restarted from its checkpoint, the stream reads the store again
+    _spool(spool, "notif_2.json", dict(PERF_NOTIF, notifId="late-notif"))
+    q = _start_collecting(build_ingest_stream(spark, str(spool), store.load()), ckpt, got)
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    assert len(got) == 2
+
+
+@pytest.mark.parametrize(
+    "subs, offending",
+    [
+        ([SUB, dict(SUB, dnn="other")], "test-notif-001"),
+        ([SUB, dict(SUB, notif_id=None)], "null notif_id"),
+    ],
+)
+def test_malformed_subscription_dimension_fails_loudly(spark, subs, offending):
+    """A duplicate or null notif_id in the dimension raises at the call
+    site instead of fanning each record out once per duplicate row."""
+    notifs = spark.createDataFrame([PERF_NOTIF], NOTIFICATION)
+    with pytest.raises(ValueError, match=offending):
+        normalize_notifications(notifs, spark.createDataFrame(subs, SUBSCRIPTION))
 
 
 def test_discovered_fields_accumulator(spark):
