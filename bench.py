@@ -30,10 +30,13 @@ compact calibration block and the streaming rec/s numbers.  The r15 line
 grew past bench.py's own 1800-char inclusion guard (anchored retries +
 ledgers + streaming notes), so the guard dropped `queries` and the driver's
 PERF per_query/scaling blocks came back empty two rounds running.  Now the
-bulky diagnostic blocks stay sidecar-only and `queries` is never dropped:
-if the line still outgrows the ~2000-char tail capture, the OPTIONAL blocks
-are shed one by one (streaming -> calibration -> flag lists) before the
-per-query map is ever touched.
+bulky diagnostic blocks stay sidecar-only, a failed query shows as a short
+marker on the line (its error text stays in the sidecar), and if the line
+still outgrows the ~2000-char tail capture, the OPTIONAL blocks are shed one
+by one (streaming -> calibration -> flag lists -> errors) before the
+per-query map is touched.  Only a map too large for the capture on its own
+is dropped, leaving a minimal line of the required keys that always
+parses (stdout_line).
 """
 
 from __future__ import annotations
@@ -271,6 +274,74 @@ def safe_time_query(fn, spark, sf_dir: str, runs: int = 3):
         msg = str(exc).split("\n", 1)[0][:160]
         print(f"bench: {type(exc).__name__} in query - {msg}", file=sys.stderr)
         return f"ERROR {type(exc).__name__}: {msg}"
+
+
+# Consumers of the line capture only a ~2000-char tail of stdout.
+LINE_LIMIT = 1950
+# The keys every consumer of the line reads; the minimal fallback keeps them.
+REQUIRED_KEYS = ("metric", "value", "unit", "uncached_value", "sf")
+# Optional line blocks, shed in this order while the line is too long.
+SHED_ORDER = ("streaming", "calibration", "superlinear_hi", "superlinear", "errors")
+ERROR_MARKER = "ERROR"
+
+
+def stdout_line(payload: dict) -> str:
+    """The one stdout JSON line, built from the full sidecar payload.
+
+    `queries` is the per-query comparison input and outlives every
+    optional block.  Everything bulky (anchored retry passes, growth and
+    rotation ledgers, sf3 band, streaming notes) stays in the sidecar; the
+    line keeps a compact calibration block and the three streaming
+    throughput numbers.  A failed query's entry is ERROR_MARKER here (its
+    error text is in the sidecar).  While the line is over LINE_LIMIT the
+    SHED_ORDER blocks are dropped one by one; if it is still over, the line
+    falls back to REQUIRED_KEYS plus `queries`, then to REQUIRED_KEYS alone.
+    """
+    cal = payload.get("calibration", {})
+    line_payload = {
+        "metric": payload.get("metric"),
+        "value": payload.get("value"),
+        "unit": payload.get("unit"),
+        # 3-decimal (1 ms) precision on the line keeps 56+ entries under the
+        # tail capture; the sidecar keeps the full 4-decimal readings.
+        "queries": {
+            k: (
+                ERROR_MARKER if isinstance(v, str)
+                else round(v, 3) if isinstance(v, float) else v
+            )
+            for k, v in payload.get("queries", {}).items()
+        },
+        "uncached_value": payload.get("uncached_value"),
+        "sf": payload.get("sf"),
+        "calibration": {
+            k: cal.get(k)
+            for k in ("start", "end", "vs_ratchet", "noisy_host", "sustained_slowdown")
+        },
+        "superlinear": payload.get("superlinear", []),
+        "superlinear_hi": payload.get("superlinear_hi", []),
+        "full": "BENCH_full.json",
+    }
+    tel = payload.get("streaming")
+    if tel:
+        line_payload["streaming"] = {
+            "rec_per_sec": tel.get("rec_per_sec"),
+            "passthrough_rec_per_sec": tel.get("passthrough", {}).get("rec_per_sec"),
+            "stateful_tuned_rec_per_sec": (
+                tel.get("stateful_tuned", {}).get("rec_per_sec")
+            ),
+        }
+    if payload.get("errors"):
+        line_payload["errors"] = payload["errors"]
+    for shed in (None, *SHED_ORDER):
+        line_payload.pop(shed, None)
+        line = json.dumps(line_payload, separators=(",", ":"))
+        if len(line) <= LINE_LIMIT:
+            return line
+    minimal = {k: line_payload[k] for k in REQUIRED_KEYS}
+    line = json.dumps({**minimal, "queries": line_payload["queries"]}, separators=(",", ":"))
+    if len(line) <= LINE_LIMIT:
+        return line
+    return json.dumps(minimal, separators=(",", ":"))
 
 
 def main() -> None:
@@ -1440,55 +1511,7 @@ def main() -> None:
                 json.dump(payload, fh, indent=1, sort_keys=True)
         except OSError as exc:
             print(f"bench: snapshot write failed: {exc}", file=sys.stderr)
-    # Stdout line (VERDICT r15 item 1): `queries` is the driver's per-query
-    # comparison input and is NEVER dropped.  Everything bulky (anchored
-    # retry passes, growth/rotation ledgers, sf3 band, full streaming
-    # telemetry with notes) lives only in the sidecar; the line keeps a
-    # compact calibration block and the three streaming throughput numbers.
-    # If the line still outgrows the driver's ~2000-char tail capture the
-    # optional blocks are shed in order - the per-query map survives last.
-    line_payload = {
-        "metric": payload["metric"],
-        "value": payload["value"],
-        "unit": payload["unit"],
-        # 3-decimal (1 ms) precision on the line keeps 56+ entries under the
-        # tail capture; the sidecar keeps the full 4-decimal readings.
-        "queries": {
-            k: (round(v, 3) if isinstance(v, float) else v)
-            for k, v in times.items()
-        },
-        "uncached_value": payload["uncached_value"],
-        "sf": payload["sf"],
-        "calibration": {
-            "start": calib_start,
-            "end": calib_end,
-            "vs_ratchet": calib_vs_ratchet,
-            "noisy_host": noisy_host,
-            "sustained_slowdown": sustained_slowdown,
-        },
-        "superlinear": payload.get("superlinear", []),
-        "superlinear_hi": payload.get("superlinear_hi", []),
-        "full": "BENCH_full.json",
-    }
-    if streaming_tel:
-        line_payload["streaming"] = {
-            "rec_per_sec": streaming_tel.get("rec_per_sec"),
-            "passthrough_rec_per_sec": (
-                streaming_tel.get("passthrough", {}).get("rec_per_sec")
-            ),
-            "stateful_tuned_rec_per_sec": (
-                streaming_tel.get("stateful_tuned", {}).get("rec_per_sec")
-            ),
-        }
-    if errors:
-        line_payload["errors"] = sorted(errors)
-    line = json.dumps(line_payload, separators=(",", ":"))
-    for shed in ("streaming", "calibration", "superlinear_hi", "superlinear"):
-        if len(line) <= 1950:
-            break
-        line_payload.pop(shed, None)
-        line = json.dumps(line_payload, separators=(",", ":"))
-    print(line)
+    print(stdout_line(payload))
     spark.stop()
 
 

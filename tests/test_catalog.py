@@ -7,10 +7,20 @@ TIMESTAMP_NTZ).  `unix_millis()` and `withWatermark()` reject NTZ, so a
 silent fixture regeneration must fail HERE, not in the driver's sample.
 catalog._read is the single choke point every query loads through; it must
 always yield plain TimestampType for time columns.
+
+The schema memo (catalog module docstring) is pinned here too: a warm load
+runs no Spark job, a rewritten file is inferred again, and no DataFrame is
+shared between loads.
 """
 
 from __future__ import annotations
 
+import itertools
+import os
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import types as T
 
 from pei_nwdaf_data_ingestion_spark import catalog
@@ -91,3 +101,70 @@ def test_cache_partitioning_floors_at_shuffle_width(spark, monkeypatch):
             df.unpersist(blocking=True)
         catalog._CACHE.clear()
         catalog._CACHE.update(saved)
+
+
+_groups = itertools.count()
+
+
+def _jobs_of(spark, fn):
+    """(fn(), number of Spark jobs fn ran), counted through a job group."""
+    sc = spark.sparkContext
+    group = f"test_catalog_{next(_groups)}"
+    outer = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", outer)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_warm_load_runs_no_spark_job(spark):
+    for table in catalog.TABLES:
+        first = catalog.load(spark, SF_DIR, table)
+        second, jobs = _jobs_of(spark, lambda: catalog.load(spark, SF_DIR, table))
+        assert jobs == 0, f"{table}: a warm load ran {jobs} Spark job(s)"
+        assert second.schema.json() == first.schema.json(), table
+
+
+def test_warm_cold_fanout_load_reads_its_copy_without_a_job(spark, monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_COLD_FANOUT", "1")
+    # lineitem is ~1 MiB at sf0.01 (>= 256 KiB gate)
+    sf = os.path.join(os.path.dirname(SF_DIR), "sf0.01")
+    first = catalog.load(spark, sf, "lineitem")
+    second, jobs = _jobs_of(spark, lambda: catalog.load(spark, sf, "lineitem"))
+    assert jobs == 0, f"a warm re-chunked load ran {jobs} Spark job(s)"
+    files = second.inputFiles()
+    assert files and all("coldchunk_lineitem_" in f for f in files), files
+    assert second.schema.json() == first.schema.json()
+    import duckdb
+
+    want = duckdb.sql(
+        f"SELECT count(*) FROM read_parquet('{sf}/lineitem.parquet')"
+    ).fetchone()[0]
+    assert second.count() == want
+
+
+def test_rewritten_file_is_resolved_again(spark, tmp_path):
+    path = tmp_path / "region.parquet"
+    pq.write_table(pa.table({"r_regionkey": [0, 1], "r_name": ["A", "B"]}), path)
+    assert catalog.load(spark, str(tmp_path), "region").columns == ["r_regionkey", "r_name"]
+    pq.write_table(pa.table({"k": [7], "x": [0.5], "y": ["z"]}), path)
+    df = catalog.load(spark, str(tmp_path), "region")
+    assert df.columns == ["k", "x", "y"]
+    assert [tuple(r) for r in df.collect()] == [(7, 0.5, "z")]
+
+
+def test_two_loads_self_join_on_column_references(spark):
+    a = catalog.load(spark, SF_DIR, "events")
+    b = catalog.load(spark, SF_DIR, "events")
+    joined = a.join(b, a["event_id"] == b["event_id"]).select(a["event_id"], b["ts"])
+    assert joined.count() == a.count()
+
+
+def test_missing_fixture_names_table_and_path(spark, tmp_path):
+    path = os.path.join(str(tmp_path), "orders.parquet")
+    with pytest.raises(FileNotFoundError, match="'orders'") as err:
+        catalog.load(spark, str(tmp_path), "orders")
+    assert path in str(err.value)
