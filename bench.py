@@ -371,7 +371,7 @@ def main() -> None:
     # failures must not kill the sweep (same lesson as the per-query
     # guard: BENCH_r04 shipped zero numbers because one error aborted
     # everything) - a table that fails to warm just runs cold
-    from pei_nwdaf_data_ingestion_spark import catalog
+    from pei_nwdaf_data_ingestion_spark import artifacts, catalog
 
     for t in catalog.TABLES:
         try:
@@ -508,36 +508,11 @@ def main() -> None:
     # one-core pipeline (VERDICT r6 item 3).
     # Drop ALL sweep-1 warm state first: the cached/persisted base tables
     # (and any lazy localCheckpoint blocks) would otherwise stay resident in
-    # executor memory under the "plain scan" numbers, and the IVF centroid
-    # cache would let sim_ivf_topk skip its k-means build entirely.
+    # executor memory under the "plain scan" numbers, and the stored IVF
+    # centroids would let sim_ivf_topk skip its k-means build entirely.
     os.environ["SPARK_GRAFT_CACHE"] = "0"
     os.environ["SPARK_GRAFT_COLD_FANOUT"] = "1"
-    from pei_nwdaf_data_ingestion_spark.queries import llm
-
-    llm._IVF_CENTROIDS.clear()
-    llm._IVF_INDEX_CACHE.clear()
-    llm._PQ_CODEBOOK.clear()
-    llm._PQ_CODES_CACHE.clear()
-    llm._MH_PAIRS_CACHE.clear()
-    llm._MH_SIG_CACHE.clear()
-    llm._TWO_STAGE_CACHE.clear()
-    # the graph adjacency index is persisted (not checkpointed) since r12
-    # - unpersist it like the base-table cache so the "plain scan" sweep
-    # really rebuilds it (same rule as the IVF/PQ caches above)
-    from pei_nwdaf_data_ingestion_spark.queries import corpus_ops
-
-    for _ed, _deg in corpus_ops._EDGE_INDEX.values():
-        _ed.unpersist(blocking=True)
-    corpus_ops._EDGE_INDEX.clear()
-    # the checkpointed graph projections (r15) drop like _MH_PAIRS_CACHE:
-    # clearing the dict releases the blocks via the ContextCleaner
-    corpus_ops._TRI_PROJ_CACHE.clear()
-    from pei_nwdaf_data_ingestion_spark.queries import audit_ops
-
-    audit_ops._BASKET_PROJ_CACHE.clear()
-    for df in catalog._CACHE.values():
-        df.unpersist(blocking=True)
-    catalog._CACHE.clear()
+    artifacts.clear()
     # materialize the cold-path re-chunked layout once OUTSIDE the timed
     # region (layout preparation, not result caching: every timed query
     # still scans parquet from disk)
@@ -1017,32 +992,9 @@ def main() -> None:
                     "at near-constant |E| by fixture construction"
                 ),
             }
-            # free the sf3 table cache and the sf3 graph adjacency before
-            # the rotation re-warms the base tables (same hygiene as the
-            # uncached sweep's unpersist)
-            for key in [k for k in catalog._CACHE if sf3_dir in k[0]]:
-                catalog._CACHE.pop(key).unpersist(blocking=True)
-            from pei_nwdaf_data_ingestion_spark.queries import (
-                corpus_ops as _co,
-            )
-
-            for key in [k for k in _co._EDGE_INDEX if sf3_dir in str(k)]:
-                _co._EDGE_INDEX.pop(key)[0].unpersist(blocking=True)
-            from pei_nwdaf_data_ingestion_spark.queries import llm as _llm
-            from pei_nwdaf_data_ingestion_spark.queries import (
-                audit_ops as _ao,
-            )
-
-            for cache in (
-                _llm._IVF_CENTROIDS, _llm._IVF_INDEX_CACHE,
-                _llm._PQ_CODEBOOK, _llm._PQ_CODES_CACHE,
-                _llm._MH_PAIRS_CACHE, _llm._MH_SIG_CACHE,
-                _llm._TWO_STAGE_CACHE,
-                _co._TRI_PROJ_CACHE,
-                _ao._BASKET_PROJ_CACHE,
-            ):
-                for key in [k for k in cache if sf3_dir in str(k)]:
-                    cache.pop(key)
+            # free the sf3 tables and indexes before the rotation re-warms
+            # the base tables (same hygiene as the uncached sweep)
+            artifacts.clear(sf3_dir)
 
     # rotating growth sweep (VERDICT r10 item 1): the headline hi sweep
     # measures ~56 shapes; the other ~190 oracled ids' scale posture was

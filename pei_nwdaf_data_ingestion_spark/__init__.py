@@ -13,6 +13,7 @@ and a Structured Streaming ingest path.
 Layout:
     session.py    SparkSession factory (AQE on, UTC, tuned shuffle partitions)
     catalog.py    fixture-table loading helpers
+    artifacts.py  cross-query artifact store (indexes, cached tables)
     registry.py   (query, oracle) registration - the driver contract surface
     queries/      one module per operator family, each registering queries
     pipeline/     reference-semantics transforms (normalizers, policy, upsert)

@@ -18,14 +18,13 @@ attribute ids, which is what keeps self-joins of one table unambiguous.
 
 from __future__ import annotations
 
-import atexit
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from . import artifacts
 
 TABLES = (
     "region",
@@ -51,7 +50,6 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # would (hot tables pinned via .cache() / a real lakehouse layout has many
 # row groups and needs none of this).  Cold-path plans - predicate pushdown,
 # column pruning - are unchanged and still exercised by tests + driver runs.
-_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 
 def _cache_on() -> bool:
@@ -74,7 +72,8 @@ def _cold_fanout_on() -> bool:
 def _fanout_width(spark: SparkSession, size: int) -> int:
     """Partition width for a non-tiny table: at least the shuffle width so
     pre- and post-exchange task counts align, ~1 MiB/partition beyond that,
-    capped at the core count (probe matrix tools/probe_ppjoin.py)."""
+    capped at the core count (probe matrix of tools/probe_ppjoin.py, last
+    in commit 4ef4208)."""
     shuf = int(spark.conf.get("spark.sql.shuffle.partitions", "8"))
     return min(spark.sparkContext.defaultParallelism, max(shuf, size >> 20))
 
@@ -86,7 +85,9 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     pruning, and row-group skipping on whatever the caller selects.  The
     schema comes from the module's memo (see the module docstring): the
     first load of a file infers it with one Spark job, later loads declare
-    it and run none.  Each call returns a new DataFrame.  Raises KeyError
+    it and run none.  Each call returns a new DataFrame, except under
+    SPARK_GRAFT_CACHE=1, where every load of a table in one application
+    returns the one cached frame kept in the artifact store.  Raises KeyError
     for an unknown table and FileNotFoundError, naming the table and the
     path, when the fixture file is missing.
     """
@@ -98,27 +99,26 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     path = os.path.join(sf_dir, f"{table}.parquet")
     if _cache_on():
-        key = (spark.sparkContext.applicationId, path)
-        if key not in _CACHE:
+
+        def build() -> DataFrame:
             df = _read(spark, path, table)
             size = os.path.getsize(path)
             if size < (256 << 10):
                 # tiny dims stay single-partition: they broadcast anyway,
                 # and per-task overhead would dominate
-                df = df.coalesce(1)
-            else:
-                # non-tiny tables fan out to AT LEAST the shuffle width:
-                # the previous ~1 MiB/partition rule left documents (0.59
-                # MiB at sf0.1) on ONE cached partition, starving every
-                # self-join pipeline above it (dedup_ppjoin_prefix measured
-                # 2x slower; BENCH_r05 / VERDICT r5 item 1).  Matching the
-                # shuffle width keeps pre- and post-exchange task counts
-                # aligned (probe matrix tools/probe_ppjoin.py: 8-partition
-                # cache beat both coalesce(1) and 32-partition at 2.2 s vs
-                # 4.1-4.3 s under the bench's shuffle=8).
-                df = df.repartition(_fanout_width(spark, size))
-            _CACHE[key] = df.cache()
-        return _CACHE[key]
+                return df.coalesce(1).cache()
+            # non-tiny tables fan out to AT LEAST the shuffle width: the
+            # previous ~1 MiB/partition rule left documents (0.59 MiB at
+            # sf0.1) on ONE cached partition, starving every self-join
+            # pipeline above it (dedup_ppjoin_prefix measured 2x slower;
+            # BENCH_r05 / VERDICT r5 item 1).  Matching the shuffle width
+            # keeps pre- and post-exchange task counts aligned (probe
+            # matrix of tools/probe_ppjoin.py, last in commit 4ef4208:
+            # 8-partition cache beat both coalesce(1) and 32-partition at
+            # 2.2 s vs 4.1-4.3 s under the bench's shuffle=8).
+            return df.repartition(_fanout_width(spark, size)).cache()
+
+        return artifacts.memo(spark, sf_dir, "table", build, table)
     df = _read(spark, path, table)
     if _cold_fanout_on():
         size = os.path.getsize(path)
@@ -134,38 +134,29 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
             # Data still comes from parquet on disk per query - this is a
             # layout fix, not a cache.
             d, schema = _rechunked(
-                spark, path, table, _fanout_width(spark, size)
+                spark, sf_dir, table, _fanout_width(spark, size)
             )
             return spark.read.schema(schema).parquet(d)
     return df
 
 
-# (app id, fixture path) -> (re-chunked copy dir, schema of the frame written)
-_RECHUNK: dict[tuple[str, str], tuple[str, T.StructType]] = {}
-
-
-def _cleanup_rechunk_dirs() -> None:
-    for d, _ in _RECHUNK.values():
-        shutil.rmtree(d, ignore_errors=True)
-
-
-atexit.register(_cleanup_rechunk_dirs)
-
-
 def _rechunked(
-    spark: SparkSession, path: str, table: str, width: int
+    spark: SparkSession, sf_dir: str, table: str, width: int
 ) -> tuple[str, T.StructType]:
-    key = (spark.sparkContext.applicationId, path)
-    if key not in _RECHUNK:
-        d = tempfile.mkdtemp(prefix=f"coldchunk_{table}_")
-        # write the NORMALIZED frame (_read fixes legacy timestamp
-        # encodings), so reading the copy needs no re-normalization and
-        # values are bit-identical to the original load; the copy is read
-        # back with this frame's schema, so it is never inferred
-        df = _read(spark, path, table)
+    """(dir, schema) of a `width`-file parquet copy of the fixture table,
+    written once per application into a scratch dir.  The copy holds the
+    NORMALIZED frame (_read fixes legacy timestamp encodings), so reading
+    it needs no re-normalization and values are bit-identical to the
+    original load; it is read back with that frame's schema, so it is
+    never inferred."""
+
+    def build() -> tuple[str, T.StructType]:
+        d = artifacts.scratch_dir(f"coldchunk_{table}_")
+        df = _read(spark, os.path.join(sf_dir, f"{table}.parquet"), table)
         df.repartition(width).write.mode("overwrite").parquet(d)
-        _RECHUNK[key] = (d, df.schema)
-    return _RECHUNK[key]
+        return d, df.schema
+
+    return artifacts.memo(spark, sf_dir, "rechunk", build, table)
 
 
 # (path, st_mtime_ns, st_size) -> inferred schema; see the module docstring.

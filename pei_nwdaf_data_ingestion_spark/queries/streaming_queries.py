@@ -9,7 +9,6 @@ the result as a DataFrame.
 
 from __future__ import annotations
 
-import atexit
 import os
 import shutil
 import tempfile
@@ -21,39 +20,36 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .. import artifacts
 from ..catalog import load
 from ..functions import pround
 from ..registry import query
 
-# one prepared stream-source dir per (application, sf): the fixture's
-# TIMESTAMP(NANOS) events file is rewritten ONCE with a plain TimestampType
-# column, so every streaming query here reads it with no legacy-parquet
-# session conf and no per-call schema job / file copy.  Dirs are removed at
-# interpreter exit (they were leaked per-invocation before).
-_STREAM_SRC: dict[tuple[str, str], tuple[str, T.StructType]] = {}
+def _stream_source(spark: SparkSession, sf: str, name: str, source) -> DataFrame:
+    """File-source stream over the frame `source()` returns, written once
+    per (application, sf, name) as one parquet file in a scratch dir.  The
+    written copy depends only on the fixture, so every streaming query
+    reads the same dir with a declared schema: no legacy-parquet session
+    conf, no per-call schema job or file copy."""
 
+    def build() -> tuple[str, T.StructType]:
+        d = artifacts.scratch_dir(f"{name}_stream_")
+        df = source()
+        df.coalesce(1).write.mode("overwrite").parquet(d)
+        return d, df.schema
 
-def _cleanup_stream_dirs() -> None:
-    for d, _ in _STREAM_SRC.values():
-        shutil.rmtree(d, ignore_errors=True)
-    _STREAM_SRC.clear()
-
-
-atexit.register(_cleanup_stream_dirs)
+    d, schema = artifacts.memo(spark, sf, "stream_src", build, name)
+    return spark.readStream.schema(schema).parquet(d)
 
 
 def _events_stream(spark: SparkSession, sf: str) -> DataFrame:
     """File-source stream over the events fixture (production source is
     Kafka with identical downstream plans; the file source just needs a
-    directory of normal-timestamp parquet, prepared once per session)."""
-    key = (spark.sparkContext.applicationId, sf)
-    if key not in _STREAM_SRC:
-        ev = load(spark, sf, "events")  # handles the nanos->micros cast
-        d = tempfile.mkdtemp(prefix="events_stream_")
-        ev.coalesce(1).write.mode("overwrite").parquet(d)
-        _STREAM_SRC[key] = (d, ev.schema)
-    d, schema = _STREAM_SRC[key]
-    return spark.readStream.schema(schema).parquet(d)
+    directory of normal-timestamp parquet: the fixture's TIMESTAMP(NANOS)
+    file is rewritten once with a plain TimestampType column)."""
+    return _stream_source(
+        spark, sf, "events", lambda: load(spark, sf, "events")  # nanos->micros
+    )
 
 
 def _write_time_batches(df: DataFrame, dest: str, order_col, cuts) -> None:
@@ -869,20 +865,16 @@ def _documents_stream(spark: SparkSession, sf: str) -> DataFrame:
     ingest timestamp (base epoch + doc_id seconds - documents carry no
     event time; a real corpus pipeline has the fetch/receive time here).
     Prepared once per (application, sf) like _events_stream."""
-    key = (spark.sparkContext.applicationId, sf + "#docs")
-    if key not in _STREAM_SRC:
-        docs = load(spark, sf, "documents").select(
+    return _stream_source(
+        spark, sf, "documents",
+        lambda: load(spark, sf, "documents").select(
             "doc_id",
             "text",
             F.timestamp_seconds(F.lit(1_600_000_000) + F.col("doc_id")).alias(
                 "ingest_ts"
             ),
-        )
-        d = tempfile.mkdtemp(prefix="documents_stream_")
-        docs.coalesce(1).write.mode("overwrite").parquet(d)
-        _STREAM_SRC[key] = (d, docs.schema)
-    d, schema = _STREAM_SRC[key]
-    return spark.readStream.schema(schema).parquet(d)
+        ),
+    )
 
 
 @query("stream_minhash_dedup")

