@@ -8,7 +8,7 @@ import json
 
 import bench
 
-ERR = "ERROR AnalysisException: " + "x" * 160  # safe_time_query's longest form
+ERR = "ERROR AnalysisException: " + "x" * 160  # time_query's longest form
 
 
 def _payload(queries: dict, **extra) -> dict:
@@ -20,9 +20,7 @@ def _payload(queries: dict, **extra) -> dict:
         "queries": queries,
         "uncached_value": 23.4567,
         "sf": 0.1,
-        "calibration": {"start": 0.1, "end": 0.1, "vs_ratchet": 1.0,
-                        "noisy_host": False, "sustained_slowdown": False,
-                        "heavy_start": 0.2},
+        "calibration": {"start": 0.1, "end": 0.1},
         "superlinear": ["q_a", "q_b"],
         "superlinear_hi": ["q_c"],
         "streaming": {"rec_per_sec": 16000.0, "notes": "n" * 3000,

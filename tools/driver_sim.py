@@ -1,5 +1,9 @@
 """Driver simulation: vanilla SparkSession, sf0.01, every oracled query
-hash-compared against DuckDB (order-insensitive, dtype-exact)."""
+hash-compared against DuckDB (order-insensitive, dtype-exact).
+
+Usage: python tools/driver_sim.py [query-id ...]
+Ids on the command line run only those queries through the same compare
+(the targeted probe); no ids runs the whole gate."""
 import os, sys, time, hashlib
 import duckdb
 import pandas as pd
@@ -43,13 +47,6 @@ rows = df.collect()
 print(f"entry(): {len(rows)} rows, schema={[f.name for f in df.schema.fields]}")
 assert len(rows) > 0
 
-def canon(pdf: pd.DataFrame) -> pd.DataFrame:
-    pdf = pdf.reindex(sorted(pdf.columns), axis=1)
-    for c in pdf.columns:
-        if pdf[c].dtype == object:
-            pdf[c] = pdf[c].map(lambda v: str(sorted(v)) if isinstance(v, (list, np.ndarray)) and False else str(v))
-    return pdf
-
 def vhash(pdf: pd.DataFrame) -> str:
     pdf = pdf.reindex(sorted(pdf.columns), axis=1)
     recs = []
@@ -66,9 +63,14 @@ def vhash(pdf: pd.DataFrame) -> str:
     return hashlib.sha256("\x1e".join(recs).encode()).hexdigest()[:16]
 
 qs, os_ = e.queries(), e.oracle_sql()
+names = sys.argv[1:] or sorted(qs)
 fail = []
-for name in sorted(qs):
+for name in names:
     t0 = time.time()
+    if name not in qs:
+        fail.append((name, "unknown query id"))
+        print(f"FAIL {name}: unknown query id")
+        continue
     try:
         sdf = qs[name](spark, SF).toPandas()
     except Exception as ex:
@@ -103,7 +105,7 @@ for name in sorted(qs):
     else:
         print(f"ok {name}: {len(sdf)} rows  {time.time()-t0:.1f}s")
 
-print(f"\n{'='*60}\n{len(fail)} failures / {len(qs)} queries")
+print(f"\n{'='*60}\n{len(fail)} failures / {len(names)} queries")
 for n, p in fail:
     print(f"  {n}: {p}")
 sys.exit(1 if fail else 0)

@@ -129,7 +129,7 @@ def _replicate(tbl: pa.Table, name: str, factor: int) -> pa.Table:
     return pa.concat_tables(parts)
 
 
-def main() -> None:
+def main(argv: list[str] | None = None) -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--src", default="/root/testdata/sf0.1")
     ap.add_argument(
@@ -141,7 +141,7 @@ def main() -> None:
         ),
     )
     ap.add_argument("--factor", type=int, default=10)
-    args = ap.parse_args()
+    args = ap.parse_args(argv)
     os.makedirs(args.out, exist_ok=True)
     for t in TABLES:
         tbl = pq.read_table(os.path.join(args.src, f"{t}.parquet"))

@@ -3,31 +3,29 @@
 clearing discipline from VERDICT r11 item 3 / r12 items 1-2): warm both
 scales under bench conditions (cache on, shuffle=8, AQE per bench.AQE_ON),
 time each id best-of-5 at sf0.1 and at the sf1 decade, and print the
-floor-adjusted exponent exactly the way bench.py's hi sweep computes it.
+floor-adjusted exponent of bench.growth.
 
 Usage: python tools/probe_growth.py [--fold] <query-id>...
 
 --fold writes each id's best-of-5 idle measurement into
 tools/growth_ledger.json at the CURRENT _seq with an
 "idle_remeasure": true marker - the principled correction channel for
-readings the bench took on a box its own calibration measured as
-degraded (vs_ratchet > 1.1): the ledger's purpose is accurate
-exponents, and a documented idle best-of-5 beats a known-contaminated
-best-of-2.  Non-fold runs only print.
+readings the bench took on a degraded box: the ledger's purpose is
+accurate exponents, and a documented idle best-of-5 beats a
+contaminated best-of-2.  Non-fold runs only print.
 """
 from __future__ import annotations
 
-import math
+import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 os.environ["SPARK_GRAFT_CACHE"] = "1"
 
 import bench  # noqa: E402  (repo root on path)
-from pei_nwdaf_data_ingestion_spark import catalog, registry  # noqa: E402
+from pei_nwdaf_data_ingestion_spark import registry  # noqa: E402
 from pei_nwdaf_data_ingestion_spark.session import get_spark  # noqa: E402
 
 registry.load_all()
@@ -39,85 +37,47 @@ if not names:
 
 BASE = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 HI = os.environ.get("SPARK_GRAFT_SF_HI_DIR") or os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "testdata_sf1",
-    "sf1",
+    bench.REPO_DIR, "testdata_sf1", "sf1"
 )
+# the exponent denominator comes from the ACTUAL scale pair (ADVICE r13:
+# a hardcoded log(10) silently mis-scales the exponent whenever the env
+# vars point at a non-decade pair)
+ratio = bench.scale_ratio(BASE, HI)
+if ratio is None:
+    sys.exit(f"probe_growth: bad scale pair {BASE!r} -> {HI!r}")
+if FOLD and not bench.folds_ledger(BASE, HI):
+    sys.exit(f"probe_growth: --fold needs the ledger's sf0.1 -> sf1 pair, got {BASE!r} -> {HI!r}")
 
 spark = get_spark(app_name="probe_growth", shuffle_partitions=8)
 for d in (BASE, HI):
-    for t in catalog.TABLES:
-        catalog.load(spark, d, t).count()
-registry.QUERIES["agg_global"](spark, BASE).count()
+    bench.warm_tables(spark, d)
+bench.time_query(spark, "agg_global", BASE, runs=1)
 
 floor = bench.time_calibration(spark)
 print(f"calibration floor: {floor:.4f} s")
 
-
-def best_of(name: str, at_dir: str, runs: int = 5) -> float:
-    fn = registry.QUERIES[name]
-    spark.conf.set(
-        "spark.sql.adaptive.enabled",
-        "true" if name in bench.AQE_ON else "false",
-    )
-    best = float("inf")
-    for _ in range(runs):
-        t0 = time.perf_counter()
-        fn(spark, at_dir).write.format("noop").mode("overwrite").save()
-        best = min(best, time.perf_counter() - t0)
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    return best
-
-
-# the exponent denominator comes from the ACTUAL scale pair (ADVICE r13:
-# a hardcoded log(10) silently mis-scales the exponent whenever the env
-# vars point at a non-decade pair) - parsed from the dir names the way
-# bench.py's hi sweep does
-_sf_of = lambda d: float(d.rstrip("/").rsplit("sf", 1)[-1])  # noqa: E731
-try:
-    _base_v, _hi_v = _sf_of(BASE), _sf_of(HI)
-except ValueError:
-    sys.exit(f"probe_growth: cannot parse sf values from {BASE!r} / {HI!r}")
-if not _hi_v > _base_v > 0.0:
-    sys.exit(f"probe_growth: bad scale pair sf{_base_v} -> sf{_hi_v}")
-ratio = math.log(_hi_v / _base_v)
 results = {}
 for name in names:
-    t_lo = best_of(name, BASE)
-    t_hi = best_of(name, HI)
-    adj_lo = max(t_lo - floor, 0.005)
-    adj_hi = max(t_hi - floor, 0.005)
-    g = math.log(adj_hi / adj_lo) / ratio
+    t_lo = bench.time_query(spark, name, BASE, runs=5)
+    t_hi = bench.time_query(spark, name, HI, runs=5)
+    if not (isinstance(t_lo, float) and isinstance(t_hi, float)):
+        print(f"{name}: t_lo={t_lo} t_hi={t_hi}")
+        continue
+    g = bench.growth(t_lo, t_hi, ratio, floor)
     results[name] = (t_lo, t_hi, g)
-    print(
-        f"{name}: t_lo={t_lo:.4f}s t_hi={t_hi:.4f}s "
-        f"adj_lo={adj_lo:.4f} adj_hi={adj_hi:.4f} exponent={g:.3f}"
-    )
+    print(f"{name}: t_lo={t_lo:.4f}s t_hi={t_hi:.4f}s exponent={g:.3f}")
 
 if FOLD:
-    import json
-
-    # the ledger's entries are one-decade sf0.1 -> sf1 measurements; a
-    # fold from any other pair would write incomparable t_base/t_hi rows
-    # (same gate as bench.py's rotation: 9 < ratio < 11)
-    if not 9.0 < _hi_v / _base_v < 11.0:
-        sys.exit(
-            f"probe_growth: --fold requires a one-decade pair, got "
-            f"sf{_base_v} -> sf{_hi_v} (ratio {_hi_v / _base_v:.2f})"
-        )
-    ledger_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "growth_ledger.json"
-    )
-    with open(ledger_path) as fh:
+    with open(bench.LEDGER_PATH) as fh:
         ledger = json.load(fh)
     for name, (t_lo, t_hi, g) in results.items():
         ledger[name] = {
             "seq": int(ledger.get("_seq", 0)),
-            "exponent": round(g, 3),
-            "t_base": round(t_lo, 4),
-            "t_hi": round(t_hi, 4),
+            "exponent": g,
+            "t_base": t_lo,
+            "t_hi": t_hi,
             "idle_remeasure": True,
         }
-    with open(ledger_path, "w") as fh:
+    with open(bench.LEDGER_PATH, "w") as fh:
         json.dump(ledger, fh, indent=1, sort_keys=True)
-    print(f"folded {len(results)} idle re-measures into {ledger_path}")
+    print(f"folded {len(results)} idle re-measures into {bench.LEDGER_PATH}")
