@@ -13,14 +13,16 @@ dimension.  Output: the normalized record relation
 Tags are typed nullable columns (not a map) so parquet stats / pruning /
 predicate pushdown work on them at 100TB (SURVEY.md 1.4).
 
-The whole path is: subscription-map lookup -> double explode -> per-type
-select -> union - a single static DAG replacing the reference's per-record
-dict dispatch (receiver.py:199-203).  It has no join and no exchange: the
-tiny subscription dimension is collected once, when the plan is built, into
-a literal map (the reference's in-memory registry cache, registry.py:22-109),
-so a micro-batch plans and runs without adaptive query stages.  Used
-identically by batch tests and the Structured Streaming ingest
-(streaming/ingest.py), so stream/batch semantics cannot diverge.
+The whole path is: subscription-map lookup -> explode eventNotifs -> one
+explode over each eventNotif's records, every family at once -> one
+projection - a single static DAG replacing the reference's per-record dict
+dispatch (receiver.py:199-203).  It reads its input once, with no union,
+no join and no exchange: the tiny subscription dimension is collected once,
+when the plan is built, into a literal map (the reference's in-memory
+registry cache, registry.py:22-109), so a micro-batch plans and runs
+without adaptive query stages.  Used identically by batch tests and the
+Structured Streaming ingest (streaming/ingest.py), so stream/batch
+semantics cannot diverge.
 """
 
 from __future__ import annotations
@@ -196,6 +198,39 @@ def _null(dt: T.DataType) -> Column:
     return F.lit(None).cast(dt)
 
 
+# event family -> its info array in an eventNotif; any other event type is
+# skipped (receiver.py:380-382)
+_FAMILIES = {
+    "PERF_DATA": ("perfDataInfos", PERF_DATA_INFO),
+    "UE_MOBILITY": ("ueMobilityInfos", UE_MOBILITY_INFO),
+    "UE_COMM": ("ueCommInfos", UE_COMM_INFO),
+}
+# one info before normalization: its family as a tag, and one slot per
+# family of which only its own is set
+_RECORD_T = T.StructType(
+    [T.StructField("event", T.StringType(), False)]
+    + [T.StructField(family, info_t) for family, (_, info_t) in _FAMILIES.items()]
+)
+
+
+def _family_records(family: str) -> Column:
+    """The infos of the exploded eventNotif `en` as `_RECORD_T` records when
+    `en` is of `family`, else an empty array.  The lambda only wraps: the
+    parsing runs in the projection after the explode."""
+    infos, _ = _FAMILIES[family]
+
+    def wrap(info: Column) -> Column:
+        return F.struct(
+            F.lit(family).alias("event"),
+            *[(info if f == family else _null(t)).alias(f)
+              for f, (_, t) in _FAMILIES.items()],
+        )
+
+    return F.when(
+        F.col("en.event") == family, F.transform(F.col(f"en.{infos}"), wrap)
+    ).otherwise(F.array().cast(T.ArrayType(_RECORD_T, False)))
+
+
 def _context_map(subscriptions: DataFrame) -> Column:
     """The subscription dimension as a literal `map<notif_id, struct<sst,
     sd, dnn>>`, collected once.  sst is kept when `is not None` (0 is a
@@ -243,7 +278,9 @@ def normalize_notifications(
       3. unknown notifId drops out      -> map lookup is null  (:363-365)
       4. context tags from subscription -> map value fields    (:367-374)
       5. eventNotifs[] x infos[]        -> explode + explode   (:377-387)
-         per-type dispatch              -> one filtered branch per type, union
+         per-type dispatch              -> each eventNotif's infos of its own
+                                           family, tagged; the projection
+                                           reads the record's family slot
       -. tagless records dropped        -> any_tag_present filter (:386-389)
 
     `subscriptions` is collected once, here, into a literal map, so the
@@ -260,7 +297,7 @@ def normalize_notifications(
         fallback_ts = F.unix_timestamp(F.current_timestamp())
 
     ctx_map = _context_map(subscriptions)
-    base = (
+    rows = (
         notifications.filter(F.col("notifId").isNotNull())
         .select(
             "notifId",
@@ -277,96 +314,30 @@ def normalize_notifications(
             "fallback_ts",
             F.explode("eventNotifs").alias("en"),
         )
+        # one explode over each eventNotif's records, all families at once
+        .select(
+            "notifId", "ctx_sst", "ctx_sd", "ctx_dnn", "fallback_ts",
+            F.explode(F.flatten(F.array(*map(_family_records, _FAMILIES)))).alias("rec"),
+        )
     )
-    fallback = F.col("fallback_ts")
+    event = F.col("rec.event")
+    perf, mob, comm = (F.col("rec")[family] for family in _FAMILIES)
 
-    ctx = [
-        F.col("ctx_sst").alias("snssai_sst"),
-        F.col("ctx_sd").alias("snssai_sd"),
-        F.col("ctx_dnn").alias("dnn"),
-    ]
-
-    # --- PERF_DATA branch (receiver.py:89-135) ---
-    pd_rows = base.filter(F.col("en.event") == "PERF_DATA").select(
-        "notifId", "ctx_sst", "ctx_sd", "ctx_dnn", "fallback_ts",
-        F.col("en.timeStamp").alias("en_ts"),
-        F.explode("en.perfDataInfos").alias("info"),
-    )
+    # each family's metric and tag columns read its own info slot, which is
+    # null on the other families' records
     ip4_tag, ip6_tag = tag_ip_precedence(
-        F.col("info.ueIpAddr.ipv4Addr"), F.col("info.ueIpAddr.ipv6Addr")
-    )
-    perf_metrics = [
-        parse_bitrate_mbps(F.col(f"info.perfData.{src}")).alias(dst)
-        for src, dst in _BITRATE_MAP.items()
-    ] + [
-        F.col(f"info.perfData.{src}").cast("long").alias(dst)
-        for src, dst in _INT_MAP.items()
-    ]
-    perf = pd_rows.select(
-        F.col("notifId"),
-        F.coalesce(
-            parse_iso8601_unix_seconds(F.col("info.timeStamp")), fallback
-        ).alias("ts_unix"),
-        F.lit("PERF_DATA").alias("event"),
-        *ctx,
-        # ipv4 wins over ipv6 (receiver.py:92-96); empty strings are absent
-        ip4_tag.alias("ueIpv4Addr"),
-        ip6_tag.alias("ueIpv6Addr"),
-        nz(F.col("info.appId")).alias("appId"),
-        # the reference's _normalize_perf_data tags ONLY ueIp/appId
-        # (receiver.py:89-98): supi/gpsi/interGroupId present in the payload
-        # are NOT identity tags for PERF_DATA and must stay null, or the
-        # 'no UE identifier' drop rule diverges
-        _null(T.StringType()).alias("supi"),
-        _null(T.StringType()).alias("gpsi"),
-        _null(T.StringType()).alias("interGroupId"),
-        *perf_metrics,
-        _null(TRAJECTORY_T).alias("trajectory"),
-        _null(COMMS_T).alias("comms"),
-    )
-
-    # --- UE_MOBILITY branch (receiver.py:138-165) ---
-    mob_rows = base.filter(F.col("en.event") == "UE_MOBILITY").select(
-        "notifId", "ctx_sst", "ctx_sd", "ctx_dnn", "fallback_ts",
-        F.explode("en.ueMobilityInfos").alias("info"),
+        perf["ueIpAddr"]["ipv4Addr"], perf["ueIpAddr"]["ipv6Addr"]
     )
     traj = F.transform(
-        F.col("info.ueTrajs"),
+        mob["ueTrajs"],
         lambda p: F.struct(
             parse_iso8601_unix_seconds(p["ts"]).alias("ts"),
             p["location"]["nrLocation"]["tai"]["tac"].alias("tac"),
             p["location"]["nrLocation"]["ncgi"]["nrCellId"].alias("nrCellId"),
         ),
     )
-    mob = mob_rows.select(
-        F.col("notifId"),
-        # event-time = first trajectory point's ts, else fallback (:158)
-        # try_element_at: ANSI mode errors on out-of-bounds (empty ueTrajs is
-        # a legal payload, test_receiver.py:434-451)
-        F.coalesce(F.try_element_at(traj, F.lit(1))["ts"], fallback).alias("ts_unix"),
-        F.lit("UE_MOBILITY").alias("event"),
-        *ctx,
-        _null(T.StringType()).alias("ueIpv4Addr"),
-        _null(T.StringType()).alias("ueIpv6Addr"),
-        _null(T.StringType()).alias("appId"),
-        nz(F.col("info.supi")).alias("supi"),
-        nz(F.col("info.gpsi")).alias("gpsi"),
-        # _normalize_ue_mobility tags only supi/gpsi (receiver.py:138-143):
-        # interGroupId is not an identity tag for UE_MOBILITY
-        _null(T.StringType()).alias("interGroupId"),
-        *[_null(T.DoubleType()).alias(dst) for dst in _BITRATE_MAP.values()],
-        *[_null(T.LongType()).alias(dst) for dst in _INT_MAP.values()],
-        F.coalesce(traj, F.array().cast(TRAJECTORY_T)).alias("trajectory"),
-        _null(COMMS_T).alias("comms"),
-    )
-
-    # --- UE_COMM branch (receiver.py:168-196) ---
-    comm_rows = base.filter(F.col("en.event") == "UE_COMM").select(
-        "notifId", "ctx_sst", "ctx_sd", "ctx_dnn", "fallback_ts",
-        F.explode("en.ueCommInfos").alias("info"),
-    )
     comms = F.transform(
-        F.col("info.comms"),
+        comm["comms"],
         lambda c: F.struct(
             parse_iso8601_unix_seconds(c["startTime"]).alias("startTime"),
             parse_iso8601_unix_seconds(c["endTime"]).alias("endTime"),
@@ -374,29 +345,42 @@ def normalize_notifications(
             c["dlVol"].alias("dlVol"),
         ),
     )
-    comm = comm_rows.select(
-        F.col("notifId"),
-        # event-time = first comm's endTime, else fallback (:189)
-        F.coalesce(F.try_element_at(comms, F.lit(1))["endTime"], fallback).alias("ts_unix"),
-        F.lit("UE_COMM").alias("event"),
-        *ctx,
-        _null(T.StringType()).alias("ueIpv4Addr"),
-        _null(T.StringType()).alias("ueIpv6Addr"),
-        _null(T.StringType()).alias("appId"),
-        # UE_COMM tags supi/interGroupId/gpsi, truthiness-guarded
-        # (receiver.py:168-176)
-        nz(F.col("info.supi")).alias("supi"),
-        nz(F.col("info.gpsi")).alias("gpsi"),
-        nz(F.col("info.interGroupId")).alias("interGroupId"),
-        *[_null(T.DoubleType()).alias(dst) for dst in _BITRATE_MAP.values()],
-        *[_null(T.LongType()).alias(dst) for dst in _INT_MAP.values()],
-        _null(TRAJECTORY_T).alias("trajectory"),
-        F.coalesce(comms, F.array().cast(COMMS_T)).alias("comms"),
+    # try_element_at: ANSI mode errors on out-of-bounds (empty ueTrajs /
+    # comms is a legal payload, test_receiver.py:434-451)
+    event_ts = F.coalesce(
+        # PERF_DATA: the info's own timeStamp (receiver.py:128)
+        parse_iso8601_unix_seconds(perf["timeStamp"]),
+        # UE_MOBILITY: the first trajectory point's ts (:158)
+        parse_iso8601_unix_seconds(F.try_element_at(mob["ueTrajs"], F.lit(1))["ts"]),
+        # UE_COMM: the first comm's endTime (:189)
+        parse_iso8601_unix_seconds(F.try_element_at(comm["comms"], F.lit(1))["endTime"]),
     )
-
-    # union of the three typed branches; unsupported event types simply have
-    # no branch (= dropped, receiver.py:380-382)
-    records = perf.unionByName(mob).unionByName(comm)
+    records = rows.select(
+        F.col("notifId"),
+        F.coalesce(event_ts, F.col("fallback_ts")).alias("ts_unix"),
+        event.alias("event"),
+        F.col("ctx_sst").alias("snssai_sst"),
+        F.col("ctx_sd").alias("snssai_sd"),
+        F.col("ctx_dnn").alias("dnn"),
+        # ipv4 wins over ipv6 (receiver.py:92-96); empty strings are absent
+        ip4_tag.alias("ueIpv4Addr"),
+        ip6_tag.alias("ueIpv6Addr"),
+        nz(perf["appId"]).alias("appId"),
+        # PERF_DATA tags ONLY ueIp/appId (receiver.py:89-98): supi/gpsi/
+        # interGroupId in its payload are NOT identity tags and stay null, or
+        # the 'no UE identifier' drop rule diverges.  UE_MOBILITY tags only
+        # supi/gpsi (:138-143); UE_COMM tags supi/gpsi/interGroupId (:168-176)
+        F.coalesce(nz(mob["supi"]), nz(comm["supi"])).alias("supi"),
+        F.coalesce(nz(mob["gpsi"]), nz(comm["gpsi"])).alias("gpsi"),
+        nz(comm["interGroupId"]).alias("interGroupId"),
+        *[parse_bitrate_mbps(perf["perfData"][src]).alias(dst)
+          for src, dst in _BITRATE_MAP.items()],
+        *[perf["perfData"][src].cast("long").alias(dst) for src, dst in _INT_MAP.items()],
+        F.when(event == "UE_MOBILITY", F.coalesce(traj, F.array().cast(TRAJECTORY_T)))
+        .alias("trajectory"),
+        F.when(event == "UE_COMM", F.coalesce(comms, F.array().cast(COMMS_T)))
+        .alias("comms"),
+    )
 
     # drop records with no identity tags (receiver.py:100-101,...,386-389)
     tag_cols = [

@@ -76,7 +76,7 @@ def win_ntile(spark: SparkSession, sf: str) -> DataFrame:
     under AQE: runtime coalescing can hand the two planned copies of the
     range exchange different input layouts - observed as a corrupted
     distributed rank at sf0.1 in round 6, now pinned by the repeated
-    scale probes in tools/probe_new.py runs.)"""
+    scale probes in tools/driver_sim.py <ids> runs.)"""
     from ..functions import global_rank, ntile_expr
 
     o = load(spark, sf, "orders")

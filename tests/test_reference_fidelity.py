@@ -194,6 +194,65 @@ def test_multi_event_batch(spark):
     assert sorted(r["event"] for r in rows) == ["PERF_DATA", "UE_COMM", "UE_MOBILITY"]
 
 
+# the normalized record schema (column names, types, order, nullability)
+RECORD_SCHEMA_DDL = (
+    "notifId STRING, ts_unix BIGINT NOT NULL, event STRING NOT NULL, "
+    "snssai_sst INT, snssai_sd STRING, dnn STRING, "
+    "ueIpv4Addr STRING, ueIpv6Addr STRING, appId STRING, "
+    "supi STRING, gpsi STRING, interGroupId STRING, "
+    "thrputUl_mbps DOUBLE, thrputDl_mbps DOUBLE, maxThrputUl_mbps DOUBLE, "
+    "minThrputUl_mbps DOUBLE, maxThrputDl_mbps DOUBLE, minThrputDl_mbps DOUBLE, "
+    "pdb_ms BIGINT, pdbDl_ms BIGINT, maxPdbUl_ms BIGINT, maxPdbDl_ms BIGINT, "
+    "plr_per_thousand BIGINT, plrDl_per_thousand BIGINT, "
+    "maxPlrUl_per_thousand BIGINT, maxPlrDl_per_thousand BIGINT, "
+    "trajectory ARRAY<STRUCT<ts: BIGINT, tac: STRING, nrCellId: STRING>>, "
+    "comms ARRAY<STRUCT<startTime: BIGINT, endTime: BIGINT, ulVol: BIGINT, dlVol: BIGINT>>"
+)
+
+
+def test_mixed_notification_equals_the_single_family_goldens(spark):
+    """Each eventNotif yields only the records of its own event family:
+    a notification mixing all three families with an unsupported event,
+    mismatched and extra info arrays, null and empty arrays gives exactly
+    the rows of the three single-family goldens (receiver.py:377-387), in
+    the pinned record schema."""
+    perf_en = PERF_NOTIF["eventNotifs"][0]
+    mob_en = MOBILITY_NOTIF["eventNotifs"][0]
+    comm_en = COMM_NOTIF["eventNotifs"][0]
+    mixed = {
+        "notifId": "test-notif-001",
+        "eventNotifs": [
+            perf_en,
+            # a UE_MOBILITY eventNotif that also carries perf infos: only
+            # its mobility records come out
+            dict(mob_en, perfDataInfos=perf_en["perfDataInfos"]),
+            comm_en,
+            {"event": "DISPERSION", "perfDataInfos": perf_en["perfDataInfos"]},
+            # PERF_DATA carrying only mobility infos: no record
+            {"event": "PERF_DATA", "ueMobilityInfos": mob_en["ueMobilityInfos"]},
+            {"event": "UE_COMM", "ueCommInfos": None},
+            {"event": "PERF_DATA", "perfDataInfos": []},
+            {"event": "UE_MOBILITY", "ueMobilityInfos": []},
+            {"event": None, "ueCommInfos": comm_en["ueCommInfos"]},
+            None,
+        ],
+    }
+    got = _normalize(spark, [mixed])
+    want = [
+        row
+        for payload in (PERF_NOTIF, MOBILITY_NOTIF, COMM_NOTIF)
+        for row in _normalize(spark, [payload]).collect()
+    ]
+    assert sorted(got.collect(), key=repr) == sorted(want, key=repr)
+    assert len(want) == 3
+    expected = spark.createDataFrame([], RECORD_SCHEMA_DDL).schema
+    assert got.schema.json() == expected.json()
+    # the default (current-time) fallback keeps the same schema
+    notif_df = spark.createDataFrame([mixed], NOTIFICATION)
+    subs_df = spark.createDataFrame([SUB], SUBSCRIPTION)
+    assert normalize_notifications(notif_df, subs_df).schema.json() == expected.json()
+
+
 def test_unknown_notif_id_dropped(spark):
     """Unknown subscription key -> record dropped (the 403 path,
     receiver.py:363-365)."""

@@ -87,7 +87,8 @@ def test_ingest_plan_stays_compiled_and_join_free(spark, tmp_path):
     """Every NEF micro-batch reuses the generated code of the first (no
     per-batch literal reaches whole-stage codegen) and runs without a join,
     an exchange or adaptive query stages: the subscription context is a
-    literal map lookup."""
+    literal map lookup.  It reads its input once: one scan and no union,
+    every event family's records come out of one explode."""
     compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
     subs = spark.createDataFrame([SUB], SUBSCRIPTION)
     spool = tmp_path / "spool"
@@ -109,6 +110,8 @@ def test_ingest_plan_stays_compiled_and_join_free(spark, tmp_path):
     assert counts[1:] == [counts[0]] * 3, counts
     shuffling = [n for n in names if "Join" in n or "Exchange" in n or n == "AdaptiveSparkPlan"]
     assert not shuffling, names
+    scans = [n for n in names if n.startswith("Scan")]
+    assert len(scans) == 1 and "Union" not in names, names
 
 
 def test_stream_fallback_is_the_spool_receive_time(spark, tmp_path):
