@@ -236,13 +236,10 @@ def ws_fanout_foreach_batch(egress: WsEgress, key: str = "notifId"):
     socket endpoint (the reference is a single process doing exactly
     this); rows that reach it are the notification stream, bounded by
     subscription volume - bulk fan-out at corpus scale stays on the
-    executor-side partitioned sinks (sinks.py).  The batch is read one
-    partition at a time, with the job for the next partition running while
-    the current one is sent, so the driver holds about two partitions,
-    never the whole batch."""
+    executor-side partitioned sinks (sinks.py)."""
 
     def _sink(batch_df, _epoch_id) -> None:
-        for line in batch_df.toJSON().toLocalIterator(prefetchPartitions=True):
+        for line in batch_df.toJSON().toLocalIterator():
             rec = json.loads(line)
             egress.broadcast(
                 rec.get(key), {"type": "data_ingested", "data": rec}

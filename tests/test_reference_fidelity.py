@@ -179,21 +179,6 @@ def test_ue_comm_golden(spark):
     ]
 
 
-def test_multi_event_batch(spark):
-    """One notification with several eventNotifs -> several records (the
-    reference packs them into one Kafka message, test_receiver.py:365-395)."""
-    combined = {
-        "notifId": "test-notif-001",
-        "eventNotifs": (
-            PERF_NOTIF["eventNotifs"]
-            + MOBILITY_NOTIF["eventNotifs"]
-            + COMM_NOTIF["eventNotifs"]
-        ),
-    }
-    rows = _normalize(spark, [combined]).collect()
-    assert sorted(r["event"] for r in rows) == ["PERF_DATA", "UE_COMM", "UE_MOBILITY"]
-
-
 # the normalized record schema (column names, types, order, nullability)
 RECORD_SCHEMA_DDL = (
     "notifId STRING, ts_unix BIGINT NOT NULL, event STRING NOT NULL, "
@@ -210,16 +195,18 @@ RECORD_SCHEMA_DDL = (
 )
 
 
-def test_mixed_notification_equals_the_single_family_goldens(spark):
-    """Each eventNotif yields only the records of its own event family:
-    a notification mixing all three families with an unsupported event,
-    mismatched and extra info arrays, null and empty arrays gives exactly
-    the rows of the three single-family goldens (receiver.py:377-387), in
-    the pinned record schema."""
+def test_multi_event_batch(spark):
+    """One notification with several eventNotifs -> several records (the
+    reference packs them into one Kafka message, test_receiver.py:365-395).
+    Each eventNotif yields only the records of its own event family
+    (receiver.py:377-387): mixed in with an unsupported event, mismatched
+    and extra info arrays, null and empty arrays, the three families give
+    exactly the rows of their single-family goldens, in the pinned record
+    schema."""
     perf_en = PERF_NOTIF["eventNotifs"][0]
     mob_en = MOBILITY_NOTIF["eventNotifs"][0]
     comm_en = COMM_NOTIF["eventNotifs"][0]
-    mixed = {
+    combined = {
         "notifId": "test-notif-001",
         "eventNotifs": [
             perf_en,
@@ -237,18 +224,19 @@ def test_mixed_notification_equals_the_single_family_goldens(spark):
             None,
         ],
     }
-    got = _normalize(spark, [mixed])
+    got = _normalize(spark, [combined])
+    rows = got.collect()
+    assert sorted(r["event"] for r in rows) == ["PERF_DATA", "UE_COMM", "UE_MOBILITY"]
     want = [
         row
         for payload in (PERF_NOTIF, MOBILITY_NOTIF, COMM_NOTIF)
         for row in _normalize(spark, [payload]).collect()
     ]
-    assert sorted(got.collect(), key=repr) == sorted(want, key=repr)
-    assert len(want) == 3
+    assert sorted(rows, key=repr) == sorted(want, key=repr)
     expected = spark.createDataFrame([], RECORD_SCHEMA_DDL).schema
     assert got.schema.json() == expected.json()
     # the default (current-time) fallback keeps the same schema
-    notif_df = spark.createDataFrame([mixed], NOTIFICATION)
+    notif_df = spark.createDataFrame([combined], NOTIFICATION)
     subs_df = spark.createDataFrame([SUB], SUBSCRIPTION)
     assert normalize_notifications(notif_df, subs_df).schema.json() == expected.json()
 

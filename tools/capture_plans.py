@@ -5,9 +5,6 @@ checks plan claims against these files without running Spark).
 
 Usage: python tools/capture_plans.py <tag> <suffix> <query-id>...
        e.g. python tools/capture_plans.py r15 before dedup_ppjoin_prefix
-       python tools/capture_plans.py --nef-microbatch <tag> <suffix>
-       (the executed plan of one NEF ingest micro-batch, written to
-       plans/<tag>/microbatch_<suffix>.txt)
 
 Plans are captured at $PLAN_SF_DIR (default sf0.1) under the bench's AQE
 posture (off unless the id is in bench.AQE_ON) so the captured shape is
@@ -18,84 +15,29 @@ capture still records the executed top-level shape.
 """
 from __future__ import annotations
 
-import json
 import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pei_nwdaf_data_ingestion_spark import artifacts, registry
+from pei_nwdaf_data_ingestion_spark import registry
 from pei_nwdaf_data_ingestion_spark.session import get_spark
 
 SF = os.environ.get("PLAN_SF_DIR", "/root/testdata/sf0.1")
 
 
-# one notification with one info per event family, for its subscription
-_NEF_SUB = {"notif_id": "plan-notif", "snssai": {"sst": 1, "sd": "000001"},
-            "dnn": "internet", "events": ["PERF_DATA", "UE_MOBILITY", "UE_COMM"]}
-_NEF_NOTIF = {"notifId": "plan-notif", "eventNotifs": [
-    {"event": "PERF_DATA", "perfDataInfos": [
-        {"ueIpAddr": {"ipv4Addr": "10.0.0.1"}, "timeStamp": "2026-04-20T10:15:00Z",
-         "perfData": {"thrputUl": "11.74 Mbps", "pdb": 18}}]},
-    {"event": "UE_MOBILITY", "ueMobilityInfos": [
-        {"supi": "imsi-1", "ueTrajs": [{"ts": "2026-04-20T10:14:50Z"}]}]},
-    {"event": "UE_COMM", "ueCommInfos": [
-        {"supi": "imsi-1", "comms": [{"endTime": "2026-04-20T10:15:00Z", "ulVol": 1}]}]},
-]}
-
-
-def _explain(qe, spark) -> str:
-    return qe.explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
-
-
-def nef_microbatch_plan(spark) -> str:
-    """The executed plan of one NEF ingest micro-batch: a one-file trigger
-    of `_NEF_NOTIF` through build_ingest_stream into a foreachBatch sink."""
-    from pei_nwdaf_data_ingestion_spark.pipeline.nef import SUBSCRIPTION
-    from pei_nwdaf_data_ingestion_spark.streaming.ingest import build_ingest_stream
-
-    d = artifacts.scratch_dir("capture_nef_")
-    spool = os.path.join(d, "spool")
-    os.makedirs(spool)
-    with open(os.path.join(spool, "notif.json"), "w") as fh:
-        fh.write(json.dumps(_NEF_NOTIF) + "\n")
-    subs = spark.createDataFrame([_NEF_SUB], SUBSCRIPTION)
-    q = (
-        build_ingest_stream(spark, spool, subs)
-        .writeStream.foreachBatch(lambda batch, _: batch.count())
-        .option("checkpointLocation", os.path.join(d, "checkpoint"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        return _explain(q._jsq.streamingQuery().lastExecution(), spark)
-    finally:
-        q.stop()
-
-
 def main() -> None:
-    nef = sys.argv[1:2] == ["--nef-microbatch"]
-    args = sys.argv[2:] if nef else sys.argv[1:]
-    if len(args) < (2 if nef else 3):
-        sys.exit("usage: capture_plans.py <tag> <suffix> <query-id>...\n"
-                 "       capture_plans.py --nef-microbatch <tag> <suffix>")
-    tag, suffix, names = args[0], args[1], args[2:]
+    if len(sys.argv) < 4:
+        sys.exit("usage: capture_plans.py <tag> <suffix> <query-id>...")
+    tag, suffix, names = sys.argv[1], sys.argv[2], sys.argv[3:]
+    registry.load_all()
+    import bench
+
     out_dir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", tag
     )
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark(app_name="capture-plans")
-    if nef:
-        path = os.path.join(out_dir, f"microbatch_{suffix}.txt")
-        with open(path, "w") as fh:
-            fh.write(nef_microbatch_plan(spark))
-        print(f"wrote {path}")
-        return
-    registry.load_all()
-    import bench
-
     for name in names:
         fn = registry.QUERIES.get(name)
         if fn is None:
@@ -106,7 +48,11 @@ def main() -> None:
             "true" if name in bench.AQE_ON else "false",
         )
         df = fn(spark, SF)
-        plan = _explain(df._jdf.queryExecution(), spark)
+        plan = df._jdf.queryExecution().explainString(
+            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+                "formatted"
+            )
+        )
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as fh:
             fh.write(plan)
