@@ -858,23 +858,6 @@ def main() -> None:
             json.dump(payload, fh, indent=1, sort_keys=True)
     except OSError as exc:
         print(f"bench: sidecar write failed: {exc}", file=sys.stderr)
-    # per-round snapshot: BENCH_full.json is overwritten every run.  The
-    # current round is max(BENCH_r{N}) + 1 (the driver writes
-    # BENCH_r{N}.json when the round ENDS); re-runs within a round
-    # overwrite the same snapshot.  Skipped for off-scale contract checks
-    # so a sf0.01 smoke never clobbers the round's real snapshot.
-    if sf_of(sf_dir) == 0.1:
-        rounds = [
-            int(m.group(1))
-            for f in os.listdir(REPO_DIR)
-            if (m := re.fullmatch(r"BENCH_r(\d+)\.json", f))
-        ]
-        snap = os.path.join(REPO_DIR, f"BENCH_full_r{max(rounds, default=0) + 1:02d}.json")
-        try:
-            with open(snap, "w") as fh:
-                json.dump(payload, fh, indent=1, sort_keys=True)
-        except OSError as exc:
-            print(f"bench: snapshot write failed: {exc}", file=sys.stderr)
     print(stdout_line(payload))
     spark.stop()
 

@@ -296,7 +296,15 @@ def dedup_ppjoin_prefix(spark: SparkSession, sf: str) -> DataFrame:
     candidates from 5k docs); the positional bound at t=0.95 forces the
     shared token to sit at the FRONT of both prefixes, collapsing
     candidates by ~40x - the filter carries the plan where the index
-    alone cannot."""
+    alone cannot.
+
+    Tokens travel as xxhash64 values (see the comment below).  A 64-bit
+    collision between two distinct tokens of one pair would merge them,
+    shift that pair's intersect/union sizes and so its Jaccard; against
+    the string-based DuckDB oracle it shows as a driver parity mismatch,
+    not as a silently wrong answer.  The sf0.01 parity tests cannot
+    exercise that case: the fixture's 31-token vocabulary has no
+    colliding pair."""
     t = 0.95
     d = load(spark, sf, "documents")
     # r16 (guide 2.3, narrower types): the whole pipeline runs on xxhash64

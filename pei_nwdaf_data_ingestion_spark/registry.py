@@ -105,266 +105,6 @@ def query(name: str, oracle: Optional[str] = None) -> Callable[[QueryFn], QueryF
     return deco
 
 
-# Queries added after round 1, keyed to the round whose CORRECTNESS file
-# could first contain them.  tests/test_survey_sync.py derives its sampling
-# grace period from this (a hand-maintained never-sampled list went stale
-# two rounds running - VERDICT r4 #4).
-ADDED_IN_ROUND: dict[str, int] = {
-    "merge_upsert": 4,
-    "dedup_winnowing": 4,
-    "pipeline_seq_pack": 4,
-    "stream_stream_join_outer": 4,
-    "pipeline_mix_sample": 5,
-    "pipeline_dataset_card": 5,
-    "text_keyword_topk": 5,
-    "text_perplexity_proxy": 5,
-    "join_range_bucketed": 5,
-    "pipeline_source_cap": 5,
-    "pipeline_shuffle_shard": 5,
-    "dedup_canonical_select": 5,
-    "sim_embed_quantize": 5,
-    "stream_windowed_topk": 5,
-    "stream_static_enrich": 5,
-    "events_funnel_conversion": 5,
-    "agg_retention_cohort": 5,
-    "win_gap_islands": 5,
-    "agg_regression_trend": 5,
-    "sim_ivf_quantized_topk": 6,
-    "stream_minhash_dedup": 6,
-    "sim_pq_encode": 6,
-    "sim_pq_topk": 6,
-    "events_attribution_lasttouch": 6,
-    "pipeline_zorder_key": 6,
-    "events_journey_transitions": 6,
-    "text_source_entropy": 6,
-    "stream_attribution_state": 6,
-    "dedup_cross_split_leakage": 6,
-    "stream_inactivity_flush": 6,
-    "pipeline_compaction_bins": 6,
-    "pipeline_token_budget_split": 6,
-    "pipeline_curriculum_order": 6,
-    "dedup_phash_hamming": 6,
-    "graph_degree_stats": 6,
-    "graph_pagerank_iter": 6,
-    "events_anomaly_zscore": 6,
-    "join_asof_nearest": 6,
-    "stream_cdc_upsert": 6,
-    "events_session_paths": 6,
-    "pipeline_filter_funnel": 6,
-    "sim_maxsim_multivector": 6,
-    "events_rfm_segments": 6,
-    "time_gapfill_interp": 6,
-    "events_forecast_snaive": 6,
-    "events_funnel_latency": 6,
-    "events_audience_overlap": 6,
-    "win_time_range_frame": 6,
-    "agg_decimal_money": 6,
-    "text_zipf_slope": 6,
-    "sim_bm25_topk": 6,
-    "pipeline_snapshot_diff": 6,
-    "scan_json_source": 6,
-    "scan_csv_source": 6,
-    "text_bpe_merge_step": 6,
-    "graph_triangle_count": 6,
-    "sim_mmr_rerank": 6,
-    "stream_sliding_hll": 6,
-    "agg_mad_robust": 6,
-    "scan_partition_pruned": 6,
-    "merge_scd2_history": 6,
-    "join_scd2_pointintime": 6,
-    "agg_key_skew_profile": 6,
-    "dedup_containment": 6,
-    "sim_embed_norm_audit": 6,
-    "events_active_users_rolling": 6,
-    "pipeline_feature_hashing": 6,
-    "pipeline_target_encoding": 6,
-    "win_ewma_smooth": 6,
-    "time_resample_ohlc": 6,
-    "graph_common_neighbors": 6,
-    "pipeline_kfold_stratified": 6,
-    "text_gopher_rules": 6,
-    "dedup_span_repeats": 6,
-    "agg_countmin_topk": 6,
-    "sim_random_projection": 6,
-    "events_growth_accounting": 6,
-    "win_cusum_drift": 6,
-    "stream_ohlc_bars": 6,
-    "sim_kmeans_lloyd_step": 6,
-    "agg_theil_sen_trend": 6,
-    "join_bloom_prefilter": 6,
-    "pipeline_length_buckets": 6,
-    "win_bollinger_bands": 6,
-    "scan_csv_quarantine": 6,
-    "udaf_seasonal_dow": 6,
-    "events_abtest_welch": 6,
-    "agg_market_basket_lift": 6,
-    "scan_binary_source": 6,
-    "stream_countmin_merge": 6,
-    "win_rolling_corr": 6,
-    "events_cohort_ltv": 6,
-    "pipeline_contract_audit": 6,
-    "time_sweepline_open_intervals": 6,
-    "events_survival_hazard": 6,
-    "agg_benford_audit": 6,
-    "dedup_two_stage": 6,
-    "scan_schema_evolution": 6,
-    "pipeline_observe_metrics": 6,
-    "agg_ks_drift": 6,
-    "agg_chi2_independence": 6,
-    "text_js_divergence": 6,
-    "agg_winsorized_mean": 6,
-    "text_heaps_law": 6,
-    "events_did_analysis": 6,
-    "dedup_lsh_recall_audit": 6,
-    "events_cuped_adjustment": 6,
-    "text_source_concentration": 6,
-    "multimodal_dedup_bytes": 6,
-    "text_stopword_discovery": 6,
-    "win_max_drawdown": 6,
-    "events_power_analysis": 6,
-    "join_interval_overlap_agg": 6,
-    "pipeline_sample_neyman": 6,
-    "graph_two_hop_reach": 6,
-    "text_pii_scrub": 8,
-    "sim_ivf_recall_audit": 8,
-    "dedup_semdedup": 8,
-    "pipeline_importance_dsir": 8,
-    "text_paragraph_dedup": 9,
-    "pipeline_mixture_doremi": 9,
-    "pipeline_tokenizer_fertility": 9,
-    "pipeline_quality_classifier": 9,
-    "text_ngram_novelty": 9,
-    "multimodal_audio_vad": 9,
-    "multimodal_image_hist": 9,
-    "multimodal_scene_cuts": 9,
-    "graph_label_propagation": 9,
-    "sim_ivf_nprobe_curve": 9,
-    "text_bigram_perplexity": 9,
-    "text_readability": 9,
-    "multimodal_feature_vectors": 10,
-    "multimodal_audio_zcr": 10,
-    "multimodal_image_entropy": 10,
-    "multimodal_duplicate_frames": 10,
-    "stream_media_decode": 10,
-    "multimodal_ahash_neardup": 10,
-    "text_ccnet_buckets": 10,
-    "time_stl_decompose": 10,
-    "text_keyness_logodds": 10,
-    "text_oov_rate": 10,
-    "events_seasonality_strength": 10,
-    "agg_gini_concentration": 10,
-    "agg_mutual_information": 11,
-    "agg_theil_decomposition": 11,
-    "time_acf_lags": 11,
-    "events_entropy_rate": 11,
-    "events_markov_stationary": 11,
-    "graph_adamic_adar": 11,
-    "text_pmi_collocations": 11,
-    "text_kneser_ney_bigram": 11,
-    "text_sttr_diversity": 11,
-    "pipeline_dp_count_laplace": 11,
-    "agg_jackknife_variance": 11,
-    "text_burstiness_vmr": 11,
-    "multimodal_audio_clipping": 11,
-    "pipeline_ipf_rake": 11,
-    "events_decay_engagement": 11,
-    "sim_matryoshka_recall": 11,
-    "time_cross_correlation": 11,
-    "text_vocab_coverage_curve": 11,
-    "events_dau_wau_stickiness": 11,
-    "agg_tukey_fences": 11,
-    "pipeline_weighted_sample": 11,
-    "win_rsi_momentum": 11,
-    "time_pacf_lags": 11,
-    "graph_clustering_coeff": 11,
-    "events_cem_att": 11,
-    "sim_rrf_fusion": 11,
-    "sim_ndcg_audit": 11,
-    "multimodal_image_sharpness": 11,
-    "win_stochastic_oscillator": 11,
-    "graph_assortativity": 11,
-    "agg_cramers_v": 11,
-    "agg_trimmed_mean": 11,
-    "agg_geometric_mean": 11,
-    "graph_pagerank_converged": 13,
-    "graph_lpa_converged": 13,
-    "scan_orc_source": 13,
-    "scan_xml_source": 14,
-    "scan_flight_source": 15,
-}
-
-# Ids whose code or semantics changed in round _CHANGED_ROUND - they lead
-# the driver's ~50-query sampling window regardless of staleness, but ONLY
-# until a CORRECTNESS file of that round exists (after that the derived
-# staleness ordering takes over; a permanent pin would waste window slots
-# every later round).
-# Round 15: the rows-only digest became null-position-sensitive (ADVICE
-# r14 - per-column isnull indicators in the hash input), so every one of
-# the 22 digest-wrapped ids re-pins under the new digest and leads the
-# window for a fresh sample (row counts and underlying values unchanged;
-# the OLD pins were reproduced byte-for-byte first - stability proven).
-# graph_lpa_converged additionally folded its change count into the vote
-# job via df.observe (bit-equality pinned).  scan_flight_source is NEW
-# (Arrow Flight distributed source).  Plan reworks re-hashed for safety:
-# graph_triangle_count / graph_clustering_coeff (degree-aware gate +
-# per-app projection cache), dedup_two_stage / dedup_minhash_lsh (shared
-# signature frame + pair-ledger cache), plus the 16 optimization-round
-# plan reworks appended at the list tail.  Budget check: the pin count
-# is len(_CHANGED_THIS_ROUND) == 43 < the driver's ~50-slot window.
-_CHANGED_ROUND = 15
-_CHANGED_THIS_ROUND = [
-    "scan_flight_source",
-    "graph_pagerank_converged",
-    "graph_lpa_converged",
-    "agg_approx_distinct",
-    "agg_approx_quantile",
-    "agg_hll_sketch_merge",
-    "stream_attribution_state",
-    "stream_cdc_upsert",
-    "stream_countmin_merge",
-    "stream_dedup",
-    "stream_inactivity_flush",
-    "stream_ingest_pipeline",
-    "stream_late_drop",
-    "stream_media_decode",
-    "stream_minhash_dedup",
-    "stream_ohlc_bars",
-    "stream_session_window",
-    "stream_sliding_hll",
-    "stream_stateful_counts",
-    "stream_static_enrich",
-    "stream_stream_join",
-    "stream_stream_join_outer",
-    "stream_windowed_topk",
-    "graph_triangle_count",
-    "graph_clustering_coeff",
-    "dedup_two_stage",
-    "dedup_minhash_lsh",
-    # r15 optimization-round plan reworks (values identical by
-    # construction, every id probed hash-green at sf0.01 AND sf0.1;
-    # re-hash for safety): decode column pruning + vad decode-once
-    # (multimodal family), the one-pass funnel, HOF split hoists,
-    # exploded-band phash join, checkpointed nprobe curve, index-carried
-    # ppjoin tokens, metadata-only paragraph-dedup shuffle
-    "multimodal_audio_vad",
-    "multimodal_audio_zcr",
-    "multimodal_image_entropy",
-    "multimodal_duplicate_frames",
-    "multimodal_ahash_neardup",
-    "multimodal_image_hist",
-    "multimodal_scene_cuts",
-    "multimodal_audio_clipping",
-    "multimodal_image_sharpness",
-    "dedup_span_repeats",
-    "text_gopher_rules",
-    "dedup_phash_hamming",
-    "events_funnel_conversion",
-    "sim_ivf_nprobe_curve",
-    "dedup_ppjoin_prefix",
-    "text_paragraph_dedup",
-]
-
-
 def _last_green_round() -> dict[str, int]:
     """Per-query round of the most recent SUCCESSFUL driver sample, parsed
     from the committed CORRECTNESS_r*.json artifacts.  An errored sample
@@ -398,10 +138,10 @@ def load_all() -> None:
 
     Registration order = the order a budget-limited driver visits queries
     (it records the first ~50 per round).  The order is DERIVED, not
-    hand-maintained: this round's changed ids lead, then everything else
-    sorted by staleness (round of last green driver sample, ascending, so
-    never-sampled and oldest-hash ids come first), registration order as
-    the tiebreaker."""
+    hand-maintained: every id sorted by staleness (round of its last green
+    driver sample, ascending, so never-sampled and oldest-hash ids come
+    first), import order as the tiebreaker (the sort is stable).  ORACLES
+    follows the same order."""
     from .queries import (  # noqa: F401
         refsem,
         windows,
@@ -418,14 +158,7 @@ def load_all() -> None:
     )
 
     last = _last_green_round()
-    reg_pos = {n: i for i, n in enumerate(QUERIES)}
-    pin_active = max(last.values(), default=0) < _CHANGED_ROUND
-    changed = [n for n in _CHANGED_THIS_ROUND if n in QUERIES] if pin_active else []
-    rest = sorted(
-        (n for n in QUERIES if n not in set(changed)),
-        key=lambda n: (last.get(n, 0), reg_pos[n]),
-    )
-    order = changed + rest
+    order = sorted(QUERIES, key=lambda n: last.get(n, 0))
     for mapping in (QUERIES, ORACLES):
         snapshot = dict(mapping)
         mapping.clear()

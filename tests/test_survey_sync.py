@@ -42,42 +42,34 @@ def test_survey_manifest_matches_registry():
 
 def test_every_declared_id_has_cumulative_driver_signal():
     """Coverage-hole gate (VERDICT r2 next-round #7): every declared query
-    must have appeared in at least one driver CORRECTNESS_r*.json.  The
-    driver samples the first ~50 registrations per round, so holes are an
-    ordering bug (registry priority order exists to close them), not a code
-    bug - but they cost a round each time, so the suite must catch them.
-
-    Grace period (derived, not hand-maintained - VERDICT r4 #4: the hand
-    list went stale two rounds running): ids in registry.ADDED_IN_ROUND get
-    a pass while no CORRECTNESS file of a LATER round exists.  An id added
-    in round N cannot have been sampled before N, and the round-N file was
-    recorded against a <=50-slot window, so additions beyond the window in
-    their own birth round are queued debt, not a coverage hole (VERDICT r6
-    #1); the staleness-first registry order drains them the following
-    round, at which point the grace lapses and the gate bites."""
-    import json
-
-    root = Path(__file__).resolve().parent.parent
-    seen: set[str] = set()
-    latest_round = 0
-    for f in sorted(root.glob("CORRECTNESS_r*.json")):
-        seen |= set(json.loads(f.read_text()))
-        latest_round = max(latest_round, int(f.stem.split("_r")[1]))
-    # phantom-id guard (VERDICT r3 #2): a grace-listed id that is not even
-    # registered is a dangling name, not a sampling gap
-    phantom = set(registry.ADDED_IN_ROUND) - set(registry.QUERIES)
-    assert not phantom, (
-        f"ADDED_IN_ROUND ids missing from registry.QUERIES (phantom names - "
-        f"implement or delete): {sorted(phantom)}"
-    )
-    grace = {
-        name
-        for name, rnd in registry.ADDED_IN_ROUND.items()
-        if rnd >= latest_round
-    }
-    missing = set(registry.QUERIES) - seen - grace
+    must have at least one GREEN sample in the driver's CORRECTNESS_r*.json
+    artifacts, as registry._last_green_round() reads them (one parser for
+    the artifact format).  The driver samples the first ~50 registrations
+    per round, so a hole is an ordering bug (the staleness-first registry
+    order exists to close them), not a code bug - but it costs a round
+    each time, so the suite must catch it."""
+    last = registry._last_green_round()
+    missing = set(registry.QUERIES) - set(last)
     assert not missing, (
-        f"declared queries with NO driver correctness signal through round "
-        f"{latest_round} (fix registration order in registry priority, or "
-        f"bump their registry.ADDED_IN_ROUND round): {sorted(missing)}"
+        f"declared queries with NO green driver sample through round "
+        f"{max(last.values(), default=0)} (check registry.load_all's "
+        f"staleness order): {sorted(missing)}"
     )
+
+
+def test_load_all_orders_by_staleness_then_registration():
+    """The driver-visit order contract: load_all() sorts QUERIES by the
+    round of each id's last green driver sample (never-sampled first),
+    keeps import order within a tie, and ORACLES is the oracled
+    subsequence of QUERIES in the same order."""
+    last = registry._last_green_round()
+    order = list(registry.QUERIES)
+    rounds = [last.get(n, 0) for n in order]
+    assert rounds == sorted(rounds)
+    # ties keep import order: registry.RAW_QUERIES is filled at import
+    # time and never reordered
+    import_pos = {n: i for i, n in enumerate(registry.RAW_QUERIES)}
+    for a, b in zip(order, order[1:]):
+        if last.get(a, 0) == last.get(b, 0):
+            assert import_pos[a] < import_pos[b], (a, b)
+    assert list(registry.ORACLES) == [n for n in order if n in registry.ORACLES]
