@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .normalize import (
+    KNOWN_TAG_FIELDS,
     any_tag_present,
     nz,
     parse_bitrate_mbps,
@@ -383,9 +384,4 @@ def normalize_notifications(
     )
 
     # drop records with no identity tags (receiver.py:100-101,...,386-389)
-    tag_cols = [
-        F.col(c)
-        for c in ["snssai_sst", "snssai_sd", "dnn", "ueIpv4Addr", "ueIpv6Addr",
-                  "appId", "supi", "gpsi", "interGroupId"]
-    ]
-    return records.filter(any_tag_present(*tag_cols))
+    return records.filter(any_tag_present(*[F.col(c) for c in KNOWN_TAG_FIELDS]))

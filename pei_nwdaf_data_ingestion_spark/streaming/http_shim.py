@@ -420,14 +420,15 @@ class NotifyHTTPShim:
         known_notif_ids: Callable[[], Iterable[str]] | Iterable[str],
         host: str = "127.0.0.1",
         port: int = 0,
-        auth: HmacTokenAuth | None = None,
+        auth: HmacTokenAuth | Rs256TokenAuth | None = None,
         store=None,
         nef_client: NefClient | None = None,
     ) -> None:
-        """`auth`: optional HmacTokenAuth gate (None = the reference's
-        DEV_MODE posture).  `store`: optional subscription store (anything
-        with add/get/remove/list - pipeline.subscriptions.SubscriptionStore)
-        enabling the /nef/subscriptions control-plane routes.
+        """`auth`: optional Rs256TokenAuth or HmacTokenAuth gate (None =
+        the reference's DEV_MODE posture).  `store`: optional subscription
+        store (anything with add/get/remove/list -
+        pipeline.subscriptions.SubscriptionStore) enabling the
+        /nef/subscriptions control-plane routes.
         `nef_client`: optional NefClient enabling the OUTBOUND subscribe/
         unsubscribe calls to the NEF named in each request's nefUrl (None
         keeps the routes local-only)."""

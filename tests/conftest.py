@@ -170,8 +170,6 @@ _SLOW_NODEIDS = {
     "tests/test_pipeline_components.py::TestConvergenceGatedTwins::test_pagerank_converged_reaches_eps_fixpoint",
     "tests/test_pipeline_components.py::TestLabelPropagation::test_two_components_converge_to_min_labels",
     "tests/test_pipeline_components.py::TestSemDedup::test_survivor_rule_invariants",
-    "tests/test_pipeline_components.py::TestSubscriptionStore::test_compact_preserves_state",
-    "tests/test_pipeline_components.py::TestSubscriptionStore::test_persistence_across_instances",
     "tests/test_plan_quality.py::TestMinhashPairRegimes::test_salted_regime_plan_and_equality",
     "tests/test_plan_quality.py::TestMinhashPairRegimes::test_two_stage_salted_regime_equality",
     "tests/test_properties.py::TestBandBucketingProperty::test_bucketed_range_join_equals_naive",

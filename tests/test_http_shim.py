@@ -13,6 +13,7 @@ import urllib.request
 import pytest
 
 from pei_nwdaf_data_ingestion_spark.pipeline.nef import SUBSCRIPTION
+from pei_nwdaf_data_ingestion_spark.pipeline.subscriptions import SubscriptionStore
 from pei_nwdaf_data_ingestion_spark.streaming.http_shim import NotifyHTTPShim
 from pei_nwdaf_data_ingestion_spark.streaming.ingest import (
     build_ingest_stream,
@@ -87,26 +88,6 @@ def test_http_post_status_contract_and_stream(spark, tmp_path):
     assert [t["tac"] for t in mob["trajectory"]] == ["000001", "000002"]
 
 
-class _DictStore:
-    """In-memory stand-in with the SubscriptionStore method surface (the
-    parquet-backed store is exercised in test_pipeline_components)."""
-
-    def __init__(self):
-        self.rows: dict[str, dict] = {}
-
-    def add(self, sub):
-        self.rows[sub["notif_id"]] = sub
-
-    def get(self, notif_id):
-        return self.rows.get(notif_id)
-
-    def remove(self, notif_id):
-        return self.rows.pop(notif_id, None) is not None
-
-    def list(self):
-        return list(self.rows.values())
-
-
 SUB_BODY = {
     # golden create payload, reference tests/test_receiver.py:114-120
     "notifId": "test-notif-001",
@@ -117,7 +98,7 @@ SUB_BODY = {
 }
 
 
-def test_auth_status_contract(tmp_path):
+def test_auth_status_contract(spark, tmp_path):
     """The reference AuthMiddleware's status behavior
     (auth_middleware.py:22-59, exercised by its 401/403 endpoint tests):
     401 missing/expired/invalid token, 403 wrong role, 200 with a required
@@ -125,7 +106,7 @@ def test_auth_status_contract(tmp_path):
     from pei_nwdaf_data_ingestion_spark.streaming.http_shim import HmacTokenAuth
 
     auth = HmacTokenAuth(secret="test-secret")
-    store = _DictStore()
+    store = SubscriptionStore(spark, str(tmp_path / "subs"))
     with NotifyHTTPShim(
         str(tmp_path / "spool"), {"test-notif-001"}, auth=auth, store=store
     ) as shim:
@@ -157,18 +138,19 @@ def test_auth_status_contract(tmp_path):
 
     # DEV_MODE bypass (auth_middleware.py:24-25)
     dev = HmacTokenAuth(secret="test-secret", dev_mode=True)
+    dev_store = SubscriptionStore(spark, str(tmp_path / "subs2"))
     with NotifyHTTPShim(
-        str(tmp_path / "spool2"), set(), auth=dev, store=_DictStore()
+        str(tmp_path / "spool2"), set(), auth=dev, store=dev_store
     ) as shim:
         base = shim.url.rsplit("/nef/notify", 1)[0]
         code, _ = _request(base, "/nef/subscriptions")
         assert code == 200
 
 
-def test_subscription_crud_endpoints(tmp_path):
+def test_subscription_crud_endpoints(spark, tmp_path):
     """Control-plane CRUD contract (receiver.py:296-351) minus the outbound
     NEF call: 201 create (422 on missing fields), 200 list, 204/404 delete."""
-    store = _DictStore()
+    store = SubscriptionStore(spark, str(tmp_path / "subs"))
     with NotifyHTTPShim(str(tmp_path / "spool"), set(), store=store) as shim:
         base = shim.url.rsplit("/nef/notify", 1)[0]
         code, body = _request(base, "/nef/subscriptions", "POST", SUB_BODY)
@@ -258,52 +240,56 @@ class _FakeNef:
         self._thread.join(timeout=5)
 
 
-def _shim_with_nef(tmp_path, nef_client):
+def _shim_with_nef(spark, tmp_path, nef_client):
     from pei_nwdaf_data_ingestion_spark.streaming.http_shim import NotifyHTTPShim
 
-    store = _DictStore()
+    store = SubscriptionStore(spark, str(tmp_path / "subs"))
     shim = NotifyHTTPShim(
         str(tmp_path / "spool"),
-        known_notif_ids=lambda: set(store.subs),
+        known_notif_ids=lambda: [s["notif_id"] for s in store.list()],
         store=store,
         nef_client=nef_client,
     )
     return shim, store
 
 
-def test_outbound_nef_subscribe_round_trip(tmp_path):
+def test_outbound_nef_subscribe_round_trip(spark, tmp_path):
     """Happy path (receiver.py:296-327): the shim POSTs the TS 29.591
     payload to the NEF named in nefUrl, advertises its OWN /nef/notify as
-    notifUri, stores the NEF's subscriptionId, and answers 201 with it."""
+    notifUri, stores the NEF's subscriptionId, and answers 201 with it.
+    The created id is then admitted at /nef/notify (receiver.py:363-365
+    reads the registry the CRUD routes write)."""
     from pei_nwdaf_data_ingestion_spark.streaming.http_shim import NefClient
 
     nef = _FakeNef()
-    shim, store = _shim_with_nef(tmp_path, NefClient())
+    shim, store = _shim_with_nef(spark, tmp_path, NefClient())
     try:
         with shim:
             base = f"http://{shim._server.server_address[0]}:{shim._server.server_address[1]}"
+            assert _post(shim.url, {"notifId": "n1"}) == 403
             code, body = _request(
                 base,
                 "/nef/subscriptions",
                 "POST",
                 {"notifId": "n1", "nefUrl": nef.url, "events": ["LOAD_LEVEL"]},
             )
-        assert code == 201 and body["nefSubscriptionId"] == "nef-sub-42"
-        assert store.get("n1")["nef_sub_id"] == "nef-sub-42"
-        assert len(nef.posts) == 1
-        assert nef.posts[0]["notifId"] == "n1"
-        assert nef.posts[0]["eventsSubs"] == [{"event": "LOAD_LEVEL"}]
-        assert nef.posts[0]["notifUri"].endswith("/nef/notify")
+            assert code == 201 and body["nefSubscriptionId"] == "nef-sub-42"
+            assert store.get("n1")["nef_sub_id"] == "nef-sub-42"
+            assert len(nef.posts) == 1
+            assert nef.posts[0]["notifId"] == "n1"
+            assert nef.posts[0]["eventsSubs"] == [{"event": "LOAD_LEVEL"}]
+            assert nef.posts[0]["notifUri"].endswith("/nef/notify")
+            assert _post(shim.url, {"notifId": "n1"}) == 204
     finally:
         nef.stop()
 
 
-def test_outbound_nef_connect_failure_maps_502(tmp_path):
+def test_outbound_nef_connect_failure_maps_502(spark, tmp_path):
     """Unreachable NEF -> 502 "Cannot connect to NEF" (receiver.py:313-314)
     and NOTHING is stored."""
     from pei_nwdaf_data_ingestion_spark.streaming.http_shim import NefClient
 
-    shim, store = _shim_with_nef(tmp_path, NefClient(timeout=2))
+    shim, store = _shim_with_nef(spark, tmp_path, NefClient(timeout=2))
     with shim:
         base = f"http://{shim._server.server_address[0]}:{shim._server.server_address[1]}"
         code, body = _request(
@@ -317,13 +303,13 @@ def test_outbound_nef_connect_failure_maps_502(tmp_path):
     assert store.get("n1") is None
 
 
-def test_outbound_nef_timeout_maps_504(tmp_path):
+def test_outbound_nef_timeout_maps_504(spark, tmp_path):
     """NEF accepting but not answering inside the client timeout -> 504
     "NEF did not respond" (receiver.py:311-312)."""
     from pei_nwdaf_data_ingestion_spark.streaming.http_shim import NefClient
 
     nef = _FakeNef(delay=1.5)
-    shim, store = _shim_with_nef(tmp_path, NefClient(timeout=0.3))
+    shim, store = _shim_with_nef(spark, tmp_path, NefClient(timeout=0.3))
     try:
         with shim:
             base = f"http://{shim._server.server_address[0]}:{shim._server.server_address[1]}"
@@ -339,13 +325,13 @@ def test_outbound_nef_timeout_maps_504(tmp_path):
         nef.stop()
 
 
-def test_outbound_nef_upstream_error_maps_500(tmp_path):
+def test_outbound_nef_upstream_error_maps_500(spark, tmp_path):
     """NEF answering 500 -> 500 "NEF subscription failed: ..."
     (receiver.py:315-316)."""
     from pei_nwdaf_data_ingestion_spark.streaming.http_shim import NefClient
 
     nef = _FakeNef(mode="error")
-    shim, store = _shim_with_nef(tmp_path, NefClient())
+    shim, store = _shim_with_nef(spark, tmp_path, NefClient())
     try:
         with shim:
             base = f"http://{shim._server.server_address[0]}:{shim._server.server_address[1]}"
@@ -361,7 +347,7 @@ def test_outbound_nef_upstream_error_maps_500(tmp_path):
         nef.stop()
 
 
-def test_outbound_nef_malformed_body_maps_500(tmp_path):
+def test_outbound_nef_malformed_body_maps_500(spark, tmp_path):
     """A 2xx NEF response whose JSON body is not an object (here: a list)
     must map to the reference's catch-all 500 "NEF subscription failed:
     ..." (receiver.py:315-316), not raise in the handler thread
@@ -369,7 +355,7 @@ def test_outbound_nef_malformed_body_maps_500(tmp_path):
     from pei_nwdaf_data_ingestion_spark.streaming.http_shim import NefClient
 
     nef = _FakeNef(mode="list_body")
-    shim, store = _shim_with_nef(tmp_path, NefClient())
+    shim, store = _shim_with_nef(spark, tmp_path, NefClient())
     try:
         with shim:
             base = f"http://{shim._server.server_address[0]}:{shim._server.server_address[1]}"
@@ -385,7 +371,7 @@ def test_outbound_nef_malformed_body_maps_500(tmp_path):
         nef.stop()
 
 
-def test_outbound_nef_unsubscribe_best_effort(tmp_path):
+def test_outbound_nef_unsubscribe_best_effort(spark, tmp_path):
     """DELETE sends the outbound unsubscribe to {nefUrl}/{subId}
     (receiver.py:341-346) and stays 204 + locally removed even when the
     NEF is gone (:347-349, warning only)."""
@@ -393,7 +379,7 @@ def test_outbound_nef_unsubscribe_best_effort(tmp_path):
 
     nef = _FakeNef()
     client = NefClient()
-    shim, store = _shim_with_nef(tmp_path, client)
+    shim, store = _shim_with_nef(spark, tmp_path, client)
     try:
         with shim:
             base = f"http://{shim._server.server_address[0]}:{shim._server.server_address[1]}"
@@ -483,7 +469,7 @@ class _FakeJwksIdp:
         self._server.server_close()
 
 
-def test_rs256_auth_status_contract(tmp_path):
+def test_rs256_auth_status_contract(spark, tmp_path):
     """The reference AuthMiddleware verbatim (auth_middleware.py:22-59):
     RS256-signed JWTs validated against a JWKS endpoint - accept on good
     sig + live exp + required role; 401 on missing/expired/tampered/
@@ -498,7 +484,7 @@ def test_rs256_auth_status_contract(tmp_path):
     pk = idp.keys["key-1"]
     try:
         auth = Rs256TokenAuth(idp.jwks_url)
-        store = _DictStore()
+        store = SubscriptionStore(spark, str(tmp_path / "subs"))
         with NotifyHTTPShim(
             str(tmp_path / "spool"), {"test-notif-001"}, auth=auth, store=store
         ) as shim:
@@ -578,8 +564,9 @@ def test_rs256_auth_status_contract(tmp_path):
 
         # DEV_MODE bypass (auth_middleware.py:24-25)
         dev = Rs256TokenAuth(idp.jwks_url, dev_mode=True)
+        dev_store = SubscriptionStore(spark, str(tmp_path / "subs2"))
         with NotifyHTTPShim(
-            str(tmp_path / "spool2"), set(), auth=dev, store=_DictStore()
+            str(tmp_path / "spool2"), set(), auth=dev, store=dev_store
         ) as shim:
             base = shim.url.rsplit("/nef/notify", 1)[0]
             code, _ = _request(base, "/nef/subscriptions")

@@ -8,6 +8,7 @@ import json
 import tempfile
 
 import pytest
+from pyspark.errors import PySparkTypeError
 from pyspark.sql import functions as F
 
 from pei_nwdaf_data_ingestion_spark.pipeline.multimodal import (
@@ -37,12 +38,15 @@ class TestSubscriptionStore:
     def test_empty(self, store):
         assert store.list() == []
         assert store.get("nope") is None
+        assert store.load().collect() == []
 
     def test_add_get(self, store):
         store.add(SUB)
         got = store.get("test-notif-001")
         assert got["dnn"] == "internet"
         assert got["snssai"] == {"sst": 1, "sd": "000001"}
+        # one partition: reading the snapshot starts one Python worker
+        assert store.load().rdd.getNumPartitions() == 1
 
     def test_upsert_last_wins(self, store):
         """Re-adding the same notif_id replaces; count stays 1
@@ -61,41 +65,140 @@ class TestSubscriptionStore:
 
     def test_persistence_across_instances(self, spark, tmp_path):
         """New store instance on the same path sees prior writes (reference
-        tests/test_registry.py:63-70) and deletions stay deleted (:87-112)."""
+        tests/test_registry.py:63-70): upserts keep the last write and
+        deletions stay deleted (:87-112), and it can write on."""
         path = str(tmp_path / "subs")
         s1 = SubscriptionStore(spark, path)
         s1.add(SUB)
+        s1.add(dict(SUB, dnn="ims"))
         s1.add(dict(SUB, notif_id="other", dnn="ims"))
         s1.remove("other")
 
         s2 = SubscriptionStore(spark, path)
         subs = s2.list()
         assert [s["notif_id"] for s in subs] == ["test-notif-001"]
+        assert subs[0]["dnn"] == "ims"
+        s2.add(dict(SUB, notif_id="n3"))
+        ids = [s["notif_id"] for s in SubscriptionStore(spark, path).list()]
+        assert ids == ["n3", "test-notif-001"]
 
-    def test_seq_is_log_derived_across_restarts(self, spark, tmp_path):
-        """_seq must come from the log (max+1), not a process clock: a
-        restarted writer (new instance) continues the sequence, so
-        last-write-wins cannot invert after a restart."""
+    def test_last_write_wins_across_restarts(self, spark, tmp_path):
+        """A restarted writer (new instance) that re-adds an id replaces
+        the row for every later instance too."""
+        path = str(tmp_path / "subs")
+        SubscriptionStore(spark, path).add(SUB)
+        SubscriptionStore(spark, path).add(dict(SUB, dnn="ims"))
+        assert SubscriptionStore(spark, path).get("test-notif-001")["dnn"] == "ims"
+
+    def test_rows_hold_exactly_the_schema_fields(self, store):
+        """A missing field reads None and an extra key is dropped."""
+        store.add({"notif_id": "n1", "dnn": "ims", "extra": 1})
+        assert store.get("n1") == {
+            "notif_id": "n1", "snssai": None, "dnn": "ims", "events": None,
+            "nef_sub_id": None, "nef_url": None, "created_at": None,
+        }
+
+    def test_reads_return_copies(self, store):
+        """Mutating a returned dict leaves the store unchanged (reference
+        tests/test_registry.py:47-51)."""
+        store.add(SUB)
+        got = store.get("test-notif-001")
+        got["dnn"] = "mutated"
+        got["snssai"]["sd"] = "mutated"
+        got["events"].append("mutated")
+        store.list()[0]["dnn"] = "mutated"
+        again = store.get("test-notif-001")
+        assert again["dnn"] == "internet"
+        assert again["snssai"] == {"sst": 1, "sd": "000001"}
+        assert "mutated" not in again["events"]
+
+    def test_malformed_row_raises_and_stores_nothing(self, spark, tmp_path, monkeypatch):
+        """A row that does not fit SUBSCRIPTION, or a failed file write,
+        raises at add() and leaves both the store and the file as they
+        were."""
+        import os
+
         path = str(tmp_path / "subs")
         s1 = SubscriptionStore(spark, path)
         s1.add(SUB)
-        s2 = SubscriptionStore(spark, path)  # 'restarted' writer
-        s2.add(dict(SUB, dnn="ims"))
-        seqs = [r["_seq"] for r in spark.read.parquet(path).orderBy("_seq").collect()]
-        assert seqs == [1, 2]
-        assert s2.get("test-notif-001")["dnn"] == "ims"
 
-    def test_compact_preserves_state(self, store):
-        store.add(SUB)
-        store.add(dict(SUB, dnn="ims"))
-        store.add(dict(SUB, notif_id="n2"))
-        store.remove("n2")
-        store.compact()
-        subs = store.list()
-        assert len(subs) == 1 and subs[0]["dnn"] == "ims"
-        # still writable after compaction
-        store.add(dict(SUB, notif_id="n3"))
-        assert len(store.list()) == 2
+        def disk_full(*_):
+            raise OSError("disk full")
+
+        with monkeypatch.context() as m:
+            m.setattr(os, "replace", disk_full)
+            with pytest.raises(OSError):
+                s1.add(dict(SUB, notif_id="bad"))
+            with pytest.raises(OSError):
+                s1.remove("test-notif-001")
+        with pytest.raises(PySparkTypeError):
+            s1.add(dict(SUB, notif_id="bad", snssai={"sst": "not-an-int"}))
+        with pytest.raises(PySparkTypeError):
+            s1.add(dict(SUB, notif_id="bad", created_at="yesterday"))
+        with pytest.raises(ValueError):
+            s1.add(dict(SUB, notif_id=None))
+        assert [s["notif_id"] for s in s1.list()] == ["test-notif-001"]
+        fresh = SubscriptionStore(spark, path)
+        assert fresh.list() == s1.list()
+
+    def test_concurrent_adds_are_all_kept(self, spark, tmp_path):
+        """8 threads each add a distinct id at once: the lock keeps both the
+        dict and the file whole, so the store and a fresh instance hold
+        all 8."""
+        import sys
+        import threading
+
+        path = str(tmp_path / "subs")
+        store = SubscriptionStore(spark, path)
+        ids = [f"n{i}" for i in range(8)]
+        start = threading.Barrier(len(ids), timeout=30)
+        errors = []
+
+        def add(notif_id):
+            try:
+                start.wait()
+                store.add(dict(SUB, notif_id=notif_id))
+            except Exception as e:  # noqa: BLE001 - surfaced below
+                errors.append(e)
+
+        threads = [threading.Thread(target=add, args=(i,)) for i in ids]
+        interval = sys.getswitchinterval()
+        sys.setswitchinterval(1e-6)
+        try:
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(timeout=60)
+        finally:
+            sys.setswitchinterval(interval)
+        assert not any(t.is_alive() for t in threads)
+        assert errors == []
+        assert [s["notif_id"] for s in store.list()] == ids
+        assert [s["notif_id"] for s in SubscriptionStore(spark, path).list()] == ids
+
+    def test_crud_runs_no_spark_job(self, spark, store):
+        """add/get/list/remove run no Spark job: 0 jobs in their job
+        group.  The same count sees load()'s collect, so it is live."""
+        sc = spark.sparkContext
+
+        def jobs(group, ops):
+            sc.setJobGroup(group, "subscription store job-count pin")
+            try:
+                ops()
+            finally:
+                sc.setJobGroup("", "")
+            sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+            return len(sc.statusTracker().getJobIdsForGroup(group))
+
+        def crud():
+            store.add(SUB)
+            store.add(dict(SUB, notif_id="n2"))
+            store.get("test-notif-001")
+            store.list()
+            store.remove("n2")
+
+        assert jobs("subs_crud_jobs", crud) == 0
+        assert jobs("subs_load_jobs", lambda: store.load().collect()) > 0
 
 
 class TestSinks:
