@@ -24,6 +24,7 @@ from .. import artifacts
 from ..catalog import load
 from ..functions import pround
 from ..registry import query
+from ..streaming.ingest import run_to_memory
 
 def _stream_source(spark: SparkSession, sf: str, name: str, source) -> DataFrame:
     """File-source stream over the frame `source()` returns, written once
@@ -92,17 +93,6 @@ def _write_time_batches(df: DataFrame, dest: str, order_col, cuts) -> None:
         age = 100.0 * (n - 1 - i)
         for f in os.listdir(d):
             os.utime(os.path.join(d, f), (now - age, now - age))
-
-
-def _drain(df: DataFrame, name: str, mode: str = "append") -> None:
-    q = (
-        df.writeStream.outputMode(mode)
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
 
 def ingest_throughput(
@@ -413,7 +403,7 @@ def stream_ingest_pipeline(spark: SparkSession, sf: str) -> DataFrame:
         )
     )
     name = "stream_ingest_out"
-    _drain(agg, name)
+    run_to_memory(agg, name)
     return spark.table(name)
 
 
@@ -431,7 +421,7 @@ def stream_dedup(spark: SparkSession, sf: str) -> DataFrame:
         .agg(F.count("*").alias("n_unique"))
     )
     name = "stream_dedup_out"
-    _drain(deduped, name, mode="complete")
+    run_to_memory(deduped, name, output_mode="complete")
     return spark.table(name)
 
 
@@ -489,7 +479,7 @@ def stream_late_drop(spark: SparkSession, sf: str) -> DataFrame:
             )
         )
         name = "stream_late_out"
-        _drain(agg, name)
+        run_to_memory(agg, name)
         return spark.table(name)
 
 
@@ -513,7 +503,7 @@ def stream_session_window(spark: SparkSession, sf: str) -> DataFrame:
     name = "stream_session_out"
     # complete mode: append would hold back sessions still inside the
     # watermark when the bounded stream ends (the last hour of data)
-    _drain(agg, name, mode="complete")
+    run_to_memory(agg, name, output_mode="complete")
     return spark.table(name)
 
 
@@ -587,7 +577,7 @@ def stream_stateful_counts(spark: SparkSession, sf: str) -> DataFrame:
             GroupStateTimeout.NoTimeout,
         )
         name = "stream_stateful_out"
-        _drain(out, name, mode="update")
+        run_to_memory(out, name, output_mode="update")
         # keep the LAST update per key = totals across all micro-batches
         return (
             spark.table(name)
@@ -643,7 +633,7 @@ def stream_stream_join(spark: SparkSession, sf: str) -> DataFrame:
         F.unix_timestamp("purchase_ts").alias("purchase_epoch"),
     )
     name = "stream_stream_join_out"
-    _drain(joined, name)
+    run_to_memory(joined, name)
     return spark.table(name)
 
 
@@ -698,7 +688,7 @@ def stream_stream_join_outer(spark: SparkSession, sf: str) -> DataFrame:
         F.col("purchase_id").isNotNull().alias("matched"),
     )
     name = "stream_stream_join_outer_out"
-    _drain(joined, name)
+    run_to_memory(joined, name)
     return spark.table(name)
 
 
@@ -826,7 +816,7 @@ def stream_windowed_topk(spark: SparkSession, sf: str) -> DataFrame:
         )
     )
     name = "stream_windowed_topk_out"
-    _drain(agg, name, mode="complete")
+    run_to_memory(agg, name, output_mode="complete")
     w = W.partitionBy("hour_start").orderBy(F.desc("n"), "event_type")
     return (
         spark.table(name)
@@ -856,7 +846,7 @@ def stream_static_enrich(spark: SparkSession, sf: str) -> DataFrame:
         .agg(F.count("*").alias("n"), pround(F.sum("value"), 2).alias("value_sum"))
     )
     name = "stream_static_enrich_out"
-    _drain(agg, name, mode="complete")
+    run_to_memory(agg, name, output_mode="complete")
     return spark.table(name)
 
 
@@ -923,7 +913,7 @@ def stream_minhash_dedup(spark: SparkSession, sf: str) -> DataFrame:
         ["band_id", "sig"]
     )
     name = "stream_minhash_dedup_out"
-    _drain(kept, name)
+    run_to_memory(kept, name)
     won = spark.table(name).groupBy("doc_id").agg(
         F.count("*").cast("long").alias("n_band_wins")
     )
@@ -1025,7 +1015,7 @@ def stream_attribution_state(
             GroupStateTimeout.NoTimeout,
         )
         name = "stream_attribution_out"
-        _drain(out, name, mode="append")
+        run_to_memory(out, name)
         return spark.table(name)
 
 
@@ -1122,7 +1112,7 @@ def stream_inactivity_flush(
         )
         out = _apply_inactivity_flush(stream)
         name = "stream_inactivity_out"
-        _drain(out, name, mode="append")
+        run_to_memory(out, name)
         return spark.table(name)
 
 
@@ -1241,7 +1231,7 @@ def stream_sliding_hll(spark: SparkSession, sf: str) -> DataFrame:
     # complete mode: append would hold back the final windows still inside
     # the watermark when the bounded stream ends (stream_session_window's
     # rationale)
-    _drain(agg, name, mode="complete")
+    run_to_memory(agg, name, output_mode="complete")
     return spark.table(name)
 
 
@@ -1292,7 +1282,7 @@ def stream_ohlc_bars(spark: SparkSession, sf: str) -> DataFrame:
         )
     )
     name = "stream_ohlc_bars_out"
-    _drain(agg, name, mode="complete")
+    run_to_memory(agg, name, output_mode="complete")
     return spark.table(name)
 
 
@@ -1421,7 +1411,7 @@ def stream_countmin_merge(spark: SparkSession, sf: str) -> DataFrame:
         F.count("*").alias("cnt")
     )
     name = "stream_countmin_out"
-    _drain(agg, name, mode="complete")
+    run_to_memory(agg, name, output_mode="complete")
     sketch = spark.table(name)
     # probe stage (batch): exact top-10 users vs their sketch estimates
     ev_b = load(spark, sf, "events")
@@ -1471,5 +1461,5 @@ def stream_media_decode(spark: SparkSession, sf: str) -> DataFrame:
     docs = _documents_stream(spark, sf).select("doc_id")
     stats = decode_media_stats(synthesize_media_assets(docs))
     name = "stream_media_decode_out"
-    _drain(stats, name)
+    run_to_memory(stats, name)
     return spark.table(name)

@@ -1,139 +1,64 @@
 """HTTP ingestion shim: POST /nef/notify -> file-source spool.
 
 The reference fronts ingestion with a FastAPI endpoint that validates the
-notification and hands it to the normalize/produce path
-(/root/reference/receiver.py:354-389).  In the Spark design the engine
-consumes a stream (SURVEY.md 2.1 scopes the endpoint as a "thin HTTP->Kafka
-shim"); this module is that shim with the file source standing in for the
-Kafka topic: each accepted POST body is appended atomically as one
-JSON-lines file in the spool directory that
-streaming/ingest.read_notification_stream watches.  Swapping the spool write
-for a Kafka produce is the only production delta - validation and status
-semantics stay identical.
+notification and hands it to the normalize/produce path (the reference's
+receiver.py:354-389).  In the Spark design the engine consumes a stream
+(SURVEY.md 2.1 scopes the endpoint as a "thin HTTP->Kafka shim"); this
+module is that shim with the file source standing in for the Kafka topic:
+each accepted POST body is appended atomically as one JSON-lines file in the
+spool directory that streaming/ingest.read_notification_stream watches.
+Swapping the spool write for a Kafka produce is the only production delta -
+validation and status semantics stay identical.
 
 Request contract (mirrors receiver.py:358-365):
-  - 400 "Missing notifId"  when the body has no truthy notifId
-  - 403 "Unknown notifId"  when no subscription matches
-  - 204                    on acceptance (body spooled for the stream)
+  - 400 "Invalid JSON body" when the body is not a JSON object
+  - 400 "Missing notifId"   when the body has no truthy notifId
+  - 403 "Unknown notifId"   when no subscription matches
+  - 204                     on acceptance (body spooled for the stream)
 
-Control plane (optional, enabled by passing `store=`): the reference's
-subscription CRUD (receiver.py:296-351); passing `nef_client=` also enables
-the OUTBOUND NEF subscribe/unsubscribe egress (receiver.py:304-316,341-349)
-with the reference's 504/502/500 upstream-error mapping and best-effort
-delete - closing what was previously a documented omission (round 8):
+Admission reads the `subscriptions` the shim is given: a SubscriptionStore
+live on every notification, as the reference reads its registry
+(receiver.py:363-365), or an iterable of notif ids frozen once.  A store
+also enables the control plane, the reference's subscription CRUD
+(receiver.py:296-351), so a created subscription is admitted at once and a
+deleted one refused; the data plane reads the store once, when a stream is
+built.  `nef_client=` adds the OUTBOUND NEF subscribe/unsubscribe
+(receiver.py:304-316,341-349): 504/502/500 upstream errors, best-effort
+delete:
   - POST   /nef/subscriptions        -> 201 {"notifId", "nefSubscriptionId"}
                                         (422 on missing required fields,
                                         FastAPI's validation status)
   - GET    /nef/subscriptions        -> 200 {"subscriptions": [...]}
   - DELETE /nef/subscriptions/{id}   -> 204, or 404 "Subscription not found"
 
-Auth (optional, enabled by passing `auth=`): Rs256TokenAuth is the full
-dual of the reference's AuthMiddleware (auth_middleware.py:22-59) - DEV_MODE
-bypass, /nef/notify skip, Bearer extraction, kid-based JWKS key lookup
-(JwksClient, the PyJWKClient dual), real RS256 signature verification via
-the `cryptography` library, expiry validation, realm-role intersection.
-HmacTokenAuth remains as the stdlib-only fallback with the same check order
-and status contract (shared-secret HMAC in place of the IdP's RSA keys).
+Auth (optional, enabled by passing `auth=`): Rs256TokenAuth, the one token
+verifier, is the dual of the reference's AuthMiddleware
+(auth_middleware.py:22-59) - DEV_MODE bypass, /nef/notify skip, Bearer
+extraction, kid-based JWKS key lookup (JwksClient, the PyJWKClient dual),
+RS256 signature verification via the `cryptography` library, expiry
+validation, realm-role intersection.
 
-Stdlib-only (http.server) so it runs in this image; a production deployment
-would put any ASGI server here - the contract is the test surface, not the
-server library.
+Stdlib-only server (http.server) so it runs in this image; a production
+deployment would put any ASGI server here - the contract is the test
+surface, not the server library.
 """
 
 from __future__ import annotations
 
 import base64
-import hashlib
-import hmac
 import json
 import os
 import threading
 import time
 import uuid
-from collections.abc import Callable, Iterable
+from collections.abc import Iterable
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+
+from ..pipeline.subscriptions import SubscriptionStore
 
 # reference auth_middleware.py:12-14
 REQUIRED_ROLES = {"network_engineer", "debug_admin"}
 SKIP_PATHS = {"/nef/notify"}
-
-
-class HmacTokenAuth:
-    """Stdlib dual of the reference's AuthMiddleware (auth_middleware.py:22-59).
-
-    Token format: base64url(json claims) + "." + hex(HMAC-SHA256 over the
-    encoded claims) - structurally a JWT minus the header, with the
-    Keycloak JWKS lookup replaced by a shared secret.  Claims use the same
-    shape the reference reads: realm_access.roles, exp, preferred_username.
-
-    check() returns None when the request may proceed, else (status,
-    detail) exactly matching the reference's responses:
-      401 "Missing authorization token"  - no Bearer header     (:31-32)
-      401 "Token expired"                - exp in the past      (:43-44)
-      401 "Invalid token"                - bad signature/shape  (:45-47)
-      403 "Insufficient permissions"     - no required role     (:49-51)
-    """
-
-    def __init__(
-        self,
-        secret: bytes | str,
-        dev_mode: bool = False,
-        required_roles: Iterable[str] = REQUIRED_ROLES,
-        skip_paths: Iterable[str] = SKIP_PATHS,
-        now: Callable[[], float] = time.time,
-    ) -> None:
-        self.secret = secret.encode() if isinstance(secret, str) else secret
-        self.dev_mode = dev_mode
-        self.required_roles = set(required_roles)
-        self.skip_paths = set(skip_paths)
-        self._now = now
-
-    # -- token issue/verify ---------------------------------------------------
-
-    def _sign(self, encoded_claims: bytes) -> str:
-        return hmac.new(self.secret, encoded_claims, hashlib.sha256).hexdigest()
-
-    def issue(
-        self,
-        roles: Iterable[str],
-        username: str = "tester",
-        exp: float | None = None,
-    ) -> str:
-        """Mint a token (test/ops helper - the reference's IdP does this)."""
-        claims = {
-            "realm_access": {"roles": sorted(roles)},
-            "preferred_username": username,
-            "name": username,
-            "exp": self._now() + 3600 if exp is None else exp,
-        }
-        enc = base64.urlsafe_b64encode(json.dumps(claims).encode())
-        return f"{enc.decode()}.{self._sign(enc)}"
-
-    def check(self, path: str, headers) -> tuple[int, str] | None:
-        if self.dev_mode:  # auth_middleware.py:24-25
-            return None
-        if path in self.skip_paths:  # :27-28
-            return None
-        header = headers.get("Authorization", "")
-        if not header.startswith("Bearer "):  # :31-32
-            return 401, "Missing authorization token"
-        token = header[7:]
-        try:
-            enc, sig = token.rsplit(".", 1)
-            if not hmac.compare_digest(self._sign(enc.encode()), sig):
-                return 401, "Invalid token"
-            claims = json.loads(base64.urlsafe_b64decode(enc.encode()))
-        except (ValueError, json.JSONDecodeError):
-            return 401, "Invalid token"  # :45-47
-        # expiry only checked when the claim is present: PyJWT's decode (the
-        # reference's verifier, auth_middleware.py:38-44) treats a missing
-        # exp as "no expiry" and accepts the token (ADVICE r5)
-        if "exp" in claims and float(claims["exp"]) < self._now():
-            return 401, "Token expired"  # :43-44
-        roles = set(claims.get("realm_access", {}).get("roles", []))
-        if not roles & self.required_roles:
-            return 403, "Insufficient permissions"  # :49-51
-        return None
 
 
 def _b64url_decode(data: str | bytes) -> bytes:
@@ -192,9 +117,9 @@ class JwksClient:
 
 class Rs256TokenAuth:
     """RS256/JWKS dual of the reference's AuthMiddleware
-    (auth_middleware.py:22-59) - the real thing, not the HMAC stand-in:
-    compact JWS tokens (base64url header.payload.signature), kid-based JWKS
-    key lookup, RSASSA-PKCS1-v1_5/SHA-256 signature verification via the
+    (auth_middleware.py:22-59): compact JWS tokens (base64url
+    header.payload.signature), kid-based JWKS key lookup,
+    RSASSA-PKCS1-v1_5/SHA-256 signature verification via the
     `cryptography` library (PyJWT is absent from this image; its RS256
     verify is exactly this primitive).
 
@@ -212,19 +137,9 @@ class Rs256TokenAuth:
                              REQUIRED_ROLES (:49-51)
     """
 
-    def __init__(
-        self,
-        jwks: JwksClient | str,
-        dev_mode: bool = False,
-        required_roles: Iterable[str] = REQUIRED_ROLES,
-        skip_paths: Iterable[str] = SKIP_PATHS,
-        now: Callable[[], float] = time.time,
-    ) -> None:
+    def __init__(self, jwks: JwksClient | str, dev_mode: bool = False) -> None:
         self.jwks = JwksClient(jwks) if isinstance(jwks, str) else jwks
         self.dev_mode = dev_mode
-        self.required_roles = set(required_roles)
-        self.skip_paths = set(skip_paths)
-        self._now = now
 
     def _verify(self, token: str) -> dict:
         """Decode+verify; returns claims or raises ValueError (any shape of
@@ -259,14 +174,14 @@ class Rs256TokenAuth:
             raise ValueError(f"malformed claims: {e}") from e
         # exp checked only after the signature verified, and only when the
         # claim is present (PyJWT accepts exp-less tokens)
-        if "exp" in claims and float(claims["exp"]) < self._now():
+        if "exp" in claims and float(claims["exp"]) < time.time():
             raise _Expired()
         return claims
 
     def check(self, path: str, headers) -> tuple[int, str] | None:
         if self.dev_mode:  # auth_middleware.py:24-25
             return None
-        if path in self.skip_paths:  # :27-28
+        if path in SKIP_PATHS:  # :27-28
             return None
         header = headers.get("Authorization", "")
         if not header.startswith("Bearer "):  # :31-32
@@ -278,7 +193,7 @@ class Rs256TokenAuth:
         except ValueError:
             return 401, "Invalid token"  # :45-47
         roles = set(claims.get("realm_access", {}).get("roles", []))
-        if not roles & self.required_roles:
+        if not roles & REQUIRED_ROLES:
             return 403, "Insufficient permissions"  # :49-51
         return None
 
@@ -293,7 +208,6 @@ def issue_rs256_token(
     roles: Iterable[str],
     username: str = "tester",
     exp: float | None = None,
-    now: Callable[[], float] = time.time,
 ) -> str:
     """Mint an RS256 compact JWS (test/ops helper - in production Keycloak
     does this).  `private_key` is a cryptography RSAPrivateKey whose public
@@ -308,7 +222,7 @@ def issue_rs256_token(
         "realm_access": {"roles": sorted(roles)},
         "preferred_username": username,
         "name": username,
-        "exp": now() + 3600 if exp is None else exp,
+        "exp": time.time() + 3600 if exp is None else exp,
     }
     payload = _b64url_encode(json.dumps(claims).encode())
     signing_input = f"{header}.{payload}".encode()
@@ -417,27 +331,25 @@ class NotifyHTTPShim:
     def __init__(
         self,
         spool_dir: str,
-        known_notif_ids: Callable[[], Iterable[str]] | Iterable[str],
+        subscriptions: SubscriptionStore | Iterable[str],
         host: str = "127.0.0.1",
         port: int = 0,
-        auth: HmacTokenAuth | Rs256TokenAuth | None = None,
-        store=None,
+        auth: Rs256TokenAuth | None = None,
         nef_client: NefClient | None = None,
     ) -> None:
-        """`auth`: optional Rs256TokenAuth or HmacTokenAuth gate (None =
-        the reference's DEV_MODE posture).  `store`: optional subscription
-        store (anything with add/get/remove/list -
-        pipeline.subscriptions.SubscriptionStore) enabling the
-        /nef/subscriptions control-plane routes.
-        `nef_client`: optional NefClient enabling the OUTBOUND subscribe/
-        unsubscribe calls to the NEF named in each request's nefUrl (None
-        keeps the routes local-only)."""
+        """`subscriptions`: the SubscriptionStore the shim admits from and
+        serves the /nef/subscriptions routes over, or a fixed iterable of
+        admitted notif ids (no CRUD routes).  `auth`: optional token gate
+        (None = DEV_MODE).  `nef_client`: optional NefClient for the
+        OUTBOUND calls to each request's nefUrl (None = local-only)."""
         self.spool_dir = spool_dir
-        self._known = known_notif_ids
+        if isinstance(subscriptions, SubscriptionStore):
+            self._store, self._ids = subscriptions, None
+        else:
+            self._store, self._ids = None, frozenset(subscriptions)
         self._host = host
         self._port = port
         self._auth = auth
-        self._store = store
         self._nef = nef_client
         self._server: ThreadingHTTPServer | None = None
         self._thread: threading.Thread | None = None
@@ -452,26 +364,20 @@ class NotifyHTTPShim:
             def log_message(self, fmt, *args):  # keep test output quiet
                 pass
 
-            def _respond(self, code: int, detail: str | None = None) -> None:
-                if detail is None:
-                    self.send_response(code)
+            def _respond(self, code: int, body: dict | str | None = None) -> None:
+                """No body for None; a str is sent as FastAPI's {"detail"}."""
+                self.send_response(code)
+                if body is None:
                     self.send_header("Content-Length", "0")
                     self.end_headers()
                     return
-                body = json.dumps({"detail": detail}).encode()
-                self.send_response(code)
+                if isinstance(body, str):
+                    body = {"detail": body}
+                data = json.dumps(body).encode()
                 self.send_header("Content-Type", "application/json")
-                self.send_header("Content-Length", str(len(body)))
+                self.send_header("Content-Length", str(len(data)))
                 self.end_headers()
-                self.wfile.write(body)
-
-            def _respond_json(self, code: int, obj) -> None:
-                body = json.dumps(obj).encode()
-                self.send_response(code)
-                self.send_header("Content-Type", "application/json")
-                self.send_header("Content-Length", str(len(body)))
-                self.end_headers()
-                self.wfile.write(body)
+                self.wfile.write(data)
 
             def _gate(self) -> bool:
                 """Run the auth check; True = request may proceed."""
@@ -483,12 +389,14 @@ class NotifyHTTPShim:
                 self._respond(*denied)
                 return False
 
-            def _read_json(self):
+            def _read_json(self) -> dict | None:
+                """The body when it is a JSON object, else None."""
                 try:
                     n = int(self.headers.get("Content-Length", "0"))
-                    return json.loads(self.rfile.read(n))
-                except (ValueError, json.JSONDecodeError):
+                    body = json.loads(self.rfile.read(n))
+                except ValueError:
                     return None
+                return body if isinstance(body, dict) else None
 
             def do_POST(self):
                 if not self._gate():
@@ -535,7 +443,7 @@ class NotifyHTTPShim:
                             "created_at": int(time.time()),
                         }
                     )
-                    self._respond_json(
+                    self._respond(
                         201,
                         {
                             "notifId": payload["notifId"],
@@ -554,7 +462,7 @@ class NotifyHTTPShim:
                 if not notif_id:  # truthiness, like the reference (:358-361)
                     self._respond(400, "Missing notifId")
                     return
-                if notif_id not in shim._known_ids():
+                if not shim._admits(notif_id):
                     self._respond(403, "Unknown notifId")
                     return
                 shim._spool(payload)
@@ -564,7 +472,7 @@ class NotifyHTTPShim:
                 if not self._gate():
                     return
                 if self.path == "/nef/subscriptions" and shim._store is not None:
-                    self._respond_json(200, {"subscriptions": shim._store.list()})
+                    self._respond(200, {"subscriptions": shim._store.list()})
                     return
                 self._respond(404, "Not Found")
 
@@ -623,9 +531,13 @@ class NotifyHTTPShim:
 
     # -- internals -----------------------------------------------------------
 
-    def _known_ids(self) -> set[str]:
-        known = self._known() if callable(self._known) else self._known
-        return set(known)
+    def _admits(self, notif_id) -> bool:
+        """Whether a subscription holds `notif_id` now (ids are strings)."""
+        if not isinstance(notif_id, str):
+            return False
+        if self._store is not None:
+            return self._store.get(notif_id) is not None
+        return notif_id in self._ids
 
     def _spool(self, payload: dict) -> None:
         """One accepted POST = one JSON-lines file, written atomically (tmp +

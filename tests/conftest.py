@@ -7,6 +7,7 @@ from __future__ import annotations
 import math
 import os
 import sys
+import uuid
 
 import duckdb
 import pandas as pd
@@ -82,6 +83,22 @@ def assert_frames_match(spark_pdf: pd.DataFrame, oracle_pdf: pd.DataFrame, name:
                 f"{name}: column {c!r} differs at sorted row {bad}: "
                 f"spark={sa.iloc[bad]!r} oracle={sb.iloc[bad]!r}"
             )
+
+
+def jobs_of(spark, fn):
+    """(fn(), number of Spark jobs fn ran), counted through a job group.
+    The count waits for the listener bus, so a job-start event still
+    queued when fn returns is not missed."""
+    sc = spark.sparkContext
+    group = f"jobs_of_{uuid.uuid4().hex}"
+    outer = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", outer)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def assert_no_global_window(df, name: str):

@@ -15,7 +15,6 @@ shared between loads.
 
 from __future__ import annotations
 
-import itertools
 import os
 
 import pyarrow as pa
@@ -25,7 +24,7 @@ from pyspark.sql import types as T
 
 from pei_nwdaf_data_ingestion_spark import artifacts, catalog
 
-from conftest import SF_DIR
+from conftest import SF_DIR, jobs_of
 
 # every fixture table's time column(s) - extend if the driver adds tables
 TIME_COLS = {
@@ -99,27 +98,10 @@ def test_cache_partitioning_floors_at_shuffle_width(spark, monkeypatch):
         artifacts.clear(sf)
 
 
-_groups = itertools.count()
-
-
-def _jobs_of(spark, fn):
-    """(fn(), number of Spark jobs fn ran), counted through a job group."""
-    sc = spark.sparkContext
-    group = f"test_catalog_{next(_groups)}"
-    outer = sc.getLocalProperty("spark.jobGroup.id")
-    sc.setLocalProperty("spark.jobGroup.id", group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", outer)
-    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_warm_load_runs_no_spark_job(spark):
     for table in catalog.TABLES:
         first = catalog.load(spark, SF_DIR, table)
-        second, jobs = _jobs_of(spark, lambda: catalog.load(spark, SF_DIR, table))
+        second, jobs = jobs_of(spark, lambda: catalog.load(spark, SF_DIR, table))
         assert jobs == 0, f"{table}: a warm load ran {jobs} Spark job(s)"
         assert second.schema.json() == first.schema.json(), table
 
@@ -129,7 +111,7 @@ def test_warm_cold_fanout_load_reads_its_copy_without_a_job(spark, monkeypatch):
     # lineitem is ~1 MiB at sf0.01 (>= 256 KiB gate)
     sf = os.path.join(os.path.dirname(SF_DIR), "sf0.01")
     first = catalog.load(spark, sf, "lineitem")
-    second, jobs = _jobs_of(spark, lambda: catalog.load(spark, sf, "lineitem"))
+    second, jobs = jobs_of(spark, lambda: catalog.load(spark, sf, "lineitem"))
     assert jobs == 0, f"a warm re-chunked load ran {jobs} Spark job(s)"
     files = second.inputFiles()
     assert files and all("coldchunk_lineitem_" in f for f in files), files

@@ -7,6 +7,7 @@ with the reference's 400/403/204 status contract."""
 from __future__ import annotations
 
 import json
+import os
 import urllib.error
 import urllib.request
 
@@ -40,7 +41,7 @@ def _request(
     base: str,
     path: str,
     method: str = "GET",
-    payload: dict | None = None,
+    payload: object = None,
     token: str | None = None,
 ) -> tuple[int, dict | None]:
     headers = {"Content-Type": "application/json"}
@@ -98,61 +99,22 @@ SUB_BODY = {
 }
 
 
-def test_auth_status_contract(spark, tmp_path):
-    """The reference AuthMiddleware's status behavior
-    (auth_middleware.py:22-59, exercised by its 401/403 endpoint tests):
-    401 missing/expired/invalid token, 403 wrong role, 200 with a required
-    role, /nef/notify skipped, DEV_MODE bypass."""
-    from pei_nwdaf_data_ingestion_spark.streaming.http_shim import HmacTokenAuth
-
-    auth = HmacTokenAuth(secret="test-secret")
-    store = SubscriptionStore(spark, str(tmp_path / "subs"))
-    with NotifyHTTPShim(
-        str(tmp_path / "spool"), {"test-notif-001"}, auth=auth, store=store
-    ) as shim:
-        base = shim.url.rsplit("/nef/notify", 1)[0]
-        # 401: no token at all
-        code, body = _request(base, "/nef/subscriptions")
-        assert (code, body["detail"]) == (401, "Missing authorization token")
-        # 401: expired
-        expired = auth.issue(["network_engineer"], exp=0)
-        code, body = _request(base, "/nef/subscriptions", token=expired)
-        assert (code, body["detail"]) == (401, "Token expired")
-        # 401: tampered signature
-        good = auth.issue(["network_engineer"])
-        bad_sig = good[:-4] + ("0000" if good[-4:] != "0000" else "1111")
-        code, body = _request(base, "/nef/subscriptions", token=bad_sig)
-        assert (code, body["detail"]) == (401, "Invalid token")
-        # 403: authenticated but no required realm role
-        peasant = auth.issue(["observer"])
-        code, body = _request(base, "/nef/subscriptions", token=peasant)
-        assert (code, body["detail"]) == (403, "Insufficient permissions")
-        # 200: either required role passes (REQUIRED_ROLES is an ANY-of set)
-        for role in ("network_engineer", "debug_admin"):
-            code, _ = _request(
-                base, "/nef/subscriptions", token=auth.issue([role])
-            )
-            assert code == 200
-        # /nef/notify is in SKIP_PATHS - no token required even with auth on
-        assert _post(shim.url, {"notifId": "test-notif-001"}) == 204
-
-    # DEV_MODE bypass (auth_middleware.py:24-25)
-    dev = HmacTokenAuth(secret="test-secret", dev_mode=True)
-    dev_store = SubscriptionStore(spark, str(tmp_path / "subs2"))
-    with NotifyHTTPShim(
-        str(tmp_path / "spool2"), set(), auth=dev, store=dev_store
-    ) as shim:
-        base = shim.url.rsplit("/nef/notify", 1)[0]
-        code, _ = _request(base, "/nef/subscriptions")
-        assert code == 200
+def _spooled(spool) -> list[str]:
+    return sorted(f for f in os.listdir(spool) if f.endswith(".json"))
 
 
 def test_subscription_crud_endpoints(spark, tmp_path):
     """Control-plane CRUD contract (receiver.py:296-351) minus the outbound
-    NEF call: 201 create (422 on missing fields), 200 list, 204/404 delete."""
+    NEF call: 201 create (422 on missing fields), 200 list, 204/404 delete.
+    /nef/notify admits exactly the store's current ids (receiver.py:363-365
+    reads the registry the CRUD routes write), and a 403 spools nothing."""
     store = SubscriptionStore(spark, str(tmp_path / "subs"))
-    with NotifyHTTPShim(str(tmp_path / "spool"), set(), store=store) as shim:
+    spool = str(tmp_path / "spool")
+    notif = {"notifId": "test-notif-001"}
+    with NotifyHTTPShim(spool, store) as shim:
         base = shim.url.rsplit("/nef/notify", 1)[0]
+        assert _post(shim.url, notif) == 403
+        assert _spooled(spool) == []
         code, body = _request(base, "/nef/subscriptions", "POST", SUB_BODY)
         assert code == 201
         assert body["notifId"] == "test-notif-001"
@@ -164,6 +126,8 @@ def test_subscription_crud_endpoints(spark, tmp_path):
         assert code == 200
         assert [s["notif_id"] for s in body["subscriptions"]] == ["test-notif-001"]
         assert body["subscriptions"][0]["events"] == ["PERF_DATA", "UE_MOBILITY"]
+        assert _post(shim.url, notif) == 204
+        assert len(_spooled(spool)) == 1
         # delete: 404 unknown id (receiver.py:337-339), then 204, then gone
         code, body = _request(base, "/nef/subscriptions/nope", "DELETE")
         assert (code, body["detail"]) == (404, "Subscription not found")
@@ -171,6 +135,26 @@ def test_subscription_crud_endpoints(spark, tmp_path):
         assert code == 204
         code, body = _request(base, "/nef/subscriptions")
         assert body["subscriptions"] == []
+        assert _post(shim.url, notif) == 403
+        assert len(_spooled(spool)) == 1
+
+
+def test_non_object_json_bodies_get_400(spark, tmp_path):
+    """A body that parses as JSON but is not an object gets 400 "Invalid
+    JSON body" on both POST routes, a notifId that is not a string is
+    unknown (403), and the server keeps serving."""
+    store = SubscriptionStore(spark, str(tmp_path / "subs"))
+    store.add(dict(SUB))
+    spool = str(tmp_path / "spool")
+    with NotifyHTTPShim(spool, store) as shim:
+        base = shim.url.rsplit("/nef/notify", 1)[0]
+        for path in ("/nef/notify", "/nef/subscriptions"):
+            for body in ([], "notifId nefUrl events", 1):
+                code, detail = _request(base, path, "POST", body)
+                assert (code, detail) == (400, {"detail": "Invalid JSON body"})
+        assert _post(shim.url, {"notifId": [SUB["notif_id"]]}) == 403
+        assert _spooled(spool) == []
+        assert _post(shim.url, {"notifId": SUB["notif_id"]}) == 204
 
 
 # -- outbound NEF subscribe/unsubscribe (round 8: the last documented
@@ -244,12 +228,7 @@ def _shim_with_nef(spark, tmp_path, nef_client):
     from pei_nwdaf_data_ingestion_spark.streaming.http_shim import NotifyHTTPShim
 
     store = SubscriptionStore(spark, str(tmp_path / "subs"))
-    shim = NotifyHTTPShim(
-        str(tmp_path / "spool"),
-        known_notif_ids=lambda: [s["notif_id"] for s in store.list()],
-        store=store,
-        nef_client=nef_client,
-    )
+    shim = NotifyHTTPShim(str(tmp_path / "spool"), store, nef_client=nef_client)
     return shim, store
 
 
@@ -411,8 +390,7 @@ def test_outbound_nef_unsubscribe_best_effort(spark, tmp_path):
         nef.stop()
 
 
-# -- RS256/JWKS auth (round 15: the HMAC stand-in upgraded to the real
-# verification primitive the reference uses) ----------------------------------
+# -- RS256/JWKS auth: the reference's verification primitive ------------------
 
 
 class _FakeJwksIdp:
@@ -485,9 +463,8 @@ def test_rs256_auth_status_contract(spark, tmp_path):
     try:
         auth = Rs256TokenAuth(idp.jwks_url)
         store = SubscriptionStore(spark, str(tmp_path / "subs"))
-        with NotifyHTTPShim(
-            str(tmp_path / "spool"), {"test-notif-001"}, auth=auth, store=store
-        ) as shim:
+        store.add(dict(SUB))
+        with NotifyHTTPShim(str(tmp_path / "spool"), store, auth=auth) as shim:
             base = shim.url.rsplit("/nef/notify", 1)[0]
             # 401: no token
             code, body = _request(base, "/nef/subscriptions")
@@ -565,9 +542,7 @@ def test_rs256_auth_status_contract(spark, tmp_path):
         # DEV_MODE bypass (auth_middleware.py:24-25)
         dev = Rs256TokenAuth(idp.jwks_url, dev_mode=True)
         dev_store = SubscriptionStore(spark, str(tmp_path / "subs2"))
-        with NotifyHTTPShim(
-            str(tmp_path / "spool2"), set(), auth=dev, store=dev_store
-        ) as shim:
+        with NotifyHTTPShim(str(tmp_path / "spool2"), dev_store, auth=dev) as shim:
             base = shim.url.rsplit("/nef/notify", 1)[0]
             code, _ = _request(base, "/nef/subscriptions")
             assert code == 200

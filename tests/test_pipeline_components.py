@@ -26,6 +26,7 @@ from pei_nwdaf_data_ingestion_spark.streaming.sinks import (
     pack_batches,
     read_fanout,
 )
+from tests.conftest import jobs_of
 from tests.test_reference_fidelity import SUB
 
 
@@ -179,17 +180,6 @@ class TestSubscriptionStore:
     def test_crud_runs_no_spark_job(self, spark, store):
         """add/get/list/remove run no Spark job: 0 jobs in their job
         group.  The same count sees load()'s collect, so it is live."""
-        sc = spark.sparkContext
-
-        def jobs(group, ops):
-            sc.setJobGroup(group, "subscription store job-count pin")
-            try:
-                ops()
-            finally:
-                sc.setJobGroup("", "")
-            sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
-            return len(sc.statusTracker().getJobIdsForGroup(group))
-
         def crud():
             store.add(SUB)
             store.add(dict(SUB, notif_id="n2"))
@@ -197,8 +187,8 @@ class TestSubscriptionStore:
             store.list()
             store.remove("n2")
 
-        assert jobs("subs_crud_jobs", crud) == 0
-        assert jobs("subs_load_jobs", lambda: store.load().collect()) > 0
+        assert jobs_of(spark, crud)[1] == 0
+        assert jobs_of(spark, lambda: store.load().collect())[1] > 0
 
 
 class TestSinks:
@@ -1829,17 +1819,12 @@ class TestConvergenceGatedTwins:
             )
             deg = edges.groupBy("src").agg(F.count("*").alias("outdeg"))
             e2 = edges.join(deg, "src")
-            sc = spark.sparkContext
-            sc.setJobGroup("pr_gate_jobs", "job-count pin")
-            try:
-                r, it, conv = graph.pagerank_converged(
+            (r, it, conv), n_jobs = jobs_of(
+                spark,
+                lambda: graph.pagerank_converged(
                     e2, deg, eps_micro=5_000, max_iter=40
-                )
-                n_jobs = len(
-                    sc.statusTracker().getJobIdsForGroup("pr_gate_jobs")
-                )
-            finally:
-                sc.setJobGroup("", "")
+                ),
+            )
             assert conv is True and 1 < it < 40
             assert n_jobs == it, f"{n_jobs} jobs for {it} gated rounds"
         finally:
@@ -1942,17 +1927,10 @@ class TestConvergenceGatedTwins:
                  (4, 5), (5, 4), (6, 7), (7, 6)],
                 "src long, dst long",
             )
-            sc = spark.sparkContext
-            sc.setJobGroup("lpa_gate_jobs", "job-count pin")
-            try:
-                lbl, it, conv = graph.label_propagation_converged(
-                    edges, max_iter=40
-                )
-                n_jobs = len(
-                    sc.statusTracker().getJobIdsForGroup("lpa_gate_jobs")
-                )
-            finally:
-                sc.setJobGroup("", "")
+            (lbl, it, conv), n_jobs = jobs_of(
+                spark,
+                lambda: graph.label_propagation_converged(edges, max_iter=40),
+            )
             assert conv is True and 1 < it < 40
             assert n_jobs == it, f"{n_jobs} jobs for {it} gated rounds"
         finally:
