@@ -13,6 +13,8 @@ path would overwrite the first one's state.
 The data plane reads load(), the snapshot on the static side of the
 stream-static plan, once when a pipeline is built (pipeline/nef.py collects
 it into a literal map); restart a stream to pick up subscription changes.
+load() is a local relation built from Arrow on the driver, so reading it
+runs no Spark job and starts no Python worker.
 """
 
 from __future__ import annotations
@@ -22,9 +24,13 @@ import json
 import os
 import threading
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from .nef import SUBSCRIPTION
+
+_ARROW_SCHEMA = to_arrow_schema(SUBSCRIPTION)
 
 
 class SubscriptionStore:
@@ -40,10 +46,10 @@ class SubscriptionStore:
                 self._subs = json.load(f)
 
     def load(self) -> DataFrame:
-        # one slice, not one per core: the first read launches one Python
-        # worker, which later Python tasks (the Flight sink) all reuse warm
-        rows = self.spark.sparkContext.parallelize(self.list(), 1)
-        return self.spark.createDataFrame(rows, SUBSCRIPTION)
+        # a LocalRelation: collecting it runs no job, so building a
+        # pipeline never launches a Python worker
+        table = pa.Table.from_pylist(self.list(), schema=_ARROW_SCHEMA)
+        return self.spark.createDataFrame(table, SUBSCRIPTION)
 
     def get(self, notif_id: str) -> dict | None:
         with self._lock:
@@ -54,16 +60,24 @@ class SubscriptionStore:
         with self._lock:
             return [copy.deepcopy(self._subs[k]) for k in sorted(self._subs)]
 
-    def add(self, sub: dict) -> None:
-        """Upsert one subscription (registry.py:55-89), kept as exactly the
-        SUBSCRIPTION fields.  createDataFrame checks the row without a job,
-        so a row that does not fit raises here and nothing is stored."""
-        if sub.get("notif_id") is None:
-            raise ValueError("a subscription needs a notif_id")
+    def check(self, sub: dict) -> dict:
+        """`sub` as the row add() would store: exactly the SUBSCRIPTION
+        fields, a missing one None, an extra key dropped.  A notif_id that
+        is not a string raises ValueError.  A field that does not fit
+        raises PySparkTypeError from createDataFrame's check (no job), or
+        an Arrow TypeError/ValueError from load()'s own conversion, which
+        also refuses a non-string value in a string field."""
+        if not isinstance(sub.get("notif_id"), str):
+            raise ValueError("a subscription needs a string notif_id")
         self.spark.createDataFrame([sub], SUBSCRIPTION)
-        row = SUBSCRIPTION.fromInternal(SUBSCRIPTION.toInternal(sub))
+        return pa.Table.from_pylist([sub], schema=_ARROW_SCHEMA).to_pylist()[0]
+
+    def add(self, sub: dict) -> None:
+        """Upsert one subscription (registry.py:55-89) as check() returns
+        it; a row check() rejects raises here and nothing is stored."""
+        row = self.check(sub)
         with self._lock:
-            self._replace({**self._subs, sub["notif_id"]: row.asDict(recursive=True)})
+            self._replace({**self._subs, row["notif_id"]: row})
 
     def remove(self, notif_id: str) -> bool:
         """Delete by key; returns whether it existed (registry.py:97-105)."""

@@ -26,8 +26,10 @@ built.  `nef_client=` adds the OUTBOUND NEF subscribe/unsubscribe
 (receiver.py:304-316,341-349): 504/502/500 upstream errors, best-effort
 delete:
   - POST   /nef/subscriptions        -> 201 {"notifId", "nefSubscriptionId"}
-                                        (422 on missing required fields,
-                                        FastAPI's validation status)
+                                        (422 on missing required fields or
+                                        a row that does not fit the store,
+                                        FastAPI's validation status, before
+                                        any outbound call)
   - GET    /nef/subscriptions        -> 200 {"subscriptions": [...]}
   - DELETE /nef/subscriptions/{id}   -> 204, or 404 "Subscription not found"
 
@@ -295,6 +297,8 @@ class NefClient:
             if not isinstance(body, dict):
                 raise ValueError(f"malformed NEF response body: {body!r:.80}")
             sub_id = body.get("subscriptionId")
+            if sub_id is not None and not isinstance(sub_id, str):
+                raise ValueError(f"malformed NEF subscriptionId: {sub_id!r:.80}")
         except socket.timeout:
             return 504, "NEF did not respond"
         except urllib.error.URLError as e:
@@ -414,41 +418,41 @@ class NotifyHTTPShim:
                     if missing:
                         self._respond(422, f"Missing fields: {', '.join(missing)}")
                         return
+                    # the row is checked before anything leaves the shim: a
+                    # non-string notifId or a field that does not fit
+                    # SUBSCRIPTION answers 422, with nothing sent or stored
+                    try:
+                        row = shim._store.check(
+                            {
+                                "notif_id": payload["notifId"],
+                                "snssai": payload.get("snssai"),
+                                "dnn": payload.get("dnn"),
+                                "events": payload["events"],
+                                "nef_url": payload["nefUrl"],
+                                "created_at": int(time.time()),
+                            }
+                        )
+                    except (TypeError, ValueError) as e:
+                        self._respond(422, f"Invalid subscription: {e}")
+                        return
                     # outbound NEF subscribe (receiver.py:304-316): with a
                     # NefClient the shim registers itself at the NEF named
                     # by nefUrl and stores the returned subscriptionId; on
                     # failure the error mapping answers and NOTHING is
                     # stored.  Without a client the routes stay local-only
                     # (nef_sub_id None).
-                    nef_sub_id = None
                     if shim._nef is not None:
                         status, result = shim._nef.subscribe(
-                            payload["nefUrl"],
-                            payload["notifId"],
-                            shim.url,
-                            payload["events"],
+                            row["nef_url"], row["notif_id"], shim.url, row["events"]
                         )
                         if status != 201:
                             self._respond(status, result)
                             return
-                        nef_sub_id = result
-                    shim._store.add(
-                        {
-                            "notif_id": payload["notifId"],
-                            "snssai": payload.get("snssai"),
-                            "dnn": payload.get("dnn"),
-                            "events": payload["events"],
-                            "nef_sub_id": nef_sub_id,
-                            "nef_url": payload["nefUrl"],
-                            "created_at": int(time.time()),
-                        }
-                    )
+                        row["nef_sub_id"] = result
+                    shim._store.add(row)
                     self._respond(
                         201,
-                        {
-                            "notifId": payload["notifId"],
-                            "nefSubscriptionId": nef_sub_id,
-                        },
+                        {"notifId": row["notif_id"], "nefSubscriptionId": row["nef_sub_id"]},
                     )
                     return
                 if self.path != "/nef/notify":

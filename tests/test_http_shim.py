@@ -193,6 +193,8 @@ class _FakeNef:
                 if mode == "list_body":
                     # 2xx with a non-object JSON body (malformed NEF)
                     body = json.dumps(["nef-sub-42"]).encode()
+                elif mode == "int_id":
+                    body = json.dumps({"subscriptionId": 42}).encode()
                 else:
                     body = json.dumps({"subscriptionId": "nef-sub-42"}).encode()
                 self.send_response(201)
@@ -350,6 +352,29 @@ def test_outbound_nef_malformed_body_maps_500(spark, tmp_path):
         nef.stop()
 
 
+def test_outbound_nef_non_string_subscription_id_maps_500(spark, tmp_path):
+    """A subscriptionId that is not a string is a malformed NEF reply: the
+    catch-all 500 answers (receiver.py:315-316) and nothing is stored,
+    instead of the store refusing the row inside the handler thread."""
+    from pei_nwdaf_data_ingestion_spark.streaming.http_shim import NefClient
+
+    nef = _FakeNef(mode="int_id")
+    shim, store = _shim_with_nef(spark, tmp_path, NefClient())
+    try:
+        with shim:
+            base = f"http://{shim._server.server_address[0]}:{shim._server.server_address[1]}"
+            code, body = _request(
+                base,
+                "/nef/subscriptions",
+                "POST",
+                {"notifId": "n1", "nefUrl": nef.url, "events": ["E"]},
+            )
+        assert code == 500 and body["detail"].startswith("NEF subscription failed")
+        assert store.get("n1") is None
+    finally:
+        nef.stop()
+
+
 def test_outbound_nef_unsubscribe_best_effort(spark, tmp_path):
     """DELETE sends the outbound unsubscribe to {nefUrl}/{subId}
     (receiver.py:341-346) and stays 204 + locally removed even when the
@@ -386,6 +411,39 @@ def test_outbound_nef_unsubscribe_best_effort(spark, tmp_path):
             assert code == 204
             assert store.get("n2") is None
             assert client.warnings  # the reference logs a warning here
+    finally:
+        nef.stop()
+
+
+def test_create_checks_the_row_before_the_outbound_subscribe(spark, tmp_path):
+    """A notifId that is not a string, or a field that does not fit the
+    store's row, answers 422 before the NEF subscribe: nothing reaches the
+    NEF, nothing is stored, and the list route keeps answering.  A valid
+    create then subscribes once, so the NEF's count is live."""
+    from pei_nwdaf_data_ingestion_spark.streaming.http_shim import NefClient
+
+    nef = _FakeNef()
+    shim, store = _shim_with_nef(spark, tmp_path, NefClient())
+    try:
+        with shim:
+            base = f"http://{shim._server.server_address[0]}:{shim._server.server_address[1]}"
+            ok = {"notifId": "n1", "nefUrl": nef.url, "events": ["E"]}
+            for bad in (
+                dict(ok, notifId=5),
+                dict(ok, notifId=["n1"]),
+                dict(ok, events="E"),
+                dict(ok, snssai={"sst": "one"}),
+                dict(ok, nefUrl=7),
+            ):
+                code, body = _request(base, "/nef/subscriptions", "POST", bad)
+                assert code == 422, bad
+                assert body["detail"].startswith("Invalid subscription"), body
+            assert nef.posts == []
+            assert store.list() == []
+            assert _request(base, "/nef/subscriptions") == (200, {"subscriptions": []})
+            code, _ = _request(base, "/nef/subscriptions", "POST", ok)
+            assert code == 201 and len(nef.posts) == 1
+            assert store.get("n1")["nef_sub_id"] == "nef-sub-42"
     finally:
         nef.stop()
 

@@ -46,7 +46,6 @@ class TestSubscriptionStore:
         got = store.get("test-notif-001")
         assert got["dnn"] == "internet"
         assert got["snssai"] == {"sst": 1, "sd": "000001"}
-        # one partition: reading the snapshot starts one Python worker
         assert store.load().rdd.getNumPartitions() == 1
 
     def test_upsert_last_wins(self, store):
@@ -114,9 +113,9 @@ class TestSubscriptionStore:
         assert "mutated" not in again["events"]
 
     def test_malformed_row_raises_and_stores_nothing(self, spark, tmp_path, monkeypatch):
-        """A row that does not fit SUBSCRIPTION, or a failed file write,
-        raises at add() and leaves both the store and the file as they
-        were."""
+        """A row that does not fit SUBSCRIPTION (a notif_id that is not a
+        string included), or a failed file write, raises at add() and
+        leaves both the store and the file as they were."""
         import os
 
         path = str(tmp_path / "subs")
@@ -138,6 +137,11 @@ class TestSubscriptionStore:
             s1.add(dict(SUB, notif_id="bad", created_at="yesterday"))
         with pytest.raises(ValueError):
             s1.add(dict(SUB, notif_id=None))
+        for bad in (5, 5.0, ["n1"]):
+            with pytest.raises(ValueError, match="string notif_id"):
+                s1.add(dict(SUB, notif_id=bad))
+        with pytest.raises(TypeError):  # a string field holding an int
+            s1.add(dict(SUB, notif_id="bad", dnn=5))
         assert [s["notif_id"] for s in s1.list()] == ["test-notif-001"]
         fresh = SubscriptionStore(spark, path)
         assert fresh.list() == s1.list()
@@ -179,7 +183,8 @@ class TestSubscriptionStore:
 
     def test_crud_runs_no_spark_job(self, spark, store):
         """add/get/list/remove run no Spark job: 0 jobs in their job
-        group.  The same count sees load()'s collect, so it is live."""
+        group.  The same count sees a one-row range collect, so it is
+        live."""
         def crud():
             store.add(SUB)
             store.add(dict(SUB, notif_id="n2"))
@@ -188,7 +193,30 @@ class TestSubscriptionStore:
             store.remove("n2")
 
         assert jobs_of(spark, crud)[1] == 0
-        assert jobs_of(spark, lambda: store.load().collect())[1] > 0
+        assert jobs_of(spark, lambda: spark.range(1).collect())[1] > 0
+
+    def test_load_is_a_local_relation(self, spark, store):
+        """load() reads back exactly what list() holds, with the
+        SUBSCRIPTION schema, and collecting it, empty or not, or its id
+        column runs no Spark job.  Edge values survive: sst 0, a null
+        snssai, null events and an empty dnn."""
+        from pei_nwdaf_data_ingestion_spark.pipeline.nef import SUBSCRIPTION
+
+        empty = store.load()
+        assert empty.schema == SUBSCRIPTION
+        assert jobs_of(spark, empty.collect) == ([], 0)
+        store.add(dict(SUB, snssai={"sst": 0, "sd": None}, dnn="", events=None))
+        store.add({"notif_id": "n2", "events": ["E"], "created_at": 0})
+        df = store.load()
+        assert df.schema == SUBSCRIPTION
+        rows, jobs = jobs_of(spark, df.collect)
+        assert jobs == 0
+        got = [r.asDict(recursive=True) for r in rows]
+        assert got == store.list()
+        assert got[1]["snssai"] == {"sst": 0, "sd": None} and got[1]["dnn"] == ""
+        assert got[0]["snssai"] is None and got[1]["events"] is None
+        ids = jobs_of(spark, lambda: [r["notif_id"] for r in df.select("notif_id").collect()])
+        assert ids == (["n2", "test-notif-001"], 0)
 
 
 class TestSinks:

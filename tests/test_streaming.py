@@ -168,6 +168,98 @@ def test_stream_reads_the_subscription_snapshot_it_was_built_with(spark, tmp_pat
     assert len(got) == 2
 
 
+def test_flight_then_ws_delivers_each_record_once(spark, tmp_path):
+    """push_paced's composition: each payload is one spool file through
+    build_ingest_stream(spark, spool, store.load()) into one foreachBatch
+    that publishes to Flight and then fans out to WS.  Each non-empty
+    micro-batch reaches Flight as one message per notif_id under its epoch
+    (an unknown notifId's empty batch puts nothing), each subscriber gets
+    each of its records as one frame, and Flight, WS and the batch
+    normalize of the same files hold the same records, once each.  A put
+    to a closed server raises from the sink call."""
+    from collections import Counter
+
+    from pyarrow import flight
+
+    from pei_nwdaf_data_ingestion_spark.streaming.sinks import (
+        FlightSpoolServer,
+        flight_foreach_batch,
+    )
+    from pei_nwdaf_data_ingestion_spark.streaming.ws_egress import (
+        WsEgress,
+        ws_fanout_foreach_batch,
+    )
+    from tests.test_ws_egress import WsClient, _wait
+
+    store = SubscriptionStore(spark, str(tmp_path / "subs"))
+    store.add(dict(SUB))
+    store.add(dict(SUB, notif_id="n2", dnn="ims"))
+    multi = dict(PERF_NOTIF, eventNotifs=[
+        en for n in (PERF_NOTIF, MOBILITY_NOTIF, COMM_NOTIF) for en in n["eventNotifs"]
+    ])
+    payloads = [multi, dict(PERF_NOTIF, notifId="n2"), dict(PERF_NOTIF, notifId="ghost")]
+    spool = tmp_path / "spool"
+    spool.mkdir()
+    with FlightSpoolServer() as srv, WsEgress() as egress:
+        publish = flight_foreach_batch(srv.location)
+        fan_out = ws_fanout_foreach_batch(egress)
+
+        def on_batch(batch, epoch_id):
+            publish(batch, epoch_id)
+            fan_out(batch, epoch_id)
+
+        host, port = egress.address
+        clients = [WsClient(host, port, s["notif_id"]) for s in store.list()]
+        q = None
+        try:
+            _wait(lambda: all(egress.connections(s["notif_id"]) for s in store.list()))
+            q = (
+                build_ingest_stream(spark, str(spool), store.load())
+                .writeStream.foreachBatch(on_batch)
+                .option("checkpointLocation", str(tmp_path / "ckpt"))
+                .start()
+            )
+            for i, payload in enumerate(payloads):
+                _spool(spool, f"notif_{i}.json", payload)
+                q.processAllAvailable()
+            frames = []
+            for c in clients:
+                while True:
+                    try:
+                        frames.append(c.recv_json(timeout=0.5))
+                    except OSError:  # socket.timeout: no frame left
+                        break
+        finally:
+            if q is not None:
+                q.stop()
+            for c in clients:
+                c.close()
+        tables = {path: [t.to_pylist() for t in ts] for path, ts in srv.tables.items()}
+        location = srv.location
+    batch = spark.read.schema(NOTIFICATION).json(str(spool))
+    with pytest.raises(flight.FlightError):
+        flight_foreach_batch(location)(batch, 9)
+    want = [json.loads(r) for r in normalize_notifications(batch, store.load()).toJSON().collect()]
+
+    assert sorted(tables) == ["notifId/epoch=0", "notifId/epoch=1"]
+    flight_recs = []
+    for path, puts in tables.items():
+        assert len(puts) == 1 and len(puts[0]) == 1, path  # one put, one key
+        row = puts[0][0]
+        payload = json.loads(row["payload"])
+        assert row["n_records"] == len(payload)
+        ts = [r["ts_unix"] for r in payload]
+        assert ts == sorted(ts)  # one sorted array per key
+        flight_recs += [dict(r, notifId=row["notifId"]) for r in payload]
+
+    def bag(recs):
+        return Counter(json.dumps(r, sort_keys=True) for r in recs)
+
+    assert len(want) == 4
+    assert all(f["type"] == "data_ingested" for f in frames)
+    assert bag(flight_recs) == bag(f["data"] for f in frames) == bag(want)
+
+
 @pytest.mark.parametrize(
     "subs, offending",
     [
