@@ -3,14 +3,20 @@ streaming state and Python-UDF paths have no clean single-statement SQL
 dual; the driver records rows-only checks and pytest asserts semantics).
 
 Each streaming query drives a bounded Structured Streaming job to
-completion synchronously (availableNow trigger + memory sink) and returns
-the result as a DataFrame.
+completion synchronously (availableNow trigger) and returns the result as
+a DataFrame: streaming.ingest.run_to_memory drains into a memory table and
+returns it, except stream_cdc_upsert, whose foreachBatch merge writes a
+parquet state table.  Sources are one parquet copy of the fixture per app
+(_stream_source) or time-ordered micro-batch files (_write_time_batches),
+read with the schema of the frame that wrote them.  ingest_throughput is
+bench telemetry, not a query: its legs share one noop drain (_noop_drain),
+one aggregation (_hourly_agg) and one scoped conf setter (_scoped_conf).
 """
 
 from __future__ import annotations
 
+import contextlib
 import os
-import shutil
 import tempfile
 import time
 
@@ -53,17 +59,19 @@ def _events_stream(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def _write_time_batches(df: DataFrame, dest: str, order_col, cuts) -> None:
+def _write_time_batches(df: DataFrame, dest: str, order_col, cuts) -> DataFrame:
     """Materialize `df` as len(cuts)+1 TIME-ORDERED parquet micro-batches
-    under `dest` (partition dirs half=b0..bN, one file each): rows are
-    split at the given quantiles of `order_col`, and file mtimes ladder
+    under `dest` (partition dirs half=b0..bN, one file each) and return the
+    stream that replays them, read with `df`'s own schema: rows are split
+    at the given quantiles of `order_col`, and file mtimes ladder
     oldest-first so the file source (maxFilesPerTrigger=1) replays them as
     chronological micro-batches.  `cuts` parameterizes WHERE the batch
     boundaries fall - the ordering-invariance property tests (VERDICT r6
     item 5) drive the same stateful query with several cut sets and assert
     the drained result does not depend on them."""
-    assert list(cuts) == sorted(cuts), f"cuts must be ascending: {cuts!r}"
-    assert all(0.0 < c < 1.0 for c in cuts), f"cuts must be in (0,1): {cuts!r}"
+    # explicit raise, not assert: `python -O` strips asserts
+    if not cuts or list(cuts) != sorted(cuts) or not all(0.0 < c < 1.0 for c in cuts):
+        raise ValueError(f"cuts must be non-empty, ascending and in (0,1): {cuts!r}")
     col = F.col(order_col) if isinstance(order_col, str) else order_col
     qnames = [f"q{i}" for i in range(len(cuts))]
     qs = df.agg(
@@ -93,6 +101,85 @@ def _write_time_batches(df: DataFrame, dest: str, order_col, cuts) -> None:
         age = 100.0 * (n - 1 - i)
         for f in os.listdir(d):
             os.utime(os.path.join(d, f), (now - age, now - age))
+    return (
+        df.sparkSession.readStream.schema(df.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(os.path.join(dest, "half=*"))
+    )
+
+
+def _hourly_agg(stream: DataFrame, key) -> DataFrame:
+    """The ingest-pipeline aggregation: 10-minute watermark, 1-hour
+    tumbling window `w`, per-`key` event count and rounded value sum."""
+    return (
+        stream.withWatermark("ts", "10 minutes")
+        .groupBy(F.window("ts", "1 hour").alias("w"), key)
+        .agg(F.count("*").alias("n"), pround(F.sum("value"), 2).alias("value_sum"))
+    )
+
+
+def _noop_drain(stream: DataFrame) -> tuple[float, list[int]]:
+    """Drain a bounded stream into the noop sink (availableNow); return the
+    wall seconds and the sorted trigger ms of the batches that read rows,
+    from the engine's own progress events."""
+    t0 = time.perf_counter()
+    q = (
+        stream.writeStream.outputMode("append")
+        .format("noop")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    wall = time.perf_counter() - t0
+    lat = sorted(
+        p["durationMs"]["triggerExecution"]
+        for p in q.recentProgress
+        if p["numInputRows"] > 0
+    )
+    return wall, lat
+
+
+@contextlib.contextmanager
+def _scoped_conf(spark: SparkSession, settings: dict[str, str]):
+    """Set `settings` on the session for the block, then put back each
+    key's prior value, or unset a key that had none."""
+    prior = {k: spark.conf.get(k, None) for k in settings}
+    try:
+        for k, v in settings.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in prior.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def _rate(rows: int, wall: float, cores: int = 1) -> float | None:
+    """Records per second (per core), or None for a zero wall or core count."""
+    return round(rows / wall / cores, 1) if wall > 0 and cores else None
+
+
+def _leg(rows: int, wall: float, cores: int) -> dict:
+    """A telemetry leg's rows, wall seconds and records/s (overall and per
+    core)."""
+    return {
+        "rows": rows,
+        "wall_sec": round(wall, 4),
+        "rec_per_sec": _rate(rows, wall),
+        "rec_per_sec_per_core": _rate(rows, wall, cores),
+    }
+
+
+_PARTS = "spark.sql.shuffle.partitions"
+_STORE = "spark.sql.streaming.stateStore.providerClass"
+_STATE_STORES = {
+    "hdfs": "org.apache.spark.sql.execution.streaming.state."
+    "HDFSBackedStateStoreProvider",
+    "rocksdb": "org.apache.spark.sql.execution.streaming.state."
+    "RocksDBStateStoreProvider",
+}
 
 
 def ingest_throughput(
@@ -100,10 +187,12 @@ def ingest_throughput(
 ) -> dict:
     """Streaming-tier throughput telemetry (VERDICT r10 item 6): drive the
     ingest-pipeline shape (watermark + 1h tumbling window + per-type agg -
-    stream_ingest_pipeline's exact plan) over the sf events split into
-    `n_batches` files with maxFilesPerTrigger=1, so Structured Streaming
-    replays it as n_batches real micro-batches, and report records/s plus
-    per-batch trigger latency from the engine's own progress events.
+    stream_ingest_pipeline's exact plan, `_hourly_agg`) over the sf events
+    split into `n_batches` files with maxFilesPerTrigger=1, so Structured
+    Streaming replays it as n_batches real micro-batches, and report
+    records/s plus per-batch trigger latency from the engine's own progress
+    events.  Every leg drains through `_noop_drain`, in the order baseline,
+    tuned, hdfs, rocksdb, passthrough.
 
     This is TELEMETRY, not a declared query: bench.py records the result
     in BENCH_full.json's `streaming` block next to the reference kernel's
@@ -112,225 +201,85 @@ def ingest_throughput(
     watermark state + windowed aggregation + sink commit per batch."""
     ev = load(spark, sf, "events")
     n_rows = ev.count()
-    d = tempfile.mkdtemp(prefix="ingest_tput_")
-    d2 = ""
-    try:
+    cores = spark.sparkContext.defaultParallelism
+    # tuned leg (VERDICT r11 item 4): the baseline is commit-bound - the
+    # session-default 32 shuffle partitions mean 32 state-store commits
+    # per micro-batch for ~120 (window, type) groups, and 1-file triggers
+    # sit below the per-batch planning floor.  Its two production levers:
+    # shuffle partitions sized to the state cardinality (measured r12:
+    # 32 -> 8 -> 4 parts = 10.7k -> 26k -> 30k rec/s) and 4 files per
+    # trigger (2 micro-batches amortize the fixed plan+commit cost).
+    # RocksDB measured SLOWER here (20k vs 26k at 8 parts): its native-store
+    # overhead only pays off when state exceeds heap.
+    tuned_parts, tuned_mfpt = 4, 4
+    # high-cardinality legs (VERDICT r12 item 7): the same plan keyed by
+    # event_id % 100_000 (>= 1e5 state entries, the dedup-shaped worst
+    # case) timed under BOTH state store providers, re-justifying the store
+    # choice where the HDFS-backed store's in-heap posture could flip; 8
+    # shuffle partitions (100k entries across 4 stores would serialize the
+    # commit).  Each leg PINS its provider (ADVICE r13): a session that
+    # arrived with RocksDB set must not time the 'hdfs' leg under it.
+    hk_parts = 8
+    highk = (F.col("event_id") % 100_000).alias("k")
+    runs = [
+        ("baseline", 1, "event_type", {}),
+        ("tuned", tuned_mfpt, "event_type", {_PARTS: str(tuned_parts)}),
+    ] + [
+        (store, tuned_mfpt, highk, {_PARTS: str(hk_parts), _STORE: cls})
+        for store, cls in _STATE_STORES.items()
+    ]
+    legs = {}
+    with tempfile.TemporaryDirectory(prefix="ingest_tput_") as d:
         ev.repartition(n_batches).write.mode("overwrite").parquet(d)
-        src = spark.readStream.schema(ev.schema).option(
-            "maxFilesPerTrigger", 1
-        ).parquet(d)
-        agg = (
-            src.withWatermark("ts", "10 minutes")
-            .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-            .agg(
-                F.count("*").alias("n"),
-                pround(F.sum("value"), 2).alias("value_sum"),
-            )
-        )
-        t0 = time.perf_counter()
-        q = (
-            agg.writeStream.outputMode("append")
-            .format("noop")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        wall = time.perf_counter() - t0
-        batches = [
-            {
-                "rows": p["numInputRows"],
-                "trigger_ms": p["durationMs"].get("triggerExecution"),
-            }
-            for p in (q.recentProgress or [])
-            if p.get("numInputRows", 0) > 0
-        ]
-        # tuned stateful leg (VERDICT r11 item 4): the baseline above is
-        # commit-bound - with session-default 32 shuffle partitions every
-        # micro-batch pays 32 state-store commits + checkpoint delta
-        # writes for a handful of (window, type) groups, and the 1-file
-        # trigger keeps batches far below the per-batch planning floor.
-        # The two production levers, both recorded in the payload:
-        #   - state width: shuffle partitions sized to the STATE
-        #     cardinality (~120 window x type groups), not the session
-        #     default - 4 state stores instead of 32 (measured r12:
-        #     32 -> 8 -> 4 parts = 10.7k -> 26k -> 30k rec/s);
-        #   - trigger sizing: 4 files per trigger -> 2 micro-batches, so
-        #     the fixed plan+commit cost amortizes over 4x the rows (the
-        #     trigger-interval knob every production stream tunes first).
-        # RocksDB was measured SLOWER here (20k vs 26k at 8 parts): its
-        # native-store overhead only pays off when state exceeds heap,
-        # which ~120 groups never does.
-        tuned_parts, tuned_mfpt = 4, 4
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(tuned_parts))
-        try:
-            src_t = spark.readStream.schema(ev.schema).option(
-                "maxFilesPerTrigger", tuned_mfpt
-            ).parquet(d)
-            agg_t = (
-                src_t.withWatermark("ts", "10 minutes")
-                .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-                .agg(
-                    F.count("*").alias("n"),
-                    pround(F.sum("value"), 2).alias("value_sum"),
+        for leg, mfpt, key, conf in runs:
+            with _scoped_conf(spark, conf):
+                src = (
+                    spark.readStream.schema(ev.schema)
+                    .option("maxFilesPerTrigger", mfpt)
+                    .parquet(d)
                 )
-            )
-            t0 = time.perf_counter()
-            qt = (
-                agg_t.writeStream.outputMode("append")
-                .format("noop")
-                .trigger(availableNow=True)
-                .start()
-            )
-            qt.awaitTermination()
-            wall_tuned = time.perf_counter() - t0
-            lat_t = sorted(
-                p["durationMs"].get("triggerExecution")
-                for p in (qt.recentProgress or [])
-                if p.get("numInputRows", 0) > 0
-            )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        # high-cardinality stateful leg (VERDICT r12 item 7): the tuned
-        # block above holds ~120 (window, type) groups - a state size
-        # where the RocksDB-off call is obvious but does not generalize.
-        # This leg keys the same watermark+window plan by event_id %
-        # 100_000 (~1 state entry per row - the dedup-shaped worst case,
-        # >= 1e5 keys) and times the SAME rig under BOTH state store
-        # providers, so the store choice is re-justified at the scale
-        # where the HDFS-backed store's in-heap posture could flip.
-        # Shuffle width goes back up with the state (100k entries across
-        # 4 stores would serialize the commit); 8 matches the bench
-        # session width.
-        hk_parts = 8
-        hk = {}
-        prev_store = spark.conf.get(
-            "spark.sql.streaming.stateStore.providerClass", ""
-        )
-        spark.conf.set("spark.sql.shuffle.partitions", str(hk_parts))
-        try:
-            # both legs PIN their provider class explicitly (ADVICE r13):
-            # the old 'hdfs' leg restored prev_store/unset, so a session
-            # that arrived with a non-default provider (e.g. RocksDB)
-            # silently ran the 'hdfs'-labeled timing under that provider
-            # and the telemetry keys lied
-            for store, cls in (
-                (
-                    "hdfs",
-                    "org.apache.spark.sql.execution.streaming.state."
-                    "HDFSBackedStateStoreProvider",
-                ),
-                (
-                    "rocksdb",
-                    "org.apache.spark.sql.execution.streaming.state."
-                    "RocksDBStateStoreProvider",
-                ),
-            ):
-                spark.conf.set(
-                    "spark.sql.streaming.stateStore.providerClass", cls
-                )
-                src_h = spark.readStream.schema(ev.schema).option(
-                    "maxFilesPerTrigger", tuned_mfpt
-                ).parquet(d)
-                agg_h = (
-                    src_h.withWatermark("ts", "10 minutes")
-                    .groupBy(
-                        F.window("ts", "1 hour").alias("w"),
-                        (F.col("event_id") % 100_000).alias("k"),
-                    )
-                    .agg(
-                        F.count("*").alias("n"),
-                        pround(F.sum("value"), 2).alias("value_sum"),
-                    )
-                )
-                t0 = time.perf_counter()
-                qh = (
-                    agg_h.writeStream.outputMode("append")
-                    .format("noop")
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                qh.awaitTermination()
-                hk[store] = round(time.perf_counter() - t0, 4)
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-            if prev_store:
-                spark.conf.set(
-                    "spark.sql.streaming.stateStore.providerClass", prev_store
-                )
-            else:
-                spark.conf.unset(
-                    "spark.sql.streaming.stateStore.providerClass"
-                )
-        # pass-through normalize leg (the apples-to-apples line against the
-        # reference kernel, which is a stateless per-record normalize loop):
-        # ONE availableNow batch (no per-trigger floor), a representative
-        # stateless normalize chain (timestamp render, case fold, unit
-        # scale, JSON tag extract, validity filter), noop sink - no
-        # watermark, no state store, no shuffle.  The source is the events
-        # replicated 8x: at fixture scale Structured Streaming's 1-2 s
-        # fixed start/commit cost would otherwise BE the measurement; the
-        # replication amortizes it so the number reads on the kernel.
-        rep = 8
-        d2 = tempfile.mkdtemp(prefix="ingest_tput_pt_")
+                legs[leg] = _noop_drain(_hourly_agg(src, key))
+    # pass-through leg (the apples-to-apples line against the reference's
+    # stateless per-record normalize loop): ONE availableNow batch of a
+    # stateless normalize chain (timestamp render, case fold, unit scale,
+    # JSON tag extract, validity filter) - no watermark, state or shuffle.
+    # The events are replicated 8x: at fixture scale Structured Streaming's
+    # 1-2 s fixed start/commit cost would otherwise BE the measurement.
+    rep = 8
+    with tempfile.TemporaryDirectory(prefix="ingest_tput_pt_") as d2:
         ev.crossJoin(
             spark.range(rep).select(F.col("id").alias("_rep"))
         ).drop("_rep").repartition(n_batches).write.mode("overwrite").parquet(
             d2
         )
-        src_pt = spark.readStream.schema(ev.schema).parquet(d2)
-        norm = src_pt.select(
-            "event_id",
-            F.unix_millis(F.col("ts")).alias("ts_ms"),
-            F.upper("event_type").alias("event_type"),
-            (F.col("value") * 100).cast("long").alias("value_cents"),
-            F.get_json_object("props", "$.k").cast("long").alias("tag_k"),
-        ).filter(F.col("event_type").isNotNull())
-        t1 = time.perf_counter()
-        q2 = (
-            norm.writeStream.outputMode("append")
-            .format("noop")
-            .trigger(availableNow=True)
-            .start()
+        norm = (
+            spark.readStream.schema(ev.schema)
+            .parquet(d2)
+            .select(
+                "event_id",
+                F.unix_millis(F.col("ts")).alias("ts_ms"),
+                F.upper("event_type").alias("event_type"),
+                (F.col("value") * 100).cast("long").alias("value_cents"),
+                F.get_json_object("props", "$.k").cast("long").alias("tag_k"),
+            )
+            .filter(F.col("event_type").isNotNull())
         )
-        q2.awaitTermination()
-        wall_pt = time.perf_counter() - t1
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-        if d2:
-            shutil.rmtree(d2, ignore_errors=True)
-    lat = sorted(
-        b["trigger_ms"] for b in batches if b["trigger_ms"] is not None
-    )
-    cores = spark.sparkContext.defaultParallelism
+        wall_pt, _ = _noop_drain(norm)
+    wall, lat = legs["baseline"]
+    wall_tuned, lat_t = legs["tuned"]
+    wall_hdfs = round(legs["hdfs"][0], 4)
+    wall_rocksdb = round(legs["rocksdb"][0], 4)
     return {
-        "rows": n_rows,
-        "n_batches": len(batches),
-        "wall_sec": round(wall, 4),
-        "rec_per_sec": round(n_rows / wall, 1) if wall > 0 else None,
-        "rec_per_sec_per_core": (
-            round(n_rows / wall / cores, 1) if wall > 0 and cores else None
-        ),
+        **_leg(n_rows, wall, cores),
+        "n_batches": len(lat),
         "batch_ms_p50": lat[len(lat) // 2] if lat else None,
         "batch_ms_max": lat[-1] if lat else None,
         "cores": cores,
         "stateful_tuned": {
-            "rows": n_rows,
+            **_leg(n_rows, wall_tuned, cores),
             "n_batches": len(lat_t),
-            "wall_sec": round(wall_tuned, 4),
-            "rec_per_sec": (
-                round(n_rows / wall_tuned, 1) if wall_tuned > 0 else None
-            ),
-            "rec_per_sec_per_core": (
-                round(n_rows / wall_tuned / cores, 1)
-                if wall_tuned > 0 and cores
-                else None
-            ),
             "batch_ms_p50": lat_t[len(lat_t) // 2] if lat_t else None,
-            "knobs": {
-                "spark.sql.shuffle.partitions": tuned_parts,
-                "maxFilesPerTrigger": tuned_mfpt,
-            },
+            "knobs": {_PARTS: tuned_parts, "maxFilesPerTrigger": tuned_mfpt},
             "note": (
                 "same watermark+window+agg plan and the same "
                 f"{n_rows}-row rig as the baseline block; state width "
@@ -343,20 +292,11 @@ def ingest_throughput(
         "stateful_highk": {
             "rows": n_rows,
             "state_keys": "~1e5 (window x event_id % 100000)",
-            "wall_sec_hdfs": hk.get("hdfs"),
-            "wall_sec_rocksdb": hk.get("rocksdb"),
-            "rec_per_sec_hdfs": (
-                round(n_rows / hk["hdfs"], 1) if hk.get("hdfs") else None
-            ),
-            "rec_per_sec_rocksdb": (
-                round(n_rows / hk["rocksdb"], 1)
-                if hk.get("rocksdb")
-                else None
-            ),
-            "knobs": {
-                "spark.sql.shuffle.partitions": hk_parts,
-                "maxFilesPerTrigger": tuned_mfpt,
-            },
+            "wall_sec_hdfs": wall_hdfs,
+            "wall_sec_rocksdb": wall_rocksdb,
+            "rec_per_sec_hdfs": _rate(n_rows, wall_hdfs),
+            "rec_per_sec_rocksdb": _rate(n_rows, wall_rocksdb),
+            "knobs": {_PARTS: hk_parts, "maxFilesPerTrigger": tuned_mfpt},
             "note": (
                 "same watermark+window plan keyed by event_id % 100000 "
                 "(>= 1e5 state entries, the dedup-shaped regime) timed "
@@ -366,16 +306,7 @@ def ingest_throughput(
             ),
         },
         "passthrough": {
-            "rows": n_rows * rep,
-            "wall_sec": round(wall_pt, 4),
-            "rec_per_sec": (
-                round(n_rows * rep / wall_pt, 1) if wall_pt > 0 else None
-            ),
-            "rec_per_sec_per_core": (
-                round(n_rows * rep / wall_pt / cores, 1)
-                if wall_pt > 0 and cores
-                else None
-            ),
+            **_leg(n_rows * rep, wall_pt, cores),
             "note": (
                 f"stateless normalize chain over the events replicated "
                 f"{rep}x, one availableNow batch, noop sink - the shape "
@@ -390,21 +321,13 @@ def stream_ingest_pipeline(spark: SparkSession, sf: str) -> DataFrame:
     """The ingest pipeline shape (3.1) on a stream: event-time watermark +
     tumbling window + per-type agg, drained with availableNow.  Matches
     win_tumbling_1h output on the same data (asserted in tests)."""
-    ev = _events_stream(spark, sf)
-    agg = (
-        ev.withWatermark("ts", "10 minutes")
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count("*").alias("n"), pround(F.sum("value"), 2).alias("value_sum"))
-        .select(
-            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("hour_start"),
-            "event_type",
-            "n",
-            "value_sum",
-        )
+    agg = _hourly_agg(_events_stream(spark, sf), "event_type").select(
+        F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("hour_start"),
+        "event_type",
+        "n",
+        "value_sum",
     )
-    name = "stream_ingest_out"
-    run_to_memory(agg, name)
-    return spark.table(name)
+    return run_to_memory(agg, "stream_ingest_out")
 
 
 @query("stream_dedup")
@@ -420,9 +343,7 @@ def stream_dedup(spark: SparkSession, sf: str) -> DataFrame:
         .groupBy("event_type")
         .agg(F.count("*").alias("n_unique"))
     )
-    name = "stream_dedup_out"
-    run_to_memory(deduped, name, output_mode="complete")
-    return spark.table(name)
+    return run_to_memory(deduped, "stream_dedup_out", output_mode="complete")
 
 
 @query("stream_late_drop")
@@ -478,9 +399,7 @@ def stream_late_drop(spark: SparkSession, sf: str) -> DataFrame:
                 "n",
             )
         )
-        name = "stream_late_out"
-        run_to_memory(agg, name)
-        return spark.table(name)
+        return run_to_memory(agg, "stream_late_out")
 
 
 @query("stream_session_window")
@@ -500,11 +419,9 @@ def stream_session_window(spark: SparkSession, sf: str) -> DataFrame:
             "n_events",
         )
     )
-    name = "stream_session_out"
     # complete mode: append would hold back sessions still inside the
     # watermark when the bounded stream ends (the last hour of data)
-    run_to_memory(agg, name, output_mode="complete")
-    return spark.table(name)
+    return run_to_memory(agg, "stream_session_out", output_mode="complete")
 
 
 @query("stream_stateful_counts")
@@ -576,11 +493,9 @@ def stream_stateful_counts(spark: SparkSession, sf: str) -> DataFrame:
             "update",
             GroupStateTimeout.NoTimeout,
         )
-        name = "stream_stateful_out"
-        run_to_memory(out, name, output_mode="update")
         # keep the LAST update per key = totals across all micro-batches
         return (
-            spark.table(name)
+            run_to_memory(out, "stream_stateful_out", output_mode="update")
             .groupBy("user_id")
             .agg(
                 F.max("n_events").alias("n_events"),
@@ -589,16 +504,10 @@ def stream_stateful_counts(spark: SparkSession, sf: str) -> DataFrame:
         )
 
 
-@query("stream_stream_join")
-def stream_stream_join(spark: SparkSession, sf: str) -> DataFrame:
-    """Watermarked stream-stream inner join: clicks joined to purchases by
-    the same user within [click_ts, click_ts + 1 hour].  Both sides carry
-    watermarks and the join condition time-bounds state retention, so each
-    side's buffered rows are evicted once the other side's watermark passes
-    click_ts + 1h - bounded state at any scale (the unbounded-state
-    cross-stream join is rejected by Spark in append mode).  The batch dual
-    join_interval_overlap shares the semantics; row counts are asserted
-    against a static self-join in tests."""
+def _click_purchase_join(spark: SparkSession, sf: str, how: str) -> DataFrame:
+    """Clicks joined to the same user's purchases within [click_ts,
+    click_ts + 1 hour], both sides watermarked 30 minutes - the shared body
+    of stream_stream_join (`how="inner"`) and its left-outer twin."""
     clicks = (
         _events_stream(spark, sf)
         .filter(F.col("event_type") == "click")
@@ -619,12 +528,12 @@ def stream_stream_join(spark: SparkSession, sf: str) -> DataFrame:
         )
         .withWatermark("purchase_ts", "30 minutes")
     )
-    joined = clicks.join(
+    return clicks.join(
         purchases,
         (F.col("c_user") == F.col("p_user"))
         & (F.col("purchase_ts") >= F.col("click_ts"))
         & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 1 HOUR")),
-        "inner",
+        how,
     ).select(
         F.col("c_user").alias("user_id"),
         "click_id",
@@ -632,9 +541,21 @@ def stream_stream_join(spark: SparkSession, sf: str) -> DataFrame:
         F.unix_timestamp("click_ts").alias("click_epoch"),
         F.unix_timestamp("purchase_ts").alias("purchase_epoch"),
     )
-    name = "stream_stream_join_out"
-    run_to_memory(joined, name)
-    return spark.table(name)
+
+
+@query("stream_stream_join")
+def stream_stream_join(spark: SparkSession, sf: str) -> DataFrame:
+    """Watermarked stream-stream inner join: clicks joined to purchases by
+    the same user within [click_ts, click_ts + 1 hour].  Both sides carry
+    watermarks and the join condition time-bounds state retention, so each
+    side's buffered rows are evicted once the other side's watermark passes
+    click_ts + 1h - bounded state at any scale (the unbounded-state
+    cross-stream join is rejected by Spark in append mode).  The batch dual
+    join_interval_overlap shares the semantics; row counts are asserted
+    against a static self-join in tests."""
+    return run_to_memory(
+        _click_purchase_join(spark, sf, "inner"), "stream_stream_join_out"
+    )
 
 
 @query("stream_stream_join_outer")
@@ -653,43 +574,10 @@ def stream_stream_join_outer(spark: SparkSession, sf: str) -> DataFrame:
     rows never emit.  Tests assert the inner rows equal
     stream_stream_join's and that null-padded rows exist and are
     click-unique."""
-    clicks = (
-        _events_stream(spark, sf)
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("click_ts"),
-            F.col("event_id").alias("click_id"),
-        )
-        .withWatermark("click_ts", "30 minutes")
+    joined = _click_purchase_join(spark, sf, "leftOuter").withColumn(
+        "matched", F.col("purchase_id").isNotNull()
     )
-    purchases = (
-        _events_stream(spark, sf)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("purchase_ts"),
-            F.col("event_id").alias("purchase_id"),
-        )
-        .withWatermark("purchase_ts", "30 minutes")
-    )
-    joined = clicks.join(
-        purchases,
-        (F.col("c_user") == F.col("p_user"))
-        & (F.col("purchase_ts") >= F.col("click_ts"))
-        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 1 HOUR")),
-        "leftOuter",
-    ).select(
-        F.col("c_user").alias("user_id"),
-        "click_id",
-        "purchase_id",
-        F.unix_timestamp("click_ts").alias("click_epoch"),
-        F.unix_timestamp("purchase_ts").alias("purchase_epoch"),
-        F.col("purchase_id").isNotNull().alias("matched"),
-    )
-    name = "stream_stream_join_outer_out"
-    run_to_memory(joined, name)
-    return spark.table(name)
+    return run_to_memory(joined, "stream_stream_join_outer_out")
 
 
 @query(
@@ -815,11 +703,9 @@ def stream_windowed_topk(spark: SparkSession, sf: str) -> DataFrame:
             "n",
         )
     )
-    name = "stream_windowed_topk_out"
-    run_to_memory(agg, name, output_mode="complete")
     w = W.partitionBy("hour_start").orderBy(F.desc("n"), "event_type")
     return (
-        spark.table(name)
+        run_to_memory(agg, "stream_windowed_topk_out", output_mode="complete")
         .withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= 3)
     )
@@ -845,9 +731,7 @@ def stream_static_enrich(spark: SparkSession, sf: str) -> DataFrame:
         .groupBy("c_mktsegment", "event_type")
         .agg(F.count("*").alias("n"), pround(F.sum("value"), 2).alias("value_sum"))
     )
-    name = "stream_static_enrich_out"
-    run_to_memory(agg, name, output_mode="complete")
-    return spark.table(name)
+    return run_to_memory(agg, "stream_static_enrich_out", output_mode="complete")
 
 
 def _documents_stream(spark: SparkSession, sf: str) -> DataFrame:
@@ -912,9 +796,7 @@ def stream_minhash_dedup(spark: SparkSession, sf: str) -> DataFrame:
     kept = ex.withWatermark("ingest_ts", "24 hours").dropDuplicatesWithinWatermark(
         ["band_id", "sig"]
     )
-    name = "stream_minhash_dedup_out"
-    run_to_memory(kept, name)
-    won = spark.table(name).groupBy("doc_id").agg(
+    won = run_to_memory(kept, "stream_minhash_dedup_out").groupBy("doc_id").agg(
         F.count("*").cast("long").alias("n_band_wins")
     )
     # every document appears in the output (losing all bands = 0 wins)
@@ -962,14 +844,7 @@ def stream_attribution_state(
     with tempfile.TemporaryDirectory(prefix="attrib_state_") as tmp:
         # file source picks oldest mtime first: earlier quantile batches
         # are strictly older, so they replay as earlier micro-batches
-        _write_time_batches(ev, tmp, "ts_us", cuts)
-        stream = (
-            spark.readStream.schema(
-                "event_id long, user_id long, event_type string, ts_us long"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(os.path.join(tmp, "half=*"))
-        )
+        stream = _write_time_batches(ev, tmp, "ts_us", cuts)
 
         seven_days_us = 7 * 24 * 3600 * 1_000_000
 
@@ -991,7 +866,7 @@ def stream_attribution_state(
                 for row in pdf.sort_values(["ts_us", "event_id"]).itertuples():
                     if row.event_type == "click":
                         cid, cts = int(row.event_id), int(row.ts_us)
-                    elif cts is not None and row.ts_us - cts <= 604800000000:
+                    elif cts is not None and row.ts_us - cts <= seven_days_us:
                         out_pid.append(int(row.event_id))
                         out_cid.append(cid)
                         out_lag.append(int(row.ts_us) - cts)
@@ -1006,7 +881,6 @@ def stream_attribution_state(
                 }
             )
 
-        assert seven_days_us == 604800000000  # literal inlined in worker
         out = stream.groupBy("user_id").applyInPandasWithState(
             update,
             "purchase_id long, user_id long, attributed_click_id long, lag_us long",
@@ -1014,9 +888,7 @@ def stream_attribution_state(
             "append",
             GroupStateTimeout.NoTimeout,
         )
-        name = "stream_attribution_out"
-        run_to_memory(out, name)
-        return spark.table(name)
+        return run_to_memory(out, "stream_attribution_out")
 
 
 def _apply_inactivity_flush(stream: DataFrame) -> DataFrame:
@@ -1101,19 +973,12 @@ def stream_inactivity_flush(
         "value",
     )
     with tempfile.TemporaryDirectory(prefix="inactivity_") as tmp:
-        _write_time_batches(ev, tmp, F.unix_micros("ts"), cuts)
-        stream = (
-            spark.readStream.schema(
-                "event_id long, user_id long, day string, ts timestamp, value double"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(os.path.join(tmp, "half=*"))
-            .withWatermark("ts", "10 minutes")
+        stream = _write_time_batches(
+            ev, tmp, F.unix_micros("ts"), cuts
+        ).withWatermark("ts", "10 minutes")
+        return run_to_memory(
+            _apply_inactivity_flush(stream), "stream_inactivity_out"
         )
-        out = _apply_inactivity_flush(stream)
-        name = "stream_inactivity_out"
-        run_to_memory(out, name)
-        return spark.table(name)
 
 
 def _cdc_merge_fn(spark: SparkSession, state_dir: str):
@@ -1178,15 +1043,7 @@ def stream_cdc_upsert(spark: SparkSession, sf: str, *, cuts=(0.5,)) -> DataFrame
     with tempfile.TemporaryDirectory(prefix="cdc_upsert_") as tmp:
         src = os.path.join(tmp, "src")
         state_dir = os.path.join(tmp, "state")
-        _write_time_batches(ev, src, "ts_us", cuts)
-        stream = (
-            spark.readStream.schema(
-                "event_id long, user_id long, event_type string, ts_us long"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(os.path.join(src, "half=*"))
-        )
-
+        stream = _write_time_batches(ev, src, "ts_us", cuts)
         q = (
             stream.writeStream.foreachBatch(_cdc_merge_fn(spark, state_dir))
             .trigger(availableNow=True)
@@ -1227,12 +1084,10 @@ def stream_sliding_hll(spark: SparkSession, sf: str) -> DataFrame:
             "n_users_approx",
         )
     )
-    name = "stream_sliding_hll_out"
     # complete mode: append would hold back the final windows still inside
     # the watermark when the bounded stream ends (stream_session_window's
     # rationale)
-    run_to_memory(agg, name, output_mode="complete")
-    return spark.table(name)
+    return run_to_memory(agg, "stream_sliding_hll_out", output_mode="complete")
 
 
 @query("stream_ohlc_bars")
@@ -1281,9 +1136,7 @@ def stream_ohlc_bars(spark: SparkSession, sf: str) -> DataFrame:
             "volume_cents",
         )
     )
-    name = "stream_ohlc_bars_out"
-    run_to_memory(agg, name, output_mode="complete")
-    return spark.table(name)
+    return run_to_memory(agg, "stream_ohlc_bars_out", output_mode="complete")
 
 
 @query(
@@ -1410,9 +1263,7 @@ def stream_countmin_merge(spark: SparkSession, sf: str) -> DataFrame:
     agg = quad.select("r", bucket.alias("bucket")).groupBy("r", "bucket").agg(
         F.count("*").alias("cnt")
     )
-    name = "stream_countmin_out"
-    run_to_memory(agg, name, output_mode="complete")
-    sketch = spark.table(name)
+    sketch = run_to_memory(agg, "stream_countmin_out", output_mode="complete")
     # probe stage (batch): exact top-10 users vs their sketch estimates
     ev_b = load(spark, sf, "events")
     exact = (
@@ -1460,6 +1311,4 @@ def stream_media_decode(spark: SparkSession, sf: str) -> DataFrame:
 
     docs = _documents_stream(spark, sf).select("doc_id")
     stats = decode_media_stats(synthesize_media_assets(docs))
-    name = "stream_media_decode_out"
-    run_to_memory(stats, name)
-    return spark.table(name)
+    return run_to_memory(stats, "stream_media_decode_out")

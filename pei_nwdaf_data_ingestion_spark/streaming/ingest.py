@@ -58,9 +58,10 @@ def build_ingest_stream(
 
 def run_to_memory(
     stream: DataFrame, name: str, output_mode: str = "append"
-) -> None:
-    """Drain a bounded stream synchronously into an in-memory table (test
-    harness; production sinks are foreachBatch -> Kafka / keyed fan-out)."""
+) -> DataFrame:
+    """Drain a bounded stream synchronously into the in-memory table `name`
+    and return that table (test harness and declared streaming queries;
+    production sinks are foreachBatch -> Kafka / keyed fan-out)."""
     q = (
         stream.writeStream.outputMode(output_mode)
         .format("memory")
@@ -69,6 +70,7 @@ def run_to_memory(
         .start()
     )
     q.awaitTermination()
+    return stream.sparkSession.table(name)
 
 
 class DiscoveredFieldsAccumulator:

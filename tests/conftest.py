@@ -204,6 +204,8 @@ _SLOW_NODEIDS = {
     "tests/test_result_digest.py::TestRowsOnlyWrap::test_digest_is_constant_stable_and_value_preserving[graph_pagerank_converged]",
     "tests/test_streaming.py::test_cdc_upsert_recovers_from_checkpoint_restart",
     "tests/test_streaming.py::test_inactivity_flush_recovers_from_checkpoint_restart",
+    "tests/test_streaming.py::test_ingest_throughput_payload_and_conf_restore[store_rocksdb]",
+    "tests/test_streaming.py::test_ingest_throughput_payload_and_conf_restore[store_unset]",
     "tests/test_streaming.py::test_stream_attribution_invariant_under_batch_boundaries[cuts0.25-0.75]",
     "tests/test_streaming.py::test_stream_attribution_invariant_under_batch_boundaries[cuts0.25]",
     "tests/test_streaming.py::test_stream_attribution_invariant_under_batch_boundaries[cuts0.75]",

@@ -864,6 +864,22 @@ def _cut_id(c):
     return "cuts" + "-".join(str(x) for x in c)
 
 
+@pytest.mark.parametrize(
+    "cuts", [(0.75, 0.25), (0.5, 1.0)], ids=["descending", "out_of_range"]
+)
+def test_write_time_batches_rejects_bad_cuts(spark, tmp_path, cuts):
+    """A bad cut set raises ValueError (not an assert, which `python -O`
+    strips) before anything is written."""
+    from pei_nwdaf_data_ingestion_spark.queries.streaming_queries import (
+        _write_time_batches,
+    )
+
+    df = spark.range(4).withColumnRenamed("id", "ts_us")
+    with pytest.raises(ValueError, match="cuts"):
+        _write_time_batches(df, str(tmp_path / "batches"), "ts_us", cuts)
+    assert not os.path.exists(tmp_path / "batches")
+
+
 @pytest.mark.parametrize("cuts", _CUT_SETS, ids=_cut_id)
 def test_stream_attribution_invariant_under_batch_boundaries(spark, cuts):
     """Watermark/ordering correctness as a PROPERTY: the attributed set
@@ -1154,3 +1170,95 @@ def test_stream_media_decode_matches_batch_dual(spark):
         map(tuple, registry.QUERIES["multimodal_decode"](spark, sf).collect())
     )
     assert got == want and len(got) > 0
+
+
+# ---------------------------------------------------------------------------
+# ingest_throughput: the streaming block of BENCH_full.json
+# ---------------------------------------------------------------------------
+
+_STORE_KEY = "spark.sql.streaming.stateStore.providerClass"
+_ROCKSDB = (
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+)
+_RATE = {"wall_sec": None, "rec_per_sec": None, "rec_per_sec_per_core": None}
+_KNOBS = {"spark.sql.shuffle.partitions": None, "maxFilesPerTrigger": None}
+# every key bench.stdout_line and BENCH_full.json read
+_TPUT_TREE = {
+    "rows": None,
+    "n_batches": None,
+    **_RATE,
+    "batch_ms_p50": None,
+    "batch_ms_max": None,
+    "cores": None,
+    "stateful_tuned": {
+        "rows": None,
+        "n_batches": None,
+        **_RATE,
+        "batch_ms_p50": None,
+        "knobs": _KNOBS,
+        "note": None,
+    },
+    "stateful_highk": {
+        "rows": None,
+        "state_keys": None,
+        "wall_sec_hdfs": None,
+        "wall_sec_rocksdb": None,
+        "rec_per_sec_hdfs": None,
+        "rec_per_sec_rocksdb": None,
+        "knobs": _KNOBS,
+        "note": None,
+    },
+    "passthrough": {"rows": None, **_RATE, "note": None},
+}
+
+
+def _key_tree(d: dict) -> dict:
+    return {k: _key_tree(v) if isinstance(v, dict) else None for k, v in d.items()}
+
+
+@pytest.mark.parametrize(
+    "arrived_store", [None, _ROCKSDB], ids=["store_unset", "store_rocksdb"]
+)
+def test_ingest_throughput_payload_and_conf_restore(spark, arrived_store):
+    """The telemetry payload keeps bench's key tree and its counts follow
+    the rig (2 files -> 2 one-file batches, 1 four-file batch, 8x rows in
+    the pass-through leg), and the legs hand the session back with its
+    shuffle width and state-store provider as they arrived - RocksDB set,
+    or the provider unset."""
+    from pei_nwdaf_data_ingestion_spark.catalog import load
+    from pei_nwdaf_data_ingestion_spark.queries.streaming_queries import (
+        ingest_throughput,
+    )
+
+    sf = "/root/testdata/sf0.001"
+    prior = spark.conf.get(_STORE_KEY, None)
+    parts = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        if arrived_store is None:
+            spark.conf.unset(_STORE_KEY)
+        else:
+            spark.conf.set(_STORE_KEY, arrived_store)
+        tel = ingest_throughput(spark, sf, n_batches=2)
+        assert spark.conf.get("spark.sql.shuffle.partitions") == parts
+        assert spark.conf.get(_STORE_KEY, None) == arrived_store
+    finally:
+        if prior is None:
+            spark.conf.unset(_STORE_KEY)
+        else:
+            spark.conf.set(_STORE_KEY, prior)
+
+    assert _key_tree(tel) == _TPUT_TREE
+    rows = load(spark, sf, "events").count()
+    assert tel["rows"] == tel["stateful_tuned"]["rows"] == rows
+    assert tel["stateful_highk"]["rows"] == rows
+    assert tel["n_batches"] == 2
+    assert tel["stateful_tuned"]["n_batches"] == 1
+    assert tel["passthrough"]["rows"] == 8 * rows
+    assert tel["stateful_tuned"]["knobs"] == {
+        "spark.sql.shuffle.partitions": 4,
+        "maxFilesPerTrigger": 4,
+    }
+    assert tel["stateful_highk"]["knobs"] == {
+        "spark.sql.shuffle.partitions": 8,
+        "maxFilesPerTrigger": 4,
+    }

@@ -1,10 +1,12 @@
 """Driver simulation: vanilla SparkSession, sf0.01, every oracled query
-hash-compared against DuckDB (order-insensitive, dtype-exact).
+hash-compared against DuckDB (order-insensitive, dtype-exact).  At the
+scale tools/rows_only_digests.json was pinned at (its `_sf_dir`), every
+oracle-less id's result_digest and row count must equal its pin.
 
 Usage: python tools/driver_sim.py [query-id ...]
 Ids on the command line run only those queries through the same compare
 (the targeted probe); no ids runs the whole gate."""
-import os, sys, time, hashlib
+import os, sys, time, hashlib, json
 import duckdb
 import pandas as pd
 import numpy as np
@@ -14,6 +16,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as e
 
 SF = os.environ.get("DRIVER_SIM_SF_DIR", "/root/testdata/sf0.01")
+with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                       "rows_only_digests.json")) as _fh:
+    _pins = json.load(_fh)
+# the pins hold only at the scale they were recorded at
+PINS = _pins if _pins["_sf_dir"] == SF else {}
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
 # DRIVER_SIM_CORES / DRIVER_SIM_PARTITIONS override the layout: running
@@ -78,7 +85,19 @@ for name in names:
         print(f"FAIL {name}: spark error {ex}")
         continue
     if name not in os_:
-        print(f"ok(rows-only) {name}: {len(sdf)} rows  {time.time()-t0:.1f}s")
+        pin = PINS.get(name)
+        if pin is None:
+            print(f"ok(rows-only) {name}: {len(sdf)} rows  {time.time()-t0:.1f}s")
+            continue
+        got = {
+            "result_digest": sdf["result_digest"].iloc[0] if len(sdf) else None,
+            "rows": len(sdf),
+        }
+        if got != pin:
+            fail.append((name, f"pin mismatch {got} vs {pin}"))
+            print(f"FAIL {name}: pin mismatch {got} vs {pin}")
+        else:
+            print(f"ok(pinned) {name}: {len(sdf)} rows  {time.time()-t0:.1f}s")
         continue
     try:
         odf = ddb.execute(os_[name]).df()
