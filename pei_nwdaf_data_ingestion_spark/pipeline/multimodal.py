@@ -15,7 +15,7 @@ identical vectors, near-identical content gives near-identical vectors,
 and the whole path is DuckDB-oracled (multimodal_feature_vectors).
 LEARNED embeddings (CLIP/wav2vec) would need model libraries this
 container lacks; they would slot in at the same closure with no Spark
-plumbing change - the import-try below marks the seam.
+plumbing change - _make_feature_extractor's closure is the seam.
 
 Scale notes: media blobs make rows wide - the repartition knob on
 extract_features keeps Arrow batches bounded; feature extraction is
@@ -33,13 +33,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-try:  # real decoders, if the environment has them
-    from PIL import Image  # noqa: F401
-
-    HAVE_PIL = True
-except ImportError:
-    HAVE_PIL = False
 
 # features extracted per blob; fixed width so the schema is static
 N_FEATURES = 8

@@ -68,7 +68,7 @@ _PPJOIN_BROADCAST_BYTES = 256 << 20
 _MH_P = 999_999_937
 _MH_K = 12
 # salt width for the banded self-join's hot buckets (see
-# _minhash_verified_pairs): each bucket's pair space splits into this many
+# _banded_pairs): each bucket's pair space splits into this many
 # independent stripes so verification parallelizes even when one signature
 # covers half the corpus
 _MH_SALTS = 32
@@ -416,9 +416,40 @@ def dedup_ppjoin_prefix(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def minhash_verified_pairs_ctes(t: float = 0.8, cap: int | None = None) -> str:
+def _mh_cand_ctes(cap: int) -> str:
+    """DuckDB `hot0..hot3, cand` CTE text over a `banded` (doc_id,
+    band0..band3) CTE: the lowest-cold-band candidates plus the hot
+    buckets' star candidates (the rule is on minhash_verified_pairs_ctes).
+    One generator for the LSH pair chain and dedup_lsh_recall_audit's
+    oracle, which recomputes the same pair set."""
+    hot_ctes = ",\n    ".join(
+        f"hot{b} AS (SELECT band{b} AS s FROM banded "
+        f"GROUP BY band{b} HAVING count(*) > {cap})"
+        for b in range(4)
+    )
+    cand_unions = "\n      UNION\n      ".join(
+        f"SELECT x.doc_id AS doc_a, y.doc_id AS doc_b FROM banded x "
+        f"JOIN banded y ON x.band{b} = y.band{b} AND x.doc_id < y.doc_id "
+        f"WHERE x.band{b} NOT IN (SELECT s FROM hot{b})"
+        for b in range(4)
+    )
+    star_unions = "\n      UNION\n      ".join(
+        f"SELECT doc_a, doc_b FROM ("
+        f"SELECT min(doc_id) OVER (PARTITION BY band{b}) AS doc_a,"
+        f" doc_id AS doc_b "
+        f"FROM banded WHERE band{b} IN (SELECT s FROM hot{b})) "
+        f"WHERE doc_a <> doc_b"
+        for b in range(4)
+    )
+    return (
+        f"{hot_ctes},\n    cand AS (\n      "
+        f"{cand_unions}\n      UNION\n      {star_unions})"
+    )
+
+
+def minhash_verified_pairs_ctes(cap: int | None = None) -> str:
     """Shared DuckDB CTE chain `toks -> hk -> banded -> cand -> vpairs`:
-    the MinHash-banded candidate pairs, Jaccard-VERIFIED at threshold `t`
+    the MinHash-banded candidate pairs, Jaccard-VERIFIED at 0.8
     (vpairs carries doc_a, doc_b, jac).  One text, three consumers - the
     LSH oracle itself plus the LSH-fed clustering oracles
     (dedup_cluster_components / dedup_canonical_select), so the oracles
@@ -444,26 +475,6 @@ def minhash_verified_pairs_ctes(t: float = 0.8, cap: int | None = None) -> str:
     clustering fixpoint pre-converged; the set UNION absorbs star pairs
     that also cold-match."""
     cap = _MH_BUCKET_CAP if cap is None else cap
-    hot_ctes = ",\n    ".join(
-        f"hot{b} AS (SELECT band{b} AS s FROM banded "
-        f"GROUP BY band{b} HAVING count(*) > {cap})"
-        for b in range(4)
-    )
-    cand_unions = "\n      UNION\n      ".join(
-        f"SELECT x.doc_id AS doc_a, y.doc_id AS doc_b FROM banded x "
-        f"JOIN banded y ON x.band{b} = y.band{b} AND x.doc_id < y.doc_id "
-        f"WHERE x.band{b} NOT IN (SELECT s FROM hot{b})"
-        for b in range(4)
-    )
-    star_unions = "\n      UNION\n      ".join(
-        f"SELECT doc_a, doc_b FROM ("
-        f"SELECT min(doc_id) OVER (PARTITION BY band{b}) AS doc_a,"
-        f" doc_id AS doc_b "
-        f"FROM banded WHERE band{b} IN (SELECT s FROM hot{b})) "
-        f"WHERE doc_a <> doc_b"
-        for b in range(4)
-    )
-    cand_unions = cand_unions + "\n      UNION\n      " + star_unions
     return f"""toks AS (
       SELECT doc_id, list_distinct(string_split(text, ' ')) AS tokens
       FROM documents),
@@ -473,9 +484,7 @@ def minhash_verified_pairs_ctes(t: float = 0.8, cap: int | None = None) -> str:
     banded AS (
       SELECT doc_id, {_minhash_band_sql()}
       FROM hk),
-    {hot_ctes},
-    cand AS (
-      {cand_unions}),
+    {_mh_cand_ctes(cap)},
     vpairs AS MATERIALIZED (
       SELECT * FROM (
         SELECT c.doc_a, c.doc_b,
@@ -484,7 +493,7 @@ def minhash_verified_pairs_ctes(t: float = 0.8, cap: int | None = None) -> str:
         FROM cand c
         JOIN hk a ON a.doc_id = c.doc_a
         JOIN hk b ON b.doc_id = c.doc_b)
-      WHERE jac >= {t})"""
+      WHERE jac >= 0.8)"""
 
 
 def _minhash_lsh_oracle() -> str:
@@ -496,65 +505,30 @@ def _minhash_lsh_oracle() -> str:
     """
 
 
-def _minhash_verified_pairs(
-    spark: SparkSession, sf: str, t: float = 0.8, n_bands: int = 4
-) -> DataFrame:
+def _minhash_verified_pairs(spark: SparkSession, sf: str) -> DataFrame:
     """The MinHash-banded, Jaccard-VERIFIED pair set (doc_a, doc_b, jac) -
     shared by the pair-listing query (dedup_minhash_lsh) and the LSH-fed
     clustering (dedup_cluster_components / dedup_canonical_select).  The
     build is deterministic, so the checkpointed frame is stored per
-    (application, sf, t, n_bands) in the artifact store: the near-dup
-    pair index of a corpus is computed once and reused by every
-    downstream dedup step in any real pipeline.
-
-    Plan (the index-carrying spelling, same lesson as dedup_ppjoin_prefix):
-    the banded frame CARRIES the token arrays into four per-band
-    self-joins, so candidate generation, cross-band dedup and Jaccard
-    verification all happen inside the join tasks - nothing but true
-    matches ever leaves the stage.  Cross-band dedup is done with
-    PREDICATES, not a shuffle: band b's join also requires band{b'} to
-    DIFFER for every b' < b, so each candidate pair is verified exactly
-    once, in its lowest matching band (equivalent to the old
-    union+distinct+re-join spelling, minus a 15M-row distinct and two
-    7.7M-row token joins at sf0.1).  The jac predicate sits LAST in the
-    AND chain so the cheap band/id/size checks prune before any
-    array_intersect.  The banded frame is localCheckpoint-materialized
-    once and probed by all eight join branches.
-
-    On clique-heavy corpora one band bucket can dominate (sf0.1: 2654 of
-    5000 docs share a signature -> 3.5M of the band's pairs are generated
-    AND verified by the ONE task owning that join key).  AQE's skew-join
-    split cannot help: it detects oversized INPUT partitions, and a
-    quadratic self-join explodes tiny inputs into huge outputs.  So the
-    handled in two size-gated regimes (the dedup_ppjoin_prefix posture):
-    below _MH_BROADCAST_BYTES the banded frame BROADCASTS as the build
-    side, so every probe task enumerates + verifies its own rows' pairs
-    with no shuffle at all and parallelism = the probe partitioning
-    (per-doc triangular spread); beyond the gate the probe side fans each
-    row out to _MH_SALTS sub-keys against build-side pmod(doc_id,
-    _MH_SALTS), making (band, salt) the join key - a hot bucket's pair
-    space slices into _MH_SALTS independent stripes regardless of the
-    shuffle width.  Probe-side duplication is |corpus| x _MH_SALTS rows -
-    linear, the price of even verification spread, exactly the salting
-    posture join_skew_salted pins for facts."""
+    (application, sf) in the artifact store: the near-dup pair index of a
+    corpus is computed once and reused by every downstream dedup step in
+    any real pipeline.  The candidate+verify join is _banded_pairs (the
+    design notes live there) over every document's signature."""
     return artifacts.memo(
         spark, sf, "minhash_pairs",
-        lambda: _minhash_pairs_plan(spark, sf, t, n_bands).localCheckpoint(
-            eager=False
-        ),
-        t, n_bands,
+        lambda: _minhash_pairs_plan(spark, sf).localCheckpoint(eager=False),
     )
 
 
 def _minhash_signatures(spark: SparkSession, sf: str) -> DataFrame:
     """The shared per-document signature frame (doc_id, th, n_tok,
-    band0..band3): distinct-token xxhash64 arrays + the 4-band md5
-    minhash family (minhash_band_cols), checkpointed once per
-    (application, sf) in the artifact store.  The 128-hash family is the
-    dominant cost of BOTH dedup_minhash_lsh (all docs) and
-    dedup_two_stage (unique-text reps - a subset, since signatures depend
-    only on text), so one deterministic frame serves both (VERDICT r14
-    item 5).
+    band0..band3) - exactly _banded_pairs' input columns: distinct-token
+    xxhash64 arrays + the 4-band md5 minhash family (minhash_band_cols),
+    checkpointed once per (application, sf) in the artifact store.  The
+    _MH_K-hash family is the dominant cost of BOTH dedup_minhash_lsh (all
+    docs) and dedup_two_stage (unique-text reps - a subset, since
+    signatures depend only on text), so one deterministic frame serves
+    both (VERDICT r14 item 5).
     Verification runs on 64-bit token hashes, not the strings: the
     distinct-token sets map 1:1 to distinct-hash sets absent an xxhash64
     collision inside one pair's <=2x|doc|-token union (p < 1e-15 per
@@ -578,46 +552,73 @@ def _minhash_signatures(spark: SparkSession, sf: str) -> DataFrame:
     return artifacts.memo(spark, sf, "minhash_sig", build)
 
 
-def _minhash_pairs_plan(
-    spark: SparkSession,
-    sf: str,
-    t: float = 0.8,
-    n_bands: int = 4,
-    cap: int | None = None,
-) -> DataFrame:
-    """The un-checkpointed candidate+verify plan (see
-    _minhash_verified_pairs for the full design notes); split out so plan
+def _minhash_pairs_plan(spark: SparkSession, sf: str) -> DataFrame:
+    """dedup_minhash_lsh's un-checkpointed candidate+verify plan:
+    _banded_pairs over every document's signature.  Split out so plan
     tests can assert the join regimes - the cached wrapper replaces the
-    subtree with an RDD scan.  `cap` is the hot-bucket stop-band threshold
-    (defaults to _MH_BUCKET_CAP; tests pass a small value to exercise the
-    rule on tiny fixtures)."""
-    cap = _MH_BUCKET_CAP if cap is None else cap
+    subtree with an RDD scan."""
+    return _banded_pairs(_minhash_signatures(spark, sf), sf)
+
+
+def _banded_pairs(banded: DataFrame, sf: str, carry: tuple = ()) -> DataFrame:
+    """The MinHash banded self-join - candidates AND Jaccard verification
+    at 0.8 - behind both dedup_minhash_lsh (every document) and
+    dedup_two_stage (one representative per exact-text group).  `banded`
+    is (doc_id, th, n_tok, band0..band3, *carry); the result is (doc_a,
+    doc_b, jac, <c>_a, <c>_b for each carried column c) with doc_a <
+    doc_b.  `sf` only sizes the join regime (the documents file).
+
+    Plan (the index-carrying spelling, same lesson as dedup_ppjoin_prefix):
+    the banded frame CARRIES the token arrays into four per-band
+    self-joins, so candidate generation, cross-band dedup and Jaccard
+    verification all happen inside the join tasks - nothing but true
+    matches ever leaves the stage.  Cross-band dedup is done with
+    PREDICATES, not a shuffle: band b's join also requires band{b'} to
+    DIFFER for every b' < b, so each candidate pair is verified exactly
+    once, in its lowest matching band (equivalent to the old
+    union+distinct+re-join spelling, minus a 15M-row distinct and two
+    7.7M-row token joins at sf0.1).  The jac predicate sits LAST in the
+    AND chain so the cheap band/id/size checks prune before any
+    array_intersect.  The banded frame is localCheckpoint-materialized
+    once and probed by all eight join branches.
+
+    On clique-heavy corpora one band bucket can dominate (sf0.1: 2654 of
+    5000 docs share a signature -> 3.5M of the band's pairs are generated
+    AND verified by the ONE task owning that join key).  AQE's skew-join
+    split cannot help: it detects oversized INPUT partitions, and a
+    quadratic self-join explodes tiny inputs into huge outputs.  So the
+    join runs in two size-gated regimes (the dedup_ppjoin_prefix posture):
+    below _MH_BROADCAST_BYTES the banded frame BROADCASTS as the build
+    side, so every probe task enumerates + verifies its own rows' pairs
+    with no shuffle at all and parallelism = the probe partitioning
+    (per-doc triangular spread); beyond the gate the probe side fans each
+    row out to _MH_SALTS sub-keys against build-side pmod(doc_id,
+    _MH_SALTS), making (band, salt) the join key - a hot bucket's pair
+    space slices into _MH_SALTS independent stripes regardless of the
+    shuffle width.  Probe-side duplication is |corpus| x _MH_SALTS rows -
+    linear, the price of even verification spread, exactly the salting
+    posture join_skew_salted pins for facts."""
+    t = 0.8
+    bands = [f"band{b}" for b in range(4)]
+
+    def carried(pa: str, pb: str) -> list:
+        # <c>_a / <c>_b for each carried column, read off the two sides
+        return [
+            F.col(f"{p}{c}").alias(f"{c}_{s}")
+            for c in carry
+            for p, s in ((pa, "a"), (pb, "b"))
+        ]
+
     broadcast_build = (
         os.path.getsize(os.path.join(sf, "documents.parquet")) < _MH_BROADCAST_BYTES
     )
-    # the signature build (token hashing + the 128-hash minhash family -
-    # see _minhash_signatures) comes from the per-app shared frame when
-    # the band layout matches its 4-band default; a non-default n_bands
-    # (tests only) builds inline
-    if n_bands == 4:
-        base = _minhash_signatures(spark, sf)
-    else:
-        d = load(spark, sf, "documents")
-        toks = d.select(
-            "doc_id", F.array_distinct(F.split("text", " ")).alias("tokens")
-        )
-        base = toks.select(
-            "doc_id",
-            F.transform("tokens", lambda tk: F.xxhash64(tk)).alias("th"),
-            F.size("tokens").alias("n_tok"),
-            *minhash_band_cols(n_bands=n_bands),
-        ).localCheckpoint(eager=False)
-    banded = base.select(
+    banded = banded.select(
         "doc_id",
         "th",
         "n_tok",
         F.pmod("doc_id", F.lit(_MH_SALTS)).cast("int").alias("salt"),
-        *[f"band{b}" for b in range(n_bands)],
+        *bands,
+        *carry,
     )
     # hot-bucket flags (_MH_BUCKET_CAP): ONE exploded aggregation finds
     # every over-cap (band, signature) bucket - bounded by |corpus|/cap
@@ -629,36 +630,31 @@ def _minhash_pairs_plan(
     # actually present.
     hot = (
         banded.select(
-            F.posexplode(
-                F.array(*[F.col(f"band{b}") for b in range(n_bands)])
-            ).alias("bidx", "sig")
+            F.posexplode(F.array(*[F.col(c) for c in bands])).alias(
+                "bidx", "sig"
+            )
         )
         .groupBy("bidx", "sig")
         .agg(F.count("*").alias("_c"))
-        .filter(F.col("_c") > cap)
+        .filter(F.col("_c") > _MH_BUCKET_CAP)
         .select("bidx", "sig")
         .localCheckpoint(eager=False)
     )
     have_hot = bool(hot.limit(1).take(1))
     if have_hot:
-        for b in range(n_bands):
+        for b in range(4):
             hot_b = hot.filter(F.col("bidx") == b).select(
                 F.col("sig").alias(f"band{b}"), F.lit(True).alias(f"_hot{b}")
             )
             banded = banded.join(F.broadcast(hot_b), f"band{b}", "left")
         flag_cols = [
             F.coalesce(F.col(f"_hot{b}"), F.lit(False)).alias(f"hot{b}")
-            for b in range(n_bands)
+            for b in range(4)
         ]
     else:
-        flag_cols = [F.lit(False).alias(f"hot{b}") for b in range(n_bands)]
+        flag_cols = [F.lit(False).alias(f"hot{b}") for b in range(4)]
     banded = banded.select(
-        "doc_id",
-        "th",
-        "n_tok",
-        "salt",
-        *[f"band{b}" for b in range(n_bands)],
-        *flag_cols,
+        "doc_id", "th", "n_tok", "salt", *bands, *carry, *flag_cols
     )
     x = _spread(banded, "doc_id")
     if not broadcast_build:
@@ -679,7 +675,7 @@ def _minhash_pairs_plan(
         F.col("y.n_tok") >= t * F.col("x.n_tok")
     )
     parts = []
-    for bnd in range(n_bands):
+    for bnd in range(4):
         # a hot band is NOT a match: branch b requires band b cold, and
         # the lowest-band dedup predicate becomes "prev band differs OR
         # prev band was hot" so pairs sharing a hot band still verify in
@@ -702,6 +698,7 @@ def _minhash_pairs_plan(
                 F.col("x.doc_id").alias("doc_a"),
                 F.col("y.doc_id").alias("doc_b"),
                 jac.alias("jac"),
+                *carried("x.", "y."),
             )
         )
     out = parts[0]
@@ -726,12 +723,11 @@ def _minhash_pairs_plan(
     # item 2).  The per-bucket minima (<= |corpus|/cap rows, same bound
     # as the hot table itself) broadcast back onto the hot rows, so no
     # task ever owns a whole bucket.  Result-identical: min over the
-    # same struct, keyed by the same band value.
+    # same struct, keyed by the same band value (doc_id is unique and
+    # leads the struct, so it alone decides the min).
     star_parts = []
-    rep_struct = F.struct(
-        "doc_id", "th", "n_tok", *[f"band{b}" for b in range(n_bands)]
-    )
-    for bnd in range(n_bands):
+    rep_struct = F.struct("doc_id", "th", "n_tok", *bands, *carry)
+    for bnd in range(4):
         hot_rows = banded.filter(F.col(f"hot{bnd}"))
         reps = hot_rows.groupBy(
             F.col(f"band{bnd}").alias("_bk")
@@ -747,7 +743,7 @@ def _minhash_pairs_plan(
         # drop star pairs that ALSO match in a cold band - those are
         # already emitted by the cold branches (oracle-side the set UNION
         # dedups them for free)
-        for c in range(n_bands):
+        for c in range(4):
             keep = keep & (
                 (F.col(f"band{c}") != F.col(f"rep.band{c}"))
                 | F.col(f"hot{c}")
@@ -762,6 +758,7 @@ def _minhash_pairs_plan(
                 F.col("rep.doc_id").alias("doc_a"),
                 F.col("doc_id").alias("doc_b"),
                 cjac.alias("jac"),
+                *carried("rep.", ""),
             )
         )
     stars = star_parts[0]
@@ -782,7 +779,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf: str) -> DataFrame:
     round 6 this query carries a full DuckDB oracle that recomputes the
     identical signatures, bands, candidate set and verified pairs - the
     LSH pipeline itself is hash-checked, not just row-counted.  Candidate
-    generation + verification live in _minhash_verified_pairs (the
+    generation + verification live in _banded_pairs (the
     index-carrying, predicate-deduped spelling).
     """
     return _minhash_verified_pairs(spark, sf).select(
@@ -4315,8 +4312,10 @@ def dedup_two_stage(spark: SparkSession, sf: str) -> DataFrame:
     collapses at sf0.1), so the big n^2 saving does not manifest at
     small SF - the operator's value here is the copy-count-weighted
     near-dup ledger and the composition contract itself, both oracled.
-    Design notes live on _two_stage_pairs_plan (the un-checkpointed
-    builder, the _*_plan split pattern - plan tests inspect it).  This
+    Design notes live on _banded_pairs (the candidate+verify join shared
+    with dedup_minhash_lsh) and _two_stage_pairs_plan (the
+    un-checkpointed builder, the _*_plan split pattern - plan tests
+    inspect it).  This
     wrapper stores the checkpointed ledger per (application, sf) in the
     artifact store, like _minhash_verified_pairs: a corpus's verified
     rep-pair index is deterministic, computed once and reused by every
@@ -4330,172 +4329,46 @@ def dedup_two_stage(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _two_stage_pairs_plan(spark: SparkSession, sf: str) -> DataFrame:
-    """dedup_two_stage's un-checkpointed pair plan.  Same md5 universal
-    hash family and band spelling as dedup_minhash_lsh, and since round 7
-    the same index-carrying join: candidates dedupe via
-    lowest-matching-band PREDICATES (no distinct shuffle, no token
-    re-joins), verification runs on 64-bit token hashes inside the join,
-    and the rep table broadcasts under the corpus-size gate
-    (_MH_BROADCAST_BYTES; the salted shuffle regime of
-    _minhash_verified_pairs applies beyond it via the same spelling).
-    Shuffles: the exact-group and the band probes - all hash-keyed."""
+    """dedup_two_stage's un-checkpointed pair plan: the md5 exact-group
+    stage, then _banded_pairs over the group representatives (rep as
+    doc_id, carrying n_copies) - the same candidate+verify join, hot-bucket
+    rule and join regimes as dedup_minhash_lsh (the exact-dedup stage
+    does NOT collapse near-dup cliques, so the boilerplate-signature
+    pathology reaches this join too).  Shuffles: the exact-group and the
+    band probes - all hash-keyed."""
     d = load(spark, sf, "documents")
     g = d.groupBy(F.md5("text").alias("h")).agg(
-        F.min("doc_id").alias("rep"),
+        F.min("doc_id").alias("doc_id"),
         F.count("*").alias("n_copies"),
     )
     # signatures come from the shared per-app frame (VERDICT r14 item 5:
-    # this stage previously re-ran the 128-hash family over the unique
-    # texts that dedup_minhash_lsh had already signed): a rep's signature
-    # IS the shared frame's row for doc_id = rep, since every doc in an
-    # md5 group carries the identical text and the signature depends only
-    # on the text.  One int equi-join replaces ~|unique| x 128 md5 hashes.
-    sig = _minhash_signatures(spark, sf)
-    banded = (
-        g.join(sig, g["rep"] == sig["doc_id"])
+    # this stage previously re-ran the hash family over the unique texts
+    # that dedup_minhash_lsh had already signed): a rep's signature IS
+    # the shared frame's row for doc_id = rep, since every doc in an md5
+    # group carries the identical text and the signature depends only on
+    # the text.  One int equi-join replaces ~|unique| x _MH_K hash folds.
+    reps = (
+        g.join(_minhash_signatures(spark, sf), "doc_id")
         .select(
-            "rep",
-            "n_copies",
-            "th",
-            "n_tok",
-            F.pmod("rep", F.lit(_MH_SALTS)).cast("int").alias("salt"),
-            *[f"band{b}" for b in range(4)],
+            "doc_id", "th", "n_tok", *[f"band{b}" for b in range(4)], "n_copies"
         )
         .localCheckpoint(eager=False)
     )
-    # hot-bucket stop-band flags, same rule as _minhash_pairs_plan (the
-    # exact-dedup stage does NOT collapse near-dup cliques, so the
-    # boilerplate-signature pathology reaches this join too)
-    for b in range(4):
-        hot_b = (
-            banded.groupBy(f"band{b}")
-            .agg(F.count("*").alias("_c"))
-            .filter(F.col("_c") > _MH_BUCKET_CAP)
-            .select(f"band{b}", F.lit(True).alias(f"_hot{b}"))
-        )
-        banded = banded.join(F.broadcast(hot_b), f"band{b}", "left")
-    banded = banded.select(
-        "rep",
-        "n_copies",
-        "th",
-        "n_tok",
-        "salt",
-        *[f"band{b}" for b in range(4)],
-        *[
-            F.coalesce(F.col(f"_hot{b}"), F.lit(False)).alias(f"hot{b}")
-            for b in range(4)
-        ],
+    return _banded_pairs(reps, sf, carry=("n_copies",)).select(
+        "doc_a",
+        "doc_b",
+        F.col("n_copies_a").alias("copies_a"),
+        F.col("n_copies_b").alias("copies_b"),
+        pround("jac", 4).alias("jaccard"),
     )
-    broadcast_build = (
-        os.path.getsize(os.path.join(sf, "documents.parquet")) < _MH_BROADCAST_BYTES
-    )
-    x = _spread(banded, "rep")
-    if not broadcast_build:
-        x = x.withColumn(
-            "sj", F.explode(F.sequence(F.lit(0), F.lit(_MH_SALTS - 1)))
-        )
-    x = x.alias("x")
-    y = F.broadcast(banded.alias("y")) if broadcast_build else banded.alias("y")
-    # inclusion-exclusion union over the distinct token-hash sets (same
-    # spelling as _minhash_pairs_plan since r14): one array scan per pair
-    _inter = F.size(F.array_intersect("x.th", "y.th")).cast("double")
-    jac = _inter / (F.col("x.n_tok") + F.col("y.n_tok") - _inter)
-    parts = []
-    for bnd in range(4):
-        cond = (F.col(f"x.band{bnd}") == F.col(f"y.band{bnd}")) & (
-            ~F.col(f"x.hot{bnd}")
-        )
-        if not broadcast_build:
-            cond = cond & (F.col("x.sj") == F.col("y.salt"))
-        cond = cond & (F.col("x.rep") < F.col("y.rep"))
-        for prev in range(bnd):
-            cond = cond & (
-                (F.col(f"x.band{prev}") != F.col(f"y.band{prev}"))
-                | F.col(f"x.hot{prev}")
-            )
-        cond = cond & (jac >= 0.8)
-        parts.append(
-            x.join(y, cond).select(
-                F.col("x.rep").alias("doc_a"),
-                F.col("y.rep").alias("doc_b"),
-                F.col("x.n_copies").alias("copies_a"),
-                F.col("y.n_copies").alias("copies_b"),
-                pround(jac, 4).alias("jaccard"),
-            )
-        )
-    # star candidates through hot buckets (same rule as
-    # _minhash_pairs_plan: bucket-min -> member, linear connectivity
-    # instead of the quadratic pair space, verified like any candidate;
-    # bucket-min via map-side-combinable groupBy + broadcast join back,
-    # never Window.partitionBy(band) - VERDICT r8 item 2's skew fix)
-    star_parts = []
-    # `rep` is unique and leads the struct, so min is decided by it alone
-    # - the appended n_tok field cannot change the chosen row
-    rep_struct = F.struct(
-        "rep", "n_copies", "th", "n_tok", *[f"band{b}" for b in range(4)]
-    )
-    for bnd in range(4):
-        hot_rows = banded.filter(F.col(f"hot{bnd}"))
-        reps = hot_rows.groupBy(
-            F.col(f"band{bnd}").alias("_bk")
-        ).agg(F.min(rep_struct).alias("mn"))
-        hm = hot_rows.join(
-            F.broadcast(reps), F.col(f"band{bnd}") == F.col("_bk")
-        ).drop("_bk")
-        _cint = F.size(F.array_intersect("th", F.col("mn.th"))).cast(
-            "double"
-        )
-        cjac = _cint / (F.col("n_tok") + F.col("mn.n_tok") - _cint)
-        keep = F.col("rep") != F.col("mn.rep")
-        for c in range(4):
-            keep = keep & (
-                (F.col(f"band{c}") != F.col(f"mn.band{c}")) | F.col(f"hot{c}")
-            )
-        keep = keep & (cjac >= 0.8)
-        star_parts.append(
-            hm.filter(keep).select(
-                F.col("mn.rep").alias("doc_a"),
-                F.col("rep").alias("doc_b"),
-                F.col("mn.n_copies").alias("copies_a"),
-                F.col("n_copies").alias("copies_b"),
-                pround(cjac, 4).alias("jaccard"),
-            )
-        )
-    stars = star_parts[0]
-    for p in star_parts[1:]:
-        stars = stars.unionAll(p)
-    stars = stars.dropDuplicates(["doc_a", "doc_b"])
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionAll(p)
-    return out.unionAll(stars)
 
 
 def _lsh_recall_oracle() -> str:
     # the lsh CTE recomputes dedup_minhash_lsh's pair set, so it carries
-    # the SAME hot-bucket stop-band rule (_MH_BUCKET_CAP, round 8) - the
+    # the SAME hot-bucket stop-band rule (_MH_BUCKET_CAP, round 8; one
+    # _mh_cand_ctes text with the LSH oracle chain) - the
     # audit's n_lsh/n_common then measure the cap's recall cost against
     # the uncapped blocked exact reference
-    hot_ctes = ",\n    ".join(
-        f"hot{b} AS (SELECT band{b} AS s FROM banded "
-        f"GROUP BY band{b} HAVING count(*) > {_MH_BUCKET_CAP})"
-        for b in range(4)
-    )
-    cand_unions = "\n      UNION\n      ".join(
-        f"SELECT x.doc_id AS doc_a, y.doc_id AS doc_b FROM banded x "
-        f"JOIN banded y ON x.band{b} = y.band{b} AND x.doc_id < y.doc_id "
-        f"WHERE x.band{b} NOT IN (SELECT s FROM hot{b})"
-        for b in range(4)
-    )
-    star_unions = "\n      UNION\n      ".join(
-        f"SELECT doc_a, doc_b FROM ("
-        f"SELECT min(doc_id) OVER (PARTITION BY band{b}) AS doc_a,"
-        f" doc_id AS doc_b "
-        f"FROM banded WHERE band{b} IN (SELECT s FROM hot{b})) "
-        f"WHERE doc_a <> doc_b"
-        for b in range(4)
-    )
-    cand_unions = cand_unions + "\n      UNION\n      " + star_unions
     return f"""
     WITH toks AS (
       SELECT doc_id, lang, source,
@@ -4506,9 +4379,7 @@ def _lsh_recall_oracle() -> str:
       SELECT doc_id, {_minhash_band_sql(over="raw")}
       FROM (SELECT doc_id, list_distinct(string_split(text, ' ')) AS raw
             FROM documents)),
-    {hot_ctes},
-    cand AS (
-      {cand_unions}),
+    {_mh_cand_ctes(_MH_BUCKET_CAP)},
     lsh AS (
       SELECT c.doc_a, c.doc_b
       FROM cand c

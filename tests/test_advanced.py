@@ -1660,18 +1660,21 @@ class TestHotBucketCap:
         )
         return str(d)
 
-    def _pairs(self, spark, sf_dir, cap):
+    def _pairs(self, spark, sf_dir, cap, monkeypatch):
         from pei_nwdaf_data_ingestion_spark.queries import llm
 
+        monkeypatch.setattr(llm, "_MH_BUCKET_CAP", cap)
         return {
             (r["doc_a"], r["doc_b"])
-            for r in llm._minhash_pairs_plan(spark, sf_dir, cap=cap).collect()
+            for r in llm._minhash_pairs_plan(spark, sf_dir).collect()
         }
 
-    def test_cap_drops_clique_keeps_cold_pairs(self, spark, clique_sf_dir):
+    def test_cap_drops_clique_keeps_cold_pairs(
+        self, spark, clique_sf_dir, monkeypatch
+    ):
         clique = set(self.CLIQUE)
-        uncapped = self._pairs(spark, clique_sf_dir, cap=10**9)
-        capped = self._pairs(spark, clique_sf_dir, cap=8)
+        uncapped = self._pairs(spark, clique_sf_dir, 10**9, monkeypatch)
+        capped = self._pairs(spark, clique_sf_dir, 8, monkeypatch)
         clique_pairs = {(a, b) for (a, b) in uncapped if a in clique and b in clique}
         assert len(clique_pairs) == 12 * 11 // 2  # the quadratic blowup
         assert {(200, 201), (200, 202), (201, 202)} <= uncapped
@@ -1701,7 +1704,9 @@ class TestHotBucketCap:
             artifacts.clear(clique_sf_dir)
         assert {labels[d] for d in self.CLIQUE} == {min(self.CLIQUE)}
 
-    def test_capped_oracle_fixes_same_pairs(self, spark, clique_sf_dir):
+    def test_capped_oracle_fixes_same_pairs(
+        self, spark, clique_sf_dir, monkeypatch
+    ):
         import duckdb
 
         from pei_nwdaf_data_ingestion_spark.queries import llm
@@ -1712,7 +1717,7 @@ class TestHotBucketCap:
             f"read_parquet('{clique_sf_dir}/documents.parquet')"
         )
         for cap in (8, 10**9):
-            got = self._pairs(spark, clique_sf_dir, cap=cap)
+            got = self._pairs(spark, clique_sf_dir, cap, monkeypatch)
             want = {
                 (a, b)
                 for a, b in con.execute(
@@ -1742,7 +1747,9 @@ class TestHotBucketCap:
         assert row["n_common"] == row["n_exact_blocked"] - lost
         assert 0 < row["recall_micro"] < 1_000_000
 
-    def test_star_stage_is_partial_agg_not_window(self, spark, clique_sf_dir):
+    def test_star_stage_is_partial_agg_not_window(
+        self, spark, clique_sf_dir, monkeypatch
+    ):
         """The hot-bucket star stage's bucket-min must be a groupBy
         (map-side-combinable partial aggregation, broadcast back) - never
         Window.partitionBy(band), which ships EVERY member of a hot bucket
@@ -1754,7 +1761,8 @@ class TestHotBucketCap:
 
         from pei_nwdaf_data_ingestion_spark.queries import llm
 
-        df = llm._minhash_pairs_plan(spark, clique_sf_dir, cap=8)
+        monkeypatch.setattr(llm, "_MH_BUCKET_CAP", 8)
+        df = llm._minhash_pairs_plan(spark, clique_sf_dir)
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
             df.explain("formatted")

@@ -777,6 +777,21 @@ class TestMinhashPairRegimes:
         assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
         assert got == base and len(base) > 0
 
+    def test_no_hot_flag_joins_without_hot_bucket(self, spark):
+        """No band bucket is over the cap at the test scale, so neither
+        builder may plan the hot-flag left joins: the one probe job finds
+        no hot bucket and the literal-false flags fold the cap away.  Both
+        run the one shared candidate+verify join (_banded_pairs)."""
+        from pei_nwdaf_data_ingestion_spark.queries import llm
+
+        for build in (llm._minhash_pairs_plan, llm._two_stage_pairs_plan):
+            buf = io.StringIO()
+            with contextlib.redirect_stdout(buf):
+                build(spark, SF_DIR).explain("formatted")
+            plan = buf.getvalue()
+            assert "LeftOuter" not in plan, build.__name__
+            assert "BroadcastHashJoin" in plan, build.__name__
+
     def test_two_stage_salted_regime_equality(self, spark, monkeypatch):
         """dedup_two_stage (round 8): beyond the gate its probe side fans
         out over _MH_SALTS exactly like _minhash_pairs_plan - the salted

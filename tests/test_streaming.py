@@ -1021,13 +1021,12 @@ def test_cdc_upsert_recovers_from_checkpoint_restart(spark, tmp_path):
         "event_type",
         F.unix_micros("ts").alias("ts_us"),
     )
-    schema = "event_id long, user_id long, event_type string, ts_us long"
     staging = str(tmp_path / "staging")
     _write_time_batches(ev, staging, "ts_us", (0.5,))
 
     def run(src_dir: str, state_dir: str, ckpt: str) -> None:
         q = (
-            spark.readStream.schema(schema)
+            spark.readStream.schema(ev.schema)
             .option("maxFilesPerTrigger", 1)
             .parquet(os.path.join(src_dir, "half=*"))
             .writeStream.foreachBatch(_cdc_merge_fn(spark, state_dir))
@@ -1068,7 +1067,7 @@ def test_cdc_upsert_recovers_from_checkpoint_restart(spark, tmp_path):
     # crash-window replay: the merge re-applied to already-merged rows
     # must change nothing (idempotence = exactly-once results under
     # foreachBatch's at-least-once contract)
-    b0 = spark.read.schema(schema).parquet(os.path.join(live, "half=b0"))
+    b0 = spark.read.schema(ev.schema).parquet(os.path.join(live, "half=b0"))
     _cdc_merge_fn(spark, state)(b0, 0)
     assert state_rows(state) == after_b1
 
@@ -1098,13 +1097,12 @@ def test_inactivity_flush_recovers_from_checkpoint_restart(spark, tmp_path):
         F.col("ts"),
         "value",
     )
-    schema = "event_id long, user_id long, day string, ts timestamp, value double"
     staging = str(tmp_path / "staging")
     _write_time_batches(ev, staging, F.unix_micros("ts"), (0.5,))
 
     def run(src_dir: str, sink: str, ckpt: str) -> None:
         stream = (
-            spark.readStream.schema(schema)
+            spark.readStream.schema(ev.schema)
             .option("maxFilesPerTrigger", 1)
             .parquet(os.path.join(src_dir, "half=*"))
             .withWatermark("ts", "10 minutes")
