@@ -416,7 +416,7 @@ def dedup_ppjoin_prefix(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def _mh_cand_ctes(cap: int) -> str:
+def _mh_cand_ctes() -> str:
     """DuckDB `hot0..hot3, cand` CTE text over a `banded` (doc_id,
     band0..band3) CTE: the lowest-cold-band candidates plus the hot
     buckets' star candidates (the rule is on minhash_verified_pairs_ctes).
@@ -424,7 +424,7 @@ def _mh_cand_ctes(cap: int) -> str:
     oracle, which recomputes the same pair set."""
     hot_ctes = ",\n    ".join(
         f"hot{b} AS (SELECT band{b} AS s FROM banded "
-        f"GROUP BY band{b} HAVING count(*) > {cap})"
+        f"GROUP BY band{b} HAVING count(*) > {_MH_BUCKET_CAP})"
         for b in range(4)
     )
     cand_unions = "\n      UNION\n      ".join(
@@ -447,7 +447,7 @@ def _mh_cand_ctes(cap: int) -> str:
     )
 
 
-def minhash_verified_pairs_ctes(cap: int | None = None) -> str:
+def minhash_verified_pairs_ctes() -> str:
     """Shared DuckDB CTE chain `toks -> hk -> banded -> cand -> vpairs`:
     the MinHash-banded candidate pairs, Jaccard-VERIFIED at 0.8
     (vpairs carries doc_a, doc_b, jac).  One text, three consumers - the
@@ -465,16 +465,15 @@ def minhash_verified_pairs_ctes(cap: int | None = None) -> str:
     times (edges / m / redge) and DuckDB would otherwise inline - i.e.
     re-run - the whole candidate+verify pipeline per reference.
 
-    Hot-bucket stop-band rule (round 8, _MH_BUCKET_CAP): a band bucket
-    with more than `cap` members does not generate pairwise candidates -
-    the hot{b} CTEs replay the Spark side's rule exactly, and because
+    Hot-bucket stop-band rule (round 8): a band bucket with more than
+    _MH_BUCKET_CAP members does not generate pairwise candidates - the
+    hot{b} CTEs replay the Spark side's rule exactly, and because
     cand is a set UNION over bands, "lowest cold matching band" and "any
     cold matching band" fix the same pair set.  Hot buckets instead
     contribute STAR candidates (bucket-min -> member), which keep
     boilerplate clusters connected at linear cost AND arrive at the
     clustering fixpoint pre-converged; the set UNION absorbs star pairs
     that also cold-match."""
-    cap = _MH_BUCKET_CAP if cap is None else cap
     return f"""toks AS (
       SELECT doc_id, list_distinct(string_split(text, ' ')) AS tokens
       FROM documents),
@@ -484,7 +483,7 @@ def minhash_verified_pairs_ctes(cap: int | None = None) -> str:
     banded AS (
       SELECT doc_id, {_minhash_band_sql()}
       FROM hk),
-    {_mh_cand_ctes(cap)},
+    {_mh_cand_ctes()},
     vpairs AS MATERIALIZED (
       SELECT * FROM (
         SELECT c.doc_a, c.doc_b,
@@ -4236,14 +4235,13 @@ def sim_mmr_rerank(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def _two_stage_oracle(cap: int | None = None) -> str:
+def _two_stage_oracle() -> str:
     # hot-bucket stop-band rule shared with minhash_verified_pairs_ctes
-    # (_MH_BUCKET_CAP, round 8); `cap` is overridable so unit tests can
-    # cross-check the hot branch on tiny clique fixtures (ADVICE r8)
-    cap = _MH_BUCKET_CAP if cap is None else cap
+    # (_MH_BUCKET_CAP, round 8); unit tests patch the cap to cross-check
+    # the hot branch on tiny clique fixtures (ADVICE r8)
     hot_ctes = ",\n    ".join(
         f"hot{b} AS (SELECT band{b} AS s FROM banded "
-        f"GROUP BY band{b} HAVING count(*) > {cap})"
+        f"GROUP BY band{b} HAVING count(*) > {_MH_BUCKET_CAP})"
         for b in range(4)
     )
     cand_unions = "\n      UNION\n      ".join(
@@ -4379,7 +4377,7 @@ def _lsh_recall_oracle() -> str:
       SELECT doc_id, {_minhash_band_sql(over="raw")}
       FROM (SELECT doc_id, list_distinct(string_split(text, ' ')) AS raw
             FROM documents)),
-    {_mh_cand_ctes(_MH_BUCKET_CAP)},
+    {_mh_cand_ctes()},
     lsh AS (
       SELECT c.doc_a, c.doc_b
       FROM cand c

@@ -1721,7 +1721,7 @@ class TestHotBucketCap:
             want = {
                 (a, b)
                 for a, b in con.execute(
-                    f"WITH {llm.minhash_verified_pairs_ctes(cap=cap)} "
+                    f"WITH {llm.minhash_verified_pairs_ctes()} "
                     "SELECT doc_a, doc_b FROM vpairs"
                 ).fetchall()
             }
@@ -1835,7 +1835,7 @@ class TestHotBucketCap:
                 .collect()
             }
             want = set(
-                map(tuple, con.execute(llm._two_stage_oracle(cap=cap)).fetchall())
+                map(tuple, con.execute(llm._two_stage_oracle()).fetchall())
             )
             assert got == want, f"cap={cap}"
             results[cap] = got

@@ -733,18 +733,23 @@ class TestMinhashPairRegimes:
     def test_broadcast_regime_plan(self, spark):
         """Below the gate the banded build side broadcasts: 4 broadcast
         hash joins on the band keys, no shuffle exchange feeding them,
-        never a cartesian."""
-        import contextlib
-        import io
+        never a cartesian.  Both builders run the one shared
+        candidate+verify join (_banded_pairs).  No band bucket is over the
+        cap at the test scale, so neither may plan the hot-flag left
+        joins: the probe finds no hot bucket and the literal-false flags
+        fold the cap away."""
+        from pei_nwdaf_data_ingestion_spark.queries import llm
 
-        df = self._fresh_pairs(spark)
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
-        plan = buf.getvalue()
-        assert "BroadcastHashJoin" in plan
-        assert "CartesianProduct" not in plan
-        assert "BroadcastNestedLoopJoin" not in plan
+        for build in (llm._minhash_pairs_plan, llm._two_stage_pairs_plan):
+            artifacts.clear(SF_DIR)
+            buf = io.StringIO()
+            with contextlib.redirect_stdout(buf):
+                build(spark, SF_DIR).explain("formatted")
+            plan = buf.getvalue()
+            assert "BroadcastHashJoin" in plan, build.__name__
+            assert "CartesianProduct" not in plan, build.__name__
+            assert "BroadcastNestedLoopJoin" not in plan, build.__name__
+            assert "LeftOuter" not in plan, build.__name__
 
     def test_salted_regime_plan_and_equality(self, spark, monkeypatch):
         """Beyond the gate: the probe side fans out over _MH_SALTS and the
@@ -776,21 +781,6 @@ class TestMinhashPairRegimes:
         assert "BroadcastNestedLoopJoin" not in plan
         assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
         assert got == base and len(base) > 0
-
-    def test_no_hot_flag_joins_without_hot_bucket(self, spark):
-        """No band bucket is over the cap at the test scale, so neither
-        builder may plan the hot-flag left joins: the one probe job finds
-        no hot bucket and the literal-false flags fold the cap away.  Both
-        run the one shared candidate+verify join (_banded_pairs)."""
-        from pei_nwdaf_data_ingestion_spark.queries import llm
-
-        for build in (llm._minhash_pairs_plan, llm._two_stage_pairs_plan):
-            buf = io.StringIO()
-            with contextlib.redirect_stdout(buf):
-                build(spark, SF_DIR).explain("formatted")
-            plan = buf.getvalue()
-            assert "LeftOuter" not in plan, build.__name__
-            assert "BroadcastHashJoin" in plan, build.__name__
 
     def test_two_stage_salted_regime_equality(self, spark, monkeypatch):
         """dedup_two_stage (round 8): beyond the gate its probe side fans
