@@ -67,6 +67,9 @@ _PPJOIN_BROADCAST_BYTES = 256 << 20
 # on both engines (no overflow-promotion divergence).
 _MH_P = 999_999_937
 _MH_K = 12
+# LSH bands over the _MH_K minhashes (_MH_K // _MH_BANDS rows per band):
+# the band0..band3 layout every banded join, oracle and stream shares
+_MH_BANDS = 4
 # salt width for the banded self-join's hot buckets (see
 # _banded_pairs): each bucket's pair space splits into this many
 # independent stripes so verification parallelizes even when one signature
@@ -106,8 +109,8 @@ def _base_hash_sql(t: str) -> str:
     return f"(CAST(('0x' || substr(md5({t}), 1, 15)) AS BIGINT) % {_MH_P})"
 
 
-def minhash_band_cols(n_hashes: int = _MH_K, n_bands: int = 4) -> list:
-    """MinHash band-signature columns band0..band{n_bands-1} over a
+def minhash_band_cols() -> list:
+    """MinHash band-signature columns band0..band{_MH_BANDS-1} over a
     `tokens` array column - the md5-based universal hash family above,
     array_min as the min-aggregate, bands rendered as joined strings
     (equality-only keys; engine-portable where Spark's hash() is not).
@@ -123,33 +126,31 @@ def minhash_band_cols(n_hashes: int = _MH_K, n_bands: int = 4) -> list:
 
     mh = [
         F.array_min(F.transform(F.col("tokens"), _g(i)))
-        for i in range(n_hashes)
+        for i in range(_MH_K)
     ]
-    rpb = n_hashes // n_bands
+    rpb = _MH_K // _MH_BANDS
     return [
         F.concat_ws(",", *[m.cast("string") for m in mh[b * rpb : (b + 1) * rpb]]).alias(
             f"band{b}"
         )
-        for b in range(n_bands)
+        for b in range(_MH_BANDS)
     ]
 
 
-def _minhash_band_sql(
-    n_hashes: int = _MH_K, n_bands: int = 4, over: str = "tokens"
-) -> str:
-    """DuckDB select-list fragment computing band0..band{n_bands-1} from a
+def _minhash_band_sql(over: str = "tokens") -> str:
+    """DuckDB select-list fragment computing band0..band{_MH_BANDS-1} from a
     token-STRING list column named `over` - the exact dual of
     minhash_band_cols."""
     mins = [
         f"list_min(list_transform({over}, t -> ({_MH_A[i]} * "
         f"{_base_hash_sql('t')} + {_MH_B[i]}) % {_MH_P}))"
-        for i in range(n_hashes)
+        for i in range(_MH_K)
     ]
-    rpb = n_hashes // n_bands
+    rpb = _MH_K // _MH_BANDS
     return ", ".join(
         " || ',' || ".join(f"CAST({m} AS VARCHAR)" for m in mins[b * rpb : (b + 1) * rpb])
         + f" AS band{b}"
-        for b in range(n_bands)
+        for b in range(_MH_BANDS)
     )
 
 
@@ -425,13 +426,13 @@ def _mh_cand_ctes() -> str:
     hot_ctes = ",\n    ".join(
         f"hot{b} AS (SELECT band{b} AS s FROM banded "
         f"GROUP BY band{b} HAVING count(*) > {_MH_BUCKET_CAP})"
-        for b in range(4)
+        for b in range(_MH_BANDS)
     )
     cand_unions = "\n      UNION\n      ".join(
         f"SELECT x.doc_id AS doc_a, y.doc_id AS doc_b FROM banded x "
         f"JOIN banded y ON x.band{b} = y.band{b} AND x.doc_id < y.doc_id "
         f"WHERE x.band{b} NOT IN (SELECT s FROM hot{b})"
-        for b in range(4)
+        for b in range(_MH_BANDS)
     )
     star_unions = "\n      UNION\n      ".join(
         f"SELECT doc_a, doc_b FROM ("
@@ -439,7 +440,7 @@ def _mh_cand_ctes() -> str:
         f" doc_id AS doc_b "
         f"FROM banded WHERE band{b} IN (SELECT s FROM hot{b})) "
         f"WHERE doc_a <> doc_b"
-        for b in range(4)
+        for b in range(_MH_BANDS)
     )
     return (
         f"{hot_ctes},\n    cand AS (\n      "
@@ -598,7 +599,7 @@ def _banded_pairs(banded: DataFrame, sf: str, carry: tuple = ()) -> DataFrame:
     linear, the price of even verification spread, exactly the salting
     posture join_skew_salted pins for facts."""
     t = 0.8
-    bands = [f"band{b}" for b in range(4)]
+    bands = [f"band{b}" for b in range(_MH_BANDS)]
 
     def carried(pa: str, pb: str) -> list:
         # <c>_a / <c>_b for each carried column, read off the two sides
@@ -641,17 +642,17 @@ def _banded_pairs(banded: DataFrame, sf: str, carry: tuple = ()) -> DataFrame:
     )
     have_hot = bool(hot.limit(1).take(1))
     if have_hot:
-        for b in range(4):
+        for b in range(_MH_BANDS):
             hot_b = hot.filter(F.col("bidx") == b).select(
                 F.col("sig").alias(f"band{b}"), F.lit(True).alias(f"_hot{b}")
             )
             banded = banded.join(F.broadcast(hot_b), f"band{b}", "left")
         flag_cols = [
             F.coalesce(F.col(f"_hot{b}"), F.lit(False)).alias(f"hot{b}")
-            for b in range(4)
+            for b in range(_MH_BANDS)
         ]
     else:
-        flag_cols = [F.lit(False).alias(f"hot{b}") for b in range(4)]
+        flag_cols = [F.lit(False).alias(f"hot{b}") for b in range(_MH_BANDS)]
     banded = banded.select(
         "doc_id", "th", "n_tok", "salt", *bands, *carry, *flag_cols
     )
@@ -674,7 +675,7 @@ def _banded_pairs(banded: DataFrame, sf: str, carry: tuple = ()) -> DataFrame:
         F.col("y.n_tok") >= t * F.col("x.n_tok")
     )
     parts = []
-    for bnd in range(4):
+    for bnd in range(_MH_BANDS):
         # a hot band is NOT a match: branch b requires band b cold, and
         # the lowest-band dedup predicate becomes "prev band differs OR
         # prev band was hot" so pairs sharing a hot band still verify in
@@ -726,7 +727,7 @@ def _banded_pairs(banded: DataFrame, sf: str, carry: tuple = ()) -> DataFrame:
     # leads the struct, so it alone decides the min).
     star_parts = []
     rep_struct = F.struct("doc_id", "th", "n_tok", *bands, *carry)
-    for bnd in range(4):
+    for bnd in range(_MH_BANDS):
         hot_rows = banded.filter(F.col(f"hot{bnd}"))
         reps = hot_rows.groupBy(
             F.col(f"band{bnd}").alias("_bk")
@@ -742,7 +743,7 @@ def _banded_pairs(banded: DataFrame, sf: str, carry: tuple = ()) -> DataFrame:
         # drop star pairs that ALSO match in a cold band - those are
         # already emitted by the cold branches (oracle-side the set UNION
         # dedups them for free)
-        for c in range(4):
+        for c in range(_MH_BANDS):
             keep = keep & (
                 (F.col(f"band{c}") != F.col(f"rep.band{c}"))
                 | F.col(f"hot{c}")
@@ -4242,14 +4243,14 @@ def _two_stage_oracle() -> str:
     hot_ctes = ",\n    ".join(
         f"hot{b} AS (SELECT band{b} AS s FROM banded "
         f"GROUP BY band{b} HAVING count(*) > {_MH_BUCKET_CAP})"
-        for b in range(4)
+        for b in range(_MH_BANDS)
     )
     cand_unions = "\n      UNION\n      ".join(
         f"SELECT x.rep AS doc_a, y.rep AS doc_b, x.n_copies AS na,"
         f" y.n_copies AS nb FROM banded x "
         f"JOIN banded y ON x.band{b} = y.band{b} AND x.rep < y.rep "
         f"WHERE x.band{b} NOT IN (SELECT s FROM hot{b})"
-        for b in range(4)
+        for b in range(_MH_BANDS)
     )
     star_unions = "\n      UNION\n      ".join(
         f"SELECT doc_a, doc_b, na, nb FROM ("
@@ -4260,7 +4261,7 @@ def _two_stage_oracle() -> str:
         f"FROM banded WHERE band{b} IN (SELECT s FROM hot{b}) "
         f"WINDOW w AS (PARTITION BY band{b})) "
         f"WHERE doc_a <> doc_b"
-        for b in range(4)
+        for b in range(_MH_BANDS)
     )
     cand_unions = cand_unions + "\n      UNION\n      " + star_unions
     return f"""
@@ -4348,7 +4349,7 @@ def _two_stage_pairs_plan(spark: SparkSession, sf: str) -> DataFrame:
     reps = (
         g.join(_minhash_signatures(spark, sf), "doc_id")
         .select(
-            "doc_id", "th", "n_tok", *[f"band{b}" for b in range(4)], "n_copies"
+            "doc_id", "th", "n_tok", *[f"band{b}" for b in range(_MH_BANDS)], "n_copies"
         )
         .localCheckpoint(eager=False)
     )

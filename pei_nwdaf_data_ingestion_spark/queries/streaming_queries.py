@@ -772,8 +772,7 @@ def stream_minhash_dedup(spark: SparkSession, sf: str) -> DataFrame:
     Batch-dual equality (first-arrival = min doc_id under the single-file
     deterministic source) is asserted in tests/test_streaming.py."""
     docs = _documents_stream(spark, sf)
-    n_bands = 4
-    from .llm import minhash_band_cols
+    from .llm import _MH_BANDS, minhash_band_cols
 
     toks = docs.select(
         "doc_id",
@@ -787,7 +786,7 @@ def stream_minhash_dedup(spark: SparkSession, sf: str) -> DataFrame:
                 F.lit(b).cast("int").alias("band_id"),
                 F.col(f"band{b}").alias("sig"),
             )
-            for b in range(n_bands)
+            for b in range(_MH_BANDS)
         ]
     )
     ex = banded.select(
@@ -807,7 +806,7 @@ def stream_minhash_dedup(spark: SparkSession, sf: str) -> DataFrame:
             "doc_id",
             F.coalesce("n_band_wins", F.lit(0)).cast("long").alias("n_band_wins"),
         )
-        .withColumn("is_near_dup", F.col("n_band_wins") < n_bands)
+        .withColumn("is_near_dup", F.col("n_band_wins") < _MH_BANDS)
     )
 
 

@@ -14,13 +14,17 @@ the file-system dual of topic-per-key / WS-per-subscription.  The Arrow
 Flight writer (flight_foreach_batch) is the wire-level egress this image
 CAN exercise end-to-end: one DoPut per micro-batch over a real gRPC socket,
 same packed payload contract as the Kafka path.  It publishes from the
-driver, as the reference produces from its one process: the packed batch
-reaches it through a JVM-side Arrow collect, so no Python worker runs on
-the NEF path.  (On PySpark 4.1.2 a warm Python task was measured to pay
-140-270 ms before its function starts, on a 4-vCPU host, mostly
-`importlib.invalidate_caches()` re-reading the worker's zip-importer
-directories.)  The Kafka writer stays executor-side: per-partition
-producers are its scale path.
+driver, as the reference produces from its one process, and packs there
+too: one narrow Spark job (one stage, no Exchange, no Python worker)
+collects the batch's sorted per-record JSON through a JVM-side Arrow
+collect, and the driver joins each key's records into its array - the
+bytes `pack_batches` would produce, without its groupBy shuffle, which
+runs as a map-stage job plus a result job under AQE.  (On PySpark 4.1.2 a
+warm Python task was measured to pay 140-270 ms before its function
+starts, on a 4-vCPU host, mostly `importlib.invalidate_caches()`
+re-reading the worker's zip-importer directories.)  The Kafka writer
+stays executor-side on `pack_batches`: per-partition producers behind its
+groupBy are its scale path.
 """
 
 from __future__ import annotations
@@ -28,6 +32,7 @@ from __future__ import annotations
 import json
 import os
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -44,6 +49,11 @@ try:  # pyarrow.flight ships with the bundled pyarrow
     HAVE_FLIGHT = True
 except ImportError:
     HAVE_FLIGHT = False
+
+
+def _record(records: DataFrame, key: str):
+    """One record as the struct of every column but the key."""
+    return F.struct(*[F.col(c) for c in records.columns if c != key])
 
 
 def pack_batches(records: DataFrame, key: str = "notifId") -> DataFrame:
@@ -133,17 +143,28 @@ def flight_foreach_batch(location: str, key: str = "notifId"):
     receiver as Arrow record batches
     (tests/test_pipeline_components.py::TestFlightSink).
 
-    DRIVER-SIDE: the packed frame comes back through `toArrow()`, a
-    JVM-side Arrow collect, and one client DoPuts it under descriptor
-    path (key-root, epoch) - one connect / put / close per non-empty
-    micro-batch, no Python worker.  That fits this sink: a NEF micro-batch
-    is one spool file (read_notification_stream's maxFilesPerTrigger=1),
-    its size bounded by notification volume; the WS sink in the same
-    callback already collects every record to the driver; and the
-    reference produces from its one process.  A DoPut failure raises from
-    the foreachBatch call, so the epoch is not committed and replays on
-    restart: at-least-once, deduplicable downstream by (epoch, key)
-    exactly like the file fan-out's epoch layout.
+    DRIVER-SIDE, one narrow Spark job per call: the batch is coalesced to
+    one partition, sorted by (key, record) within it and projected to
+    (key, to_json(record)), and that comes back through one `toArrow()`,
+    a JVM-side Arrow collect - one stage, no Exchange, no Python worker.
+    The driver then joins each key's run of records into
+    "[" + ",".join(recs) + "]" and counts them.  That is `pack_batches`'
+    wire contract byte for byte, with no groupBy shuffle: to_json of an
+    array of structs is the comma-joined to_json of each struct inside
+    [], and array_sort and sortWithinPartitions order structs by the same
+    ascending field-by-field comparison.  The put table has
+    `pack_batches`' Arrow schema (key string as the batch declares it,
+    payload string, n_records int64 non-null).  coalesce(1) is safe here
+    because the driver receives every record anyway, and a NEF
+    micro-batch is one spool file (read_notification_stream's
+    maxFilesPerTrigger=1), its size bounded by notification volume; the
+    reference also produces from its one process.
+
+    One client DoPuts the table under descriptor path (key-root, epoch) -
+    one connect / put / close per non-empty micro-batch.  A DoPut failure
+    raises from the foreachBatch call, so the epoch is not committed and
+    replays on restart: at-least-once, deduplicable downstream by
+    (epoch, key) exactly like the file fan-out's epoch layout.
 
     `location`: gRPC URI, e.g. "grpc://host:port".  The server side is
     any Flight endpoint accepting DoPut; FlightSpoolServer below is the
@@ -154,9 +175,28 @@ def flight_foreach_batch(location: str, key: str = "notifId"):
             raise NotImplementedError(
                 "pyarrow.flight unavailable; use file_fanout_foreach_batch"
             )
-        tbl = pack_batches(batch, key).toArrow()
-        if tbl.num_rows == 0:
+        rec = _record(batch, key)
+        recs = (
+            batch.coalesce(1)
+            .sortWithinPartitions(key, rec)
+            .select(key, F.to_json(rec))
+            .toArrow()
+        )
+        if recs.num_rows == 0:
             return
+        packed: dict = {}
+        for k, r in zip(recs.column(0).to_pylist(), recs.column(1).to_pylist()):
+            packed.setdefault(k, []).append(r)
+        schema = pa.schema([
+            recs.schema.field(0),
+            pa.field("payload", pa.string()),
+            pa.field("n_records", pa.int64(), nullable=False),
+        ])
+        tbl = pa.Table.from_pydict({
+            key: list(packed),
+            "payload": ["[" + ",".join(v) + "]" for v in packed.values()],
+            "n_records": [len(v) for v in packed.values()],
+        }, schema=schema)
         client = flight.connect(location)
         try:
             desc = flight.FlightDescriptor.for_path(key, f"epoch={epoch_id}")

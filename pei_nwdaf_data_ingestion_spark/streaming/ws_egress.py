@@ -28,6 +28,8 @@ import struct
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
+from pyspark.sql import functions as F
+
 _WS_GUID = "258EAFA5-E914-47DA-95CA-C5AB0DC85B11"  # RFC 6455 section 1.3
 
 
@@ -236,10 +238,17 @@ def ws_fanout_foreach_batch(egress: WsEgress, key: str = "notifId"):
     socket endpoint (the reference is a single process doing exactly
     this); rows that reach it are the notification stream, bounded by
     subscription volume - bulk fan-out at corpus scale stays on the
-    executor-side partitioned sinks (sinks.py)."""
+    executor-side partitioned sinks (sinks.py).
+
+    The batch is read in one Spark job whatever its partition count:
+    each row's to_json(struct(*cols)), the string toJSON() gives, comes
+    back through one `toArrow()` collect, in partition order, with no
+    Python worker (`toJSON().toLocalIterator()` would run one job per
+    partition in turn, behind a local socket server)."""
 
     def _sink(batch_df, _epoch_id) -> None:
-        for line in batch_df.toJSON().toLocalIterator():
+        lines = batch_df.select(F.to_json(F.struct(*batch_df.columns))).toArrow()
+        for line in lines.column(0).to_pylist():
             rec = json.loads(line)
             egress.broadcast(
                 rec.get(key), {"type": "data_ingested", "data": rec}

@@ -316,7 +316,7 @@ class TestSinks:
 class TestFlightSink:
     """Arrow Flight wire egress (r15: the wire story the Kafka path could
     not close in this broker-less image - here the payload crosses a REAL
-    gRPC socket from the executors to an in-process Flight receiver)."""
+    gRPC socket from the driver to an in-process Flight receiver)."""
 
     def test_flight_egress_over_real_socket(self, spark):
         from pei_nwdaf_data_ingestion_spark.streaming.sinks import (
@@ -364,6 +364,95 @@ class TestFlightSink:
         #  ...but they are byte-identical, so (epoch, key) dedup is exact
         assert replayed[0] == replayed[1]
         assert len(fresh) == 1
+
+    @staticmethod
+    def _three_partition_batch(spark):
+        """Two keys spread over 3 partitions; n1 has a ts_unix tie broken
+        by `event`, and null `v` fields, which to_json omits.  The
+        checkpoint leaves a 3-partition scan with no Exchange above it."""
+        df = (
+            spark.createDataFrame(
+                [
+                    ("n1", 5, "b", 1.5),
+                    ("n2", 7, "c", None),
+                    ("n1", 10, "a", None),
+                    ("n2", 3, "d", 2.0),
+                    ("n1", 5, "a", None),
+                    ("n1", 1, "z", 0.5),
+                ],
+                "notifId string, ts_unix long, event string, v double",
+            )
+            .repartition(3)
+            .localCheckpoint()
+        )
+        assert df.rdd.getNumPartitions() == 3
+        return df
+
+    def test_flight_put_is_pack_batches_byte_for_byte(self, spark):
+        """The driver-side packing puts exactly pack_batches' rows and
+        Arrow schema: same payload bytes (tie order, omitted nulls),
+        same n_records, same field names, types and nullability."""
+        from pei_nwdaf_data_ingestion_spark.streaming.sinks import (
+            FlightSpoolServer,
+            flight_foreach_batch,
+        )
+
+        df = self._three_partition_batch(spark)
+        want = pack_batches(df).toArrow()
+        with FlightSpoolServer() as srv:
+            flight_foreach_batch(srv.location)(df, epoch_id=0)
+            (got,) = srv.tables["notifId/epoch=0"]
+
+        def by_key(t):
+            return sorted(t.to_pylist(), key=lambda r: r["notifId"])
+
+        def fields(t):
+            return [(f.name, f.type, f.nullable) for f in t.schema]
+
+        assert by_key(got) == by_key(want)
+        assert fields(got) == fields(want)
+        n1 = json.loads(by_key(got)[0]["payload"])
+        assert [(r["ts_unix"], r["event"]) for r in n1][:3] == [
+            (1, "z"), (5, "a"), (5, "b")
+        ]
+        assert "v" not in n1[1]
+
+    def test_each_nef_sink_runs_one_spark_job(self, spark):
+        """Each sink reads a 3-partition batch in ONE Spark job (the
+        Flight packing has no groupBy shuffle; the WS read is one Arrow
+        collect, not a job per partition), and the WS sink broadcasts
+        every toJSON() record in order, in the reference's frame shape."""
+        from pei_nwdaf_data_ingestion_spark.streaming.sinks import (
+            FlightSpoolServer,
+            flight_foreach_batch,
+        )
+        from pei_nwdaf_data_ingestion_spark.streaming.ws_egress import (
+            WsEgress,
+            ws_fanout_foreach_batch,
+        )
+
+        class RecordingEgress(WsEgress):
+            def __init__(self):
+                super().__init__()
+                self.sent = []
+
+            def broadcast(self, notif_id, message):
+                self.sent.append((notif_id, message))
+                return super().broadcast(notif_id, message)
+
+        df = self._three_partition_batch(spark)
+        egress = RecordingEgress()
+        with FlightSpoolServer() as srv:
+            _, flight_jobs = jobs_of(
+                spark, lambda: flight_foreach_batch(srv.location)(df, 0)
+            )
+            assert len(srv.rows("notifId/epoch=0")) == 2
+        _, ws_jobs = jobs_of(spark, lambda: ws_fanout_foreach_batch(egress)(df, 0))
+        assert (flight_jobs, ws_jobs) == (1, 1)
+        want = [json.loads(s) for s in df.toJSON().collect()]
+        assert egress.sent == [
+            (r["notifId"], {"type": "data_ingested", "data": r}) for r in want
+        ]
 
 
 class TestSaltedJoin:
