@@ -1167,24 +1167,20 @@ def _probe_or_none(e: DataFrame):
     return r[0]["p"] if r else None
 
 
-def _ivf_probe_cells(e: DataFrame, cent_rows, nprobe: int):
-    """The probe vector (vec_id 0) + its nprobe nearest cells, computed on
-    the driver from the K x dim centroid table (bounded).  The probe is
-    quantized to micro-units exactly like the stored vectors (Python
-    math.floor over doubles == both engines' floor over the same
-    doubles), so the cell choice is pure-integer and engine-portable."""
+def _ivf_probe_cells(p, cent_rows, nprobe: int):
+    """The nprobe cells nearest the probe vector `p` (_probe_or_none's
+    list), computed on the driver from the K x dim centroid table
+    (bounded).  The probe is quantized to micro-units exactly like the
+    stored vectors (Python math.floor over doubles == both engines' floor
+    over the same doubles), so the cell choice is pure-integer and
+    engine-portable."""
     import math
 
-    p = (
-        e.filter(F.col("vec_id") == 0)
-        .select(F.col("embedding").cast("array<double>").alias("p"))
-        .collect()[0]["p"]
-    )
     pq = [int(math.floor(x * float(_IVF_Q) + 0.5)) for x in p]
     by_dist = sorted(
         (sum((x - y) ** 2 for x, y in zip(c, pq)), cell) for cell, c in cent_rows
     )
-    return p, [cell for _, cell in by_dist[:nprobe]]
+    return [cell for _, cell in by_dist[:nprobe]]
 
 
 def _ivf_oracle_ctes(k_cells: int = 16, nprobe: int = 6, dim: int = 64) -> str:
@@ -1281,7 +1277,8 @@ def sim_ivf_topk(spark: SparkSession, sf: str) -> DataFrame:
     iterations as CTEs and replays the identical assignments."""
     k_cells, nprobe, topk = 16, 6, 10
     e = load(spark, sf, "embeddings")
-    if _probe_or_none(e) is None:
+    p = _probe_or_none(e)
+    if p is None:
         return spark.createDataFrame(
             [], "vec_id long, label int, cell int, cosine double"
         )
@@ -1290,7 +1287,7 @@ def sim_ivf_topk(spark: SparkSession, sf: str) -> DataFrame:
         "vec_id", "label", v.alias("v"), _vq_col(v).alias("vq")
     )
     cent_rows = _ivf_centroid_rows(spark, sf, vecs, k_cells)
-    p, near_cells = _ivf_probe_cells(e, cent_rows, nprobe)
+    near_cells = _ivf_probe_cells(p, cent_rows, nprobe)
 
     # inverted file = assignment column; the probe scans ONLY nprobe cells
     # (at scale `cell` is the storage partition key and this filter is
@@ -1360,7 +1357,8 @@ def sim_ivf_quantized_topk(spark: SparkSession, sf: str) -> DataFrame:
     vectors and cosines are bit-identical cross-engine."""
     k_cells, nprobe, topk = 16, 6, 10
     e = load(spark, sf, "embeddings")
-    if _probe_or_none(e) is None:
+    p = _probe_or_none(e)
+    if p is None:
         return spark.createDataFrame(
             [], "vec_id long, label int, cell int, cosine double"
         )
@@ -1369,7 +1367,7 @@ def sim_ivf_quantized_topk(spark: SparkSession, sf: str) -> DataFrame:
         "vec_id", "label", v.alias("v"), _vq_col(v).alias("vq")
     )
     cent_rows = _ivf_centroid_rows(spark, sf, vecs, k_cells)
-    p, near_cells = _ivf_probe_cells(e, cent_rows, nprobe)
+    near_cells = _ivf_probe_cells(p, cent_rows, nprobe)
 
     # the stored index: int8 codes + scale, NOT the float vectors (at scale
     # this is what sits on disk partitioned by `cell`); codes are exactly
@@ -4751,7 +4749,8 @@ def sim_ivf_nprobe_curve(spark: SparkSession, sf: str) -> DataFrame:
     scalar subqueries degrade."""
     k_cells, topk, probes = 16, 10, (1, 2, 4, 6)
     e = load(spark, sf, "embeddings")
-    if _probe_or_none(e) is None:
+    p = _probe_or_none(e)
+    if p is None:
         return spark.createDataFrame(
             [(int(np), 0, 0, 0, None) for np in probes],
             "nprobe long, n_exact long, n_common long, n_missed long,"
@@ -4762,7 +4761,7 @@ def sim_ivf_nprobe_curve(spark: SparkSession, sf: str) -> DataFrame:
         (F.col("vec_id") != 0) & F.col("embedding").isNotNull()
     ).select("vec_id", "label", v.alias("v"), _vq_col(v).alias("vq"))
     cent_rows = _ivf_centroid_rows(spark, sf, vecs, k_cells)
-    p, ranked = _ivf_probe_cells(e, cent_rows, k_cells)  # full cell ranking
+    ranked = _ivf_probe_cells(p, cent_rows, k_cells)  # full cell ranking
     idx = _ivf_index(spark, sf, vecs, cent_rows).select("vec_id", "cell", "v")
     p_lit = F.array(*[F.lit(float(x)) for x in p])
     # the four curve points and the recall joins are FIVE consumers of the

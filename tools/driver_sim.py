@@ -14,6 +14,7 @@ from pyspark.sql import SparkSession
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as e
+from pei_nwdaf_data_ingestion_spark.session import CODEGEN_CACHE_ENTRIES
 
 SF = os.environ.get("DRIVER_SIM_SF_DIR", "/root/testdata/sf0.01")
 with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
@@ -34,6 +35,10 @@ _builder = (
     .config("spark.sql.shuffle.partitions", _PARTS)
     .config("spark.sql.session.timeZone", "America/New_York")  # non-UTC probe
     .config("spark.driver.memory", "8g")
+    # the library's generated-class cache size (session.py): at Spark's
+    # default of 100, ids sharing a pipeline shape recompile it (one pass
+    # over the registry compiled 4,912 classes at 100, 3,764 at the size)
+    .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
 )
 # DRIVER_SIM_CONF="k=v,k=v" layers arbitrary session confs on top - e.g.
 # spark.sql.adaptive.enabled=false is the AQE-off invariance probe (results
