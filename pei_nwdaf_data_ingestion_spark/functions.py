@@ -10,8 +10,11 @@ IEEE doubles, so every declared query uses this formula on BOTH sides
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 
 def pround(c: Column | str, n: int = 2) -> Column:
@@ -26,6 +29,26 @@ def sql_round(expr: str, n: int = 2) -> str:
     """The DuckDB/ANSI spelling of the same formula (for oracle strings)."""
     f = float(10**n)
     return f"floor(({expr}) * {f} + 0.5) / {f}"
+
+
+def local_frame(
+    spark: SparkSession, rows, schema: T.StructType | str
+) -> DataFrame:
+    """A driver-built table (`rows`: tuples in `schema`'s field order,
+    structs as tuples) as an Arrow local relation.  Use it instead of
+    `spark.createDataFrame(<list>, schema)`, which PySpark 4.1 runs through
+    `parallelize`: every job that reads such a frame scans a PythonRDD and
+    forks `pyspark.daemon` and its workers.  This one plans as
+    LocalTableScan, so reading it runs no job for the scan and starts no
+    Python process."""
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    table = pa.Table.from_arrays(
+        [pa.array([r[i] for r in rows], type=f.type) for i, f in enumerate(arrow)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def salted_join(

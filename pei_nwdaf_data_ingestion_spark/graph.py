@@ -16,6 +16,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .functions import local_frame
+
 # residue-size gate for the driver-side union-find after the min-neighbor
 # contraction pre-pass: under it the contracted residue is a bounded
 # driver-side table; over it the distributed large-star/small-star rounds
@@ -181,7 +183,8 @@ def connected_components(
                         ra, rb = rb, ra
                     parent[rb] = ra  # attach larger root under smaller
             node_t = residue.schema["a"].dataType
-            inner = residue.sparkSession.createDataFrame(
+            inner = local_frame(
+                residue.sparkSession,
                 [(v, _find(v)) for v in parent],
                 T.StructType(
                     [

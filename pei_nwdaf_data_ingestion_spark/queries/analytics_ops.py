@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import gated_broadcast, load
-from ..functions import pround
+from ..functions import local_frame, pround
 from ..registry import query
 
 # ---------------------------------------------------------------------------
@@ -2185,7 +2185,8 @@ def pipeline_observe_metrics(spark: SparkSession, sf: str) -> DataFrame:
         # empty-input sweep (round 8)
         return None if v is None else int(v)
 
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 as_long(m["n_rows"]),

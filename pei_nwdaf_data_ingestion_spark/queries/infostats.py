@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import gated_broadcast, load
-from ..functions import pround
+from ..functions import local_frame, pround
 from ..registry import query
 from .analytics_ops import _CN_PART_CAP
 
@@ -1944,8 +1944,8 @@ def time_cross_correlation(spark: SparkSession, sf: str) -> DataFrame:
             ).alias("b"),
         )
     )
-    lags = spark.createDataFrame(
-        [(L,) for L in range(-_XC_MAX_LAG, _XC_MAX_LAG + 1)], "lag LONG"
+    lags = local_frame(
+        spark, [(L,) for L in range(-_XC_MAX_LAG, _XC_MAX_LAG + 1)], "lag LONG"
     )
     b_side = ab.select(F.col("d").alias("bd"), F.col("b").alias("y"))
     p = (
@@ -2065,9 +2065,7 @@ def text_vocab_coverage_curve(spark: SparkSession, sf: str) -> DataFrame:
     rk = global_rank(
         top, ["freq", "term"], out="r", ascending=[False, True]
     ).select("r", "freq")
-    cuts = spark.createDataFrame(
-        [(c,) for c in _VOCAB_CUTS], "vocab_size LONG"
-    )
+    cuts = local_frame(spark, [(c,) for c in _VOCAB_CUTS], "vocab_size LONG")
     # rk leads and the 4-row (cuts x totals) grid is the broadcast build
     # side: a hint on the FIRST crossJoin is consumed by it, so the old
     # chain left the second crossJoin planning as a CartesianProduct of

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from .. import artifacts
 from ..catalog import load
-from ..functions import pround
+from ..functions import local_frame, pround
 from ..registry import query
 
 
@@ -1054,49 +1054,97 @@ def _vq_col(v):
     )
 
 
-def _ivf_cents_df(spark: SparkSession, cent_rows):
-    return spark.createDataFrame(
-        [(cell, [int(x) for x in c]) for cell, c in cent_rows],
-        "cell int, c array<bigint>",
+def _sqdist(a, b):
+    """Integer squared L2 distance between two micro-unit arrays."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+        F.lit(0).cast("long"),
+        lambda acc, z: acc + z,
+    )
+
+
+def _nearest_cell(points: DataFrame, cents: DataFrame, vcol: str, cs=None):
+    """`points` plus `cell`, the nearest centroid to its `vcol` array - the
+    k-means assignment of both quantizers (IVF, PQ).  `cents` is ONE row
+    whose `cs` holds the centroids as array<struct<cell, c>> (`cs` may pick
+    an element of it, e.g. PQ's cs[sub]); it is broadcast, and each point
+    takes array_min over its (d, cell) structs.  Struct order is d, then
+    cell, so ties go to the lower cell, as the oracles' min(d * K + cell)
+    breaks them.  A map-only projection: no Exchange, and the K candidates
+    never become rows.  Distances are INTEGER (micro-unit squared L2), so
+    the argmin has no float-tie ambiguity on any engine."""
+    cs = F.col("cs") if cs is None else cs
+    cell = F.array_min(
+        F.transform(
+            cs,
+            lambda x: F.struct(
+                _sqdist(F.col(vcol), x["c"]).alias("d"), x["cell"].alias("cell")
+            ),
+        )
+    )["cell"]
+    return (
+        points.crossJoin(F.broadcast(cents))
+        .withColumn("cell", cell)
+        .drop("cs")
+    )
+
+
+def _lloyd_update(assigned: DataFrame, keys: list, vcol: str) -> list:
+    """One Lloyd centroid update: per (*keys, pos) the floor of the mean,
+    in one aggregate whose K x dim rows are collected; the driver lays
+    each centroid out in `pos` order.  Returns [(*key, centroid)], sorted.
+    The mean divides in doubles (sums < 2^53, so the quotient is
+    IEEE-exact-deterministic and floor() agrees cross-engine; integer
+    `div` would not - Spark truncates toward zero, DuckDB floors)."""
+    rows = (
+        assigned.select(*keys, F.posexplode(vcol).alias("pos", "val"))
+        .groupBy(*keys, "pos")
+        .agg(
+            F.floor(F.sum("val") / F.count("*").cast("double"))
+            .cast("long")
+            .alias("m")
+        )
+        .collect()
+    )
+    cents: dict = {}
+    for r in rows:
+        cents.setdefault(tuple(r[k] for k in keys), {})[r["pos"]] = r["m"]
+    return sorted((*k, [m[p] for p in sorted(m)]) for k, m in cents.items())
+
+
+def _kmeans_init(vecs: DataFrame, k: int) -> list:
+    """Deterministic k-means init: the `vq` of the k lowest vec_ids, in
+    vec_id order (stable across runs and engines)."""
+    return [r["vq"] for r in vecs.orderBy("vec_id").limit(k).collect()]
+
+
+_IVF_CENTS = "cs array<struct<cell int, c array<bigint>>>"
+
+
+def _ivf_cents_df(spark: SparkSession, cent_rows) -> DataFrame:
+    """The K coarse centroids as _nearest_cell's one broadcast row."""
+    return local_frame(
+        spark,
+        [([(cell, [int(x) for x in c]) for cell, c in cent_rows],)],
+        _IVF_CENTS,
     )
 
 
 def _ivf_assign(vecs: DataFrame, cents: DataFrame) -> DataFrame:
-    """Nearest-centroid assignment: broadcast the K-row centroid table,
-    argmin via min_by over a (dist, cell) struct - partial aggregation
-    runs map-side, so the shuffle carries one row per vector, never the
-    K-way crossjoin.  `vecs` must carry (vec_id, label, v, vq); distances
-    are INTEGER (micro-unit squared L2), so the argmin has no float-tie
-    ambiguity on any engine."""
-    d = F.aggregate(
-        F.zip_with(F.col("vq"), F.col("c"), lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("long"),
-        lambda acc, z: acc + z,
-    )
-    return (
-        vecs.crossJoin(F.broadcast(cents))
-        .select("vec_id", "label", "v", "vq", "cell", d.alias("d"))
-        .groupBy("vec_id")
-        .agg(
-            F.first("label").alias("label"),
-            F.first("v").alias("v"),
-            F.first("vq").alias("vq"),
-            F.min_by("cell", F.struct("d", "cell")).alias("cell"),
-        )
-    )
+    """(vec_id, label, v, vq, cell): each vector with its nearest coarse
+    centroid (`cents` from _ivf_cents_df)."""
+    return _nearest_cell(vecs, cents, "vq")
 
 
 def _ivf_centroid_rows(
     spark: SparkSession, sf: str, vecs: DataFrame, k_cells: int
 ) -> list:
-    """K coarse centroids by distributed k-means (deterministic init = the
-    K lowest vec_ids, 2 Lloyd iterations; assignment is a broadcast cross
-    join + argmin, centroid update a posexplode group-sum - all DataFrame
-    ops, the centroid table never exceeds K x dim).  Centroids live in
-    micro-units: update = floor(sum(vq_d) / n) with the division done in
-    doubles (sums < 2^53, so the quotient is IEEE-exact-deterministic and
-    floor() agrees cross-engine; integer `div` would not - Spark
-    truncates toward zero, DuckDB floors).
+    """K coarse centroids by distributed k-means: deterministic init (the
+    K lowest vec_ids, one job), then 2 Lloyd rounds of one job each - a
+    map-only nearest-centroid projection (_nearest_cell) feeding one
+    group-by-(cell, pos) mean whose K x dim rows are collected
+    (_lloyd_update).  Centroids live in micro-units: update =
+    floor(sum(vq_d) / n), the mean divided in doubles.
 
     Stored per (application, table, K) in the artifact store: an IVF
     index is built once and probed many times in any real deployment,
@@ -1107,27 +1155,11 @@ def _ivf_centroid_rows(
     share an entry."""
 
     def build() -> list:
-        # deterministic init: K lowest vec_ids (stable across runs/engines)
-        cent_rows = [
-            (i, r["vq"])
-            for i, r in enumerate(vecs.orderBy("vec_id").limit(k_cells).collect())
-        ]
-        for _ in range(2):  # Lloyd iterations: assign + per-cell mean (collect = K x dim)
-            new = (
-                _ivf_assign(vecs, _ivf_cents_df(spark, cent_rows))
-                .select("cell", F.posexplode("vq").alias("pos", "val"))
-                .groupBy("cell", "pos")
-                .agg(
-                    F.floor(F.sum("val") / F.count("*").cast("double"))
-                    .cast("long")
-                    .alias("m")
-                )
-                .groupBy("cell")
-                .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
-                .select("cell", F.col("pm.m").alias("c"))
-                .collect()
+        cent_rows = list(enumerate(_kmeans_init(vecs, k_cells)))
+        for _ in range(2):  # Lloyd iterations
+            cent_rows = _lloyd_update(
+                _ivf_assign(vecs, _ivf_cents_df(spark, cent_rows)), ["cell"], "vq"
             )
-            cent_rows = sorted((r["cell"], r["c"]) for r in new)
         return cent_rows
 
     return artifacts.memo(spark, sf, "ivf_centroids", build, k_cells)
@@ -1140,10 +1172,12 @@ def _ivf_index(
     stored per (application, table, K) in the artifact store: at 100 TB
     this table is what sits on disk partitioned by `cell`, written once
     at build time; probes read it, they do not re-derive it, and the
-    assignment to deterministic centroids is itself deterministic.  (The
-    Lloyd iterations inside _ivf_centroid_rows still call _ivf_assign
-    directly - their assignments change per round and must NOT be
-    stored.)"""
+    assignment to deterministic centroids is itself deterministic.  The
+    build is one map-only pass (scan, quantize, nearest-centroid argmin
+    against the broadcast centroid row), materialized by the lazy
+    localCheckpoint on first use.  (The Lloyd iterations inside
+    _ivf_centroid_rows still call _ivf_assign directly - their
+    assignments change per round and must NOT be stored.)"""
     return artifacts.memo(
         spark, sf, "ivf_index",
         lambda: _ivf_assign(vecs, _ivf_cents_df(spark, cent_rows)).localCheckpoint(
@@ -1190,7 +1224,7 @@ def _ivf_oracle_ctes(k_cells: int = 16, nprobe: int = 6, dim: int = 64) -> str:
     cell choice -> final assignment.  Every arithmetic step mirrors the
     Spark spelling above (see _ivf_centroid_rows for why the mean divides
     in doubles); min(d * K + cell) % K is the packed-integer equivalent of
-    Spark's min_by(cell, struct(d, cell)) for cell in [0, K)."""
+    Spark's array_min over (d, cell) structs for cell in [0, K)."""
     rng = f"range(1, {dim + 1})"
 
     def sqdist(a: str, b: str) -> str:
@@ -1279,8 +1313,8 @@ def sim_ivf_topk(spark: SparkSession, sf: str) -> DataFrame:
     e = load(spark, sf, "embeddings")
     p = _probe_or_none(e)
     if p is None:
-        return spark.createDataFrame(
-            [], "vec_id long, label int, cell int, cosine double"
+        return local_frame(
+            spark, [], "vec_id long, label int, cell int, cosine double"
         )
     v = F.col("embedding").cast("array<double>")
     vecs = e.filter((F.col("vec_id") != 0) & F.col("embedding").isNotNull()).select(
@@ -1359,8 +1393,8 @@ def sim_ivf_quantized_topk(spark: SparkSession, sf: str) -> DataFrame:
     e = load(spark, sf, "embeddings")
     p = _probe_or_none(e)
     if p is None:
-        return spark.createDataFrame(
-            [], "vec_id long, label int, cell int, cosine double"
+        return local_frame(
+            spark, [], "vec_id long, label int, cell int, cosine double"
         )
     v = F.col("embedding").cast("array<double>")
     vecs = e.filter((F.col("vec_id") != 0) & F.col("embedding").isNotNull()).select(
@@ -3411,9 +3445,12 @@ def _pq_subvectors(vecs: DataFrame) -> DataFrame:
 
 def _pq_codebook_rows(spark: SparkSession, sf: str, vecs: DataFrame) -> list:
     """Per-subspace K centroids - ALL _PQ_M subspaces trained in the SAME
-    jobs (k-means keyed by (sub, cell)), so the build costs the same 1 +
-    2x2 passes as the IVF coarse quantizer, not M times as many.
-    Deterministic init: subvectors of the _PQ_K lowest vec_ids.
+    jobs (k-means keyed by (sub, cell)), so the build costs the same
+    1 + 2 jobs as the IVF coarse quantizer, not M times as many: the
+    init collects the _PQ_K lowest vec_ids and slices their subvectors
+    on the driver, and each Lloyd round is a map-only nearest-centroid
+    projection against the broadcast codebook row feeding one
+    group-by-(sub, cell, pos) mean (_nearest_cell, _lloyd_update).
     Arithmetic is the integer micro-unit k-means of _ivf_centroid_rows
     (integer distances, floor-of-double-mean updates).  Stored per
     (application, table) in the artifact store for the same reason as
@@ -3424,85 +3461,46 @@ def _pq_codebook_rows(spark: SparkSession, sf: str, vecs: DataFrame) -> list:
     )
 
 
+_PQ_CENTS = "cs array<array<struct<cell int, c array<bigint>>>>"
+
+
+def _pq_cents_df(spark: SparkSession, rows) -> DataFrame:
+    """The codebook [(sub, cell, centroid)] as _nearest_cell's one
+    broadcast row: cs[sub] holds that subspace's (cell, c) structs."""
+    cs: list = [[] for _ in range(_PQ_M)]
+    for s, c, v in rows:
+        cs[s].append((c, [int(x) for x in v]))
+    return local_frame(spark, [(cs,)], _PQ_CENTS)
+
+
+def _pq_assign(sv: DataFrame, cents: DataFrame) -> DataFrame:
+    """_pq_subvectors' rows plus `cell`, the nearest centroid of their
+    own subspace (`cents` from _pq_cents_df)."""
+    return _nearest_cell(sv, cents, "svq", F.col("cs")[F.col("sub")])
+
+
 def _pq_train(spark: SparkSession, vecs: DataFrame) -> list:
     """_pq_codebook_rows' k-means: [(sub, cell, centroid)], sorted."""
     sv = _pq_subvectors(vecs)
-
-    def cents_df(rows):
-        return spark.createDataFrame(
-            [(s, c, [int(x) for x in v]) for s, c, v in rows],
-            "sub int, cell int, c array<bigint>",
-        )
-
-    def assign(cents):
-        d = F.aggregate(
-            F.zip_with(F.col("svq"), F.col("c"), lambda x, y: (x - y) * (x - y)),
-            F.lit(0).cast("long"),
-            lambda acc, z: acc + z,
-        )
-        # equi-join on `sub` (m x k broadcast), argmin per (vec_id, sub):
-        # map-side partial agg keeps the shuffle at one row per subvector
-        return (
-            sv.join(F.broadcast(cents), "sub")
-            .select("vec_id", "sub", "svq", "cell", d.alias("d"))
-            .groupBy("vec_id", "sub")
-            .agg(
-                F.first("svq").alias("svq"),
-                F.min_by("cell", F.struct("d", "cell")).alias("cell"),
-            )
-        )
-
-    init = (
-        sv.join(
-            F.broadcast(
-                vecs.orderBy("vec_id").limit(_PQ_K).select("vec_id")
-            ).withColumn("cell", (F.row_number().over(
-                Window.orderBy("vec_id")) - 1).cast("int")),
-            "vec_id",
-        )
-        .select("sub", "cell", "svq")
-        .collect()
+    rows = sorted(
+        (s, cell, vq[s * _PQ_DSUB:(s + 1) * _PQ_DSUB])
+        for cell, vq in enumerate(_kmeans_init(vecs, _PQ_K))
+        for s in range(_PQ_M)
     )
-    rows = sorted((r["sub"], r["cell"], r["svq"]) for r in init)
     for _ in range(2):  # Lloyd rounds, all subspaces at once
-        new = (
-            assign(cents_df(rows))
-            .select("sub", "cell", F.posexplode("svq").alias("pos", "val"))
-            .groupBy("sub", "cell", "pos")
-            .agg(
-                F.floor(F.sum("val") / F.count("*").cast("double"))
-                .cast("long")
-                .alias("m")
-            )
-            .groupBy("sub", "cell")
-            .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
-            .select("sub", "cell", F.col("pm.m").alias("c"))
-            .collect()
+        rows = _lloyd_update(
+            _pq_assign(sv, _pq_cents_df(spark, rows)), ["sub", "cell"], "svq"
         )
-        rows = sorted((r["sub"], r["cell"], r["c"]) for r in new)
     return rows
 
 
 def _pq_codes_plan(spark: SparkSession, sf: str, vecs: DataFrame) -> DataFrame:
-    """The un-checkpointed encode plan (broadcast codebook join + argmin);
-    split out so plan tests can assert the join strategy - the cached
-    wrapper below replaces the subtree with an RDD scan."""
+    """The un-checkpointed encode plan (map-only argmin against the
+    broadcast codebook row); split out so plan tests can assert its shape
+    - the cached wrapper below replaces the subtree with an RDD scan."""
     rows = _pq_codebook_rows(spark, sf, vecs)
-    cents = spark.createDataFrame(
-        [(s, c, [int(x) for x in v]) for s, c, v in rows],
-        "sub int, cell int, c array<bigint>",
-    )
-    d = F.aggregate(
-        F.zip_with(F.col("svq"), F.col("c"), lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("long"),
-        lambda acc, z: acc + z,
-    )
-    return (
-        _pq_subvectors(vecs)
-        .join(F.broadcast(cents), "sub")
-        .select("vec_id", "sub", "cell", d.alias("d"))
-        .groupBy("vec_id", "sub")
-        .agg(F.min_by("cell", F.struct("d", "cell")).alias("code"))
+    return _pq_assign(_pq_subvectors(vecs), _pq_cents_df(spark, rows)).select(
+        "vec_id", "sub", F.col("cell").alias("code")
     )
 
 
@@ -3627,8 +3625,9 @@ def sim_pq_encode(spark: SparkSession, sf: str) -> DataFrame:
     32x shrink over float32, vs int8 quantization's 4x
     (sim_embed_quantize).  The codebook (m x k x d' = 1024 doubles) is
     k-means-trained per subspace with all subspaces sharing the same jobs,
-    broadcast everywhere, and the encode is an equi-join on `sub` + argmin
-    - one explode, one broadcast join, one partial-agg shuffle, no UDF.
+    broadcast everywhere as one row, and the encode is one explode plus
+    an inline argmin over the subvector's own subspace - map-only, no
+    shuffle, no UDF.
 
     Output: one row per vector with the code array rendered canonically
     (codes joined ','); reconstruction error and search recall are
@@ -3674,9 +3673,7 @@ def sim_pq_topk(spark: SparkSession, sf: str) -> DataFrame:
     e = load(spark, sf, "embeddings")
     p = _probe_or_none(e)
     if p is None:
-        return spark.createDataFrame(
-            [], "vec_id long, label int, adc_dist double"
-        )
+        return local_frame(spark, [], "vec_id long, label int, adc_dist double")
     v = F.col("embedding").cast("array<double>")
     vecs = e.filter((F.col("vec_id") != 0) & F.col("embedding").isNotNull()).select(
         "vec_id", "label", _vq_col(v).alias("vq")
@@ -3697,7 +3694,7 @@ def sim_pq_topk(spark: SparkSession, sf: str) -> DataFrame:
         )
         for s, c, v in rows
     ]
-    dt = spark.createDataFrame(dtab, "sub int, code int, d bigint")
+    dt = local_frame(spark, dtab, "sub int, code int, d bigint")
     return (
         codes.join(F.broadcast(dt), ["sub", "code"])
         .groupBy("vec_id")
@@ -4229,8 +4226,10 @@ def sim_mmr_rerank(spark: SparkSession, sf: str) -> DataFrame:
         )
         for i, (vid, lab, _v, rel, score) in enumerate(selected)
     ]
-    return spark.createDataFrame(
-        out, "rank int, vec_id long, label int, relevance double, mmr_score double"
+    return local_frame(
+        spark,
+        out,
+        "rank int, vec_id long, label int, relevance double, mmr_score double",
     )
 
 
@@ -4751,7 +4750,8 @@ def sim_ivf_nprobe_curve(spark: SparkSession, sf: str) -> DataFrame:
     e = load(spark, sf, "embeddings")
     p = _probe_or_none(e)
     if p is None:
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [(int(np), 0, 0, 0, None) for np in probes],
             "nprobe long, n_exact long, n_common long, n_missed long,"
             " recall_micro long",

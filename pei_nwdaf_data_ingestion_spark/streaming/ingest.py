@@ -16,7 +16,6 @@ from __future__ import annotations
 
 import json
 import os
-from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -71,32 +70,6 @@ def run_to_memory(
     )
     q.awaitTermination()
     return stream.sparkSession.table(name)
-
-
-class DiscoveredFieldsAccumulator:
-    """Cross-batch dynamic metric-field discovery (receiver.py:45-46,
-    394-410): per micro-batch, union the set of non-null metric columns /
-    JSON keys; `on_grow` fires when the set grows (the reference re-registers
-    columns with the policy service there)."""
-
-    def __init__(self, on_grow: Callable[[set[str]], None] | None = None) -> None:
-        self.fields: set[str] = set()
-        self.on_grow = on_grow
-
-    def foreach_batch(self, keys_col: str) -> Callable[[DataFrame, int], None]:
-        def _fn(batch: DataFrame, epoch_id: int) -> None:
-            rows = (
-                batch.select(F.explode(F.col(keys_col)).alias("k"))
-                .distinct()
-                .collect()
-            )
-            new = {r["k"] for r in rows} - self.fields
-            if new:
-                self.fields |= new
-                if self.on_grow:
-                    self.on_grow(set(self.fields))
-
-        return _fn
 
 
 def write_notifications_json(payloads: list[dict], out_dir: str) -> None:

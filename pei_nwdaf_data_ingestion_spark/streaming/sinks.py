@@ -1,6 +1,7 @@
-"""Sinks: Kafka JSON-batch publish + keyed fan-out - the egress half of the
-reference (receiver.py:442-456 Kafka produce; :207-242,451-452 WebSocket
-per-subscription broadcast), as foreachBatch writers.
+"""Sinks: Kafka JSON-batch publish and Arrow Flight put - the egress half
+of the reference (receiver.py:442-456 Kafka produce), as foreachBatch
+writers.  The per-subscription WebSocket broadcast (:207-242,451-452) is
+ws_egress.py.
 
 Delivery semantics are an upgrade over the reference's at-most-once
 (produce failure swallowed, receiver.py:444-456): foreachBatch +
@@ -9,11 +10,10 @@ checkpointing gives exactly-once per micro-batch for idempotent sinks.
 Kafka itself is gated behind an import-try (no broker/client in this image);
 the JSON-batch *shape* - one array of records per (notif) key, matching
 receiver.py:443 - is produced by pure column expressions and tested without
-a broker.  The keyed fan-out writes one stream per key to a directory tree,
-the file-system dual of topic-per-key / WS-per-subscription.  The Arrow
-Flight writer (flight_foreach_batch) is the wire-level egress this image
-CAN exercise end-to-end: one DoPut per micro-batch over a real gRPC socket,
-same packed payload contract as the Kafka path.  It publishes from the
+a broker.  The Arrow Flight writer (flight_foreach_batch) is the
+wire-level egress this image CAN exercise end-to-end: one DoPut per
+micro-batch over a real gRPC socket, same packed payload contract as the
+Kafka path.  It publishes from the
 driver, as the reference produces from its one process, and packs there
 too: one narrow Spark job (one stage, no Exchange, no Python worker)
 collects the batch's sorted per-record JSON through a JVM-side Arrow
@@ -28,9 +28,6 @@ groupBy are its scale path.
 """
 
 from __future__ import annotations
-
-import json
-import os
 
 import pyarrow as pa
 from pyspark.sql import DataFrame
@@ -99,9 +96,9 @@ def kafka_foreach_batch(topic: str, bootstrap: str, producer_factory=None):
         if factory is None:
             if not HAVE_KAFKA:
                 raise NotImplementedError(
-                    "confluent-kafka not installed in this image; use "
-                    "file_fanout_foreach_batch, install the client, or "
-                    "inject a producer_factory"
+                    "confluent-kafka not installed in this image; install "
+                    "the client, inject a producer_factory, or publish with "
+                    "flight_foreach_batch"
                 )
             factory = _default_producer_factory(bootstrap)
         t = topic
@@ -120,8 +117,8 @@ def kafka_foreach_batch(topic: str, bootstrap: str, producer_factory=None):
                 # at timeout - swallowing it would commit the micro-batch
                 # past lost messages (at-most-once on broker failure).
                 # Raising fails the task -> Spark retries the partition ->
-                # the epoch replays: at-least-once, with the idempotent
-                # epoch layout (file_fanout docstring) de-duplicating.
+                # the epoch replays: at-least-once, deduplicable
+                # downstream by (epoch, key).
                 undelivered = p.flush(30)
                 if undelivered:
                     raise RuntimeError(
@@ -164,7 +161,7 @@ def flight_foreach_batch(location: str, key: str = "notifId"):
     one connect / put / close per non-empty micro-batch.  A DoPut failure
     raises from the foreachBatch call, so the epoch is not committed and
     replays on restart: at-least-once, deduplicable downstream by
-    (epoch, key) exactly like the file fan-out's epoch layout.
+    (epoch, key), which the descriptor path carries.
 
     `location`: gRPC URI, e.g. "grpc://host:port".  The server side is
     any Flight endpoint accepting DoPut; FlightSpoolServer below is the
@@ -173,7 +170,8 @@ def flight_foreach_batch(location: str, key: str = "notifId"):
     def _write(batch: DataFrame, epoch_id: int) -> None:
         if not HAVE_FLIGHT:
             raise NotImplementedError(
-                "pyarrow.flight unavailable; use file_fanout_foreach_batch"
+                "pyarrow.flight unavailable in this pyarrow build; install "
+                "pyarrow with Flight, or publish with kafka_foreach_batch"
             )
         rec = _record(batch, key)
         recs = (
@@ -244,48 +242,3 @@ class FlightSpoolServer:
 
     def __exit__(self, *exc) -> None:
         self.close()
-
-
-def file_fanout_foreach_batch(out_dir: str, key: str = "notifId"):
-    """Keyed fan-out sink: each key's records land under
-    out_dir/epoch=<id>/<key>/ as JSON-lines - the reference's
-    per-subscription WebSocket push (receiver.py:227-239) with files
-    standing in for sockets.  Partitioned write keeps the fan-out
-    distributed (no driver collect of record data).
-
-    Exactly-once: the write is scoped to its epoch directory with
-    overwrite mode, so a REPLAYED micro-batch (Spark re-runs the epoch
-    after a failure between sink write and checkpoint commit) lands on the
-    same path and replaces itself instead of appending duplicates - the
-    idempotence foreachBatch needs to upgrade the reference's
-    at-most-once delivery to exactly-once."""
-
-    def _write(batch: DataFrame, epoch_id: int) -> None:
-        (
-            batch.withColumn("_k", F.col(key))
-            .write.mode("overwrite")
-            .partitionBy("_k")
-            .json(os.path.join(out_dir, f"epoch={epoch_id}"))
-        )
-
-    return _write
-
-
-def read_fanout(out_dir: str, key_value: str) -> list[dict]:
-    """Test helper: read one key's fan-out stream back across all epochs."""
-    records = []
-    if not os.path.isdir(out_dir):
-        return records
-    for epoch in sorted(os.listdir(out_dir)):
-        if not epoch.startswith("epoch="):
-            continue
-        d = os.path.join(out_dir, epoch, f"_k={key_value}")
-        if not os.path.isdir(d):
-            continue
-        for fn in sorted(os.listdir(d)):
-            if fn.endswith(".json"):
-                with open(os.path.join(d, fn)) as f:
-                    for line in f:
-                        if line.strip():
-                            records.append(json.loads(line))
-    return records

@@ -13,8 +13,8 @@ broken-connection eviction on broadcast (receiver.py:234-240).
 
 Scale posture: the socket push is inherently a single-endpoint,
 driver-side egress - exactly the reference's own single-process design;
-the scale path for keyed fan-out remains the executor-side partitioned
-sinks (sinks.file_fanout_foreach_batch / kafka) with this server fronting
+the scale path for keyed fan-out remains the executor-side Kafka sink
+(sinks.kafka_foreach_batch, one message per key) with this server fronting
 the live-subscriber tail, whose volume is bounded by the subscribers, not
 the corpus.
 """

@@ -12,6 +12,7 @@ import uuid
 import duckdb
 import pandas as pd
 import pytest
+from py4j.protocol import Py4JJavaError
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -85,10 +86,10 @@ def assert_frames_match(spark_pdf: pd.DataFrame, oracle_pdf: pd.DataFrame, name:
             )
 
 
-def jobs_of(spark, fn):
-    """(fn(), number of Spark jobs fn ran), counted through a job group.
-    The count waits for the listener bus, so a job-start event still
-    queued when fn returns is not missed."""
+def in_group(spark, fn):
+    """(fn(), the job group fn's Spark jobs ran in).  Returns once the
+    listener bus is empty, so a job-start event still queued when fn
+    returns is not missed by a count over the group."""
     sc = spark.sparkContext
     group = f"jobs_of_{uuid.uuid4().hex}"
     outer = sc.getLocalProperty("spark.jobGroup.id")
@@ -98,7 +99,42 @@ def jobs_of(spark, fn):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", outer)
     sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    return out, group
+
+
+def jobs_of(spark, fn):
+    """(fn(), number of Spark jobs fn ran), counted through a job group."""
+    out, group = in_group(spark, fn)
+    return out, len(spark.sparkContext.statusTracker().getJobIdsForGroup(group))
+
+
+def python_stages_of(spark, group) -> int:
+    """How many stages of `group`'s jobs scan Python-side data: stages
+    whose RDD graph holds a PythonRDD, as a createDataFrame(<list>) frame
+    does (PySpark runs it through parallelize, and no physical-plan node
+    names it).  Each such stage forks Python workers."""
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+    dot = spark._jvm.org.apache.spark.ui.scope.RDDOperationGraph.makeDotFile
+    stages = {
+        sid
+        for jid in sc.statusTracker().getJobIdsForGroup(group)
+        for sid in sc.statusTracker().getJobInfo(jid).stageIds
+    }
+    # Past spark.ui.retainedStages the store drops the stages that
+    # completed first, and skipped ones before those: a stage whose graph
+    # is gone did not run in this group, which ran last and holds far
+    # fewer stages than that limit.
+    n = 0
+    for sid in stages:
+        try:
+            graph = store.operationGraphForStage(sid)
+        except Py4JJavaError as e:
+            if "NoSuchElementException" not in str(e.java_exception):
+                raise
+            continue
+        n += "PythonRDD" in dot(graph)
+    return n
 
 
 def assert_no_global_window(df, name: str):

@@ -5,7 +5,6 @@ egress assertions (tests/test_receiver.py:365-395)."""
 from __future__ import annotations
 
 import json
-import tempfile
 
 import pytest
 from pyspark.errors import PySparkTypeError
@@ -21,10 +20,8 @@ from pei_nwdaf_data_ingestion_spark.pipeline.multimodal import (
 )
 from pei_nwdaf_data_ingestion_spark.pipeline.subscriptions import SubscriptionStore
 from pei_nwdaf_data_ingestion_spark.streaming.sinks import (
-    file_fanout_foreach_batch,
     kafka_foreach_batch,
     pack_batches,
-    read_fanout,
 )
 from tests.conftest import jobs_of
 from tests.test_reference_fidelity import SUB
@@ -233,18 +230,6 @@ class TestSinks:
         assert [p["ts_unix"] for p in payload] == [5, 10]  # sorted, deterministic
         assert rows["n2"]["n_records"] == 1
 
-    def test_file_fanout_partitions_by_key(self, spark):
-        df = spark.createDataFrame(
-            [("n1", 1, "a"), ("n1", 2, "b"), ("n2", 3, "c")],
-            "notifId string, ts_unix long, event string",
-        )
-        with tempfile.TemporaryDirectory(prefix="fanout_") as d:
-            file_fanout_foreach_batch(d)(df, epoch_id=0)
-            n1 = read_fanout(d, "n1")
-            n2 = read_fanout(d, "n2")
-            assert sorted(r["event"] for r in n1) == ["a", "b"]
-            assert [r["event"] for r in n2] == ["c"]
-
     def test_kafka_produce_is_executor_side(self, spark, tmp_path):
         """kafka_foreach_batch must produce FROM the partitions (no driver
         collect): a fake producer factory spools messages to files per
@@ -290,27 +275,6 @@ class TestSinks:
         assert all(m["topic"] == "nwdaf" for m in msgs)
         payload = json.loads(by_key["n1"]["value"])
         assert [p["ts_unix"] for p in payload] == [5, 10]  # one sorted array
-
-    def test_file_fanout_epoch_replay_is_idempotent(self, spark):
-        """Spark replays a micro-batch when failure hits between sink write
-        and checkpoint commit; the epoch-scoped overwrite must absorb the
-        replay (exactly-once), while a NEW epoch appends."""
-        df = spark.createDataFrame(
-            [("n1", 1, "a"), ("n1", 2, "b")],
-            "notifId string, ts_unix long, event string",
-        )
-        with tempfile.TemporaryDirectory(prefix="fanout_") as d:
-            sink = file_fanout_foreach_batch(d)
-            sink(df, epoch_id=0)
-            sink(df, epoch_id=0)  # replayed epoch: no duplicates
-            assert sorted(r["event"] for r in read_fanout(d, "n1")) == ["a", "b"]
-            sink(df, epoch_id=1)  # genuinely new epoch: appends
-            assert sorted(r["event"] for r in read_fanout(d, "n1")) == [
-                "a",
-                "a",
-                "b",
-                "b",
-            ]
 
 
 class TestFlightSink:

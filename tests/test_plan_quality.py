@@ -18,6 +18,13 @@ from tests.conftest import SF_DIR
 registry.load_all()
 
 
+def assert_map_only(plan: str) -> None:
+    """No shuffle Exchange (a BroadcastExchange is not one) and no
+    sort-merge join in a formatted physical plan."""
+    assert plan.count("Exchange") == plan.count("BroadcastExchange"), plan
+    assert "SortMergeJoin" not in plan, plan
+
+
 def plan_of(spark, name: str, *, adaptive: bool = True) -> str:
     """Formatted physical plan; adaptive=False pins AQE off so codegen
     spans are visible statically (under AQE they appear only in the
@@ -496,22 +503,21 @@ class TestRound6Plans:
             assert j not in plan
 
     def test_pq_encode_joins_broadcast_only(self, spark):
-        """PQ encode's codebook join must be a broadcast hash join on
-        `sub` (m x k = 128 rows) - a sort-merge join would shuffle every
-        subvector row against a 128-row table.  Inspected on the
+        """PQ encode shuffles no subvector against the codebook: the
+        codebook is one broadcast row and each subvector takes an inline
+        argmin over its own subspace, so the only join is the broadcast
+        nested-loop join with that row and the plan has no shuffle
+        Exchange and no sort-merge join.  Inspected on the
         un-checkpointed build plan (_pq_codes_plan): the cached/
         checkpointed index the query itself scans replaces the subtree
         with an RDD scan, by design."""
-        import contextlib
-        import io
-
         from pei_nwdaf_data_ingestion_spark.catalog import load
-        from pei_nwdaf_data_ingestion_spark.queries.llm import _pq_codes_plan
-        from pyspark.sql import functions as F
+        from pei_nwdaf_data_ingestion_spark.queries.llm import (
+            _pq_codes_plan,
+            _vq_col,
+        )
 
         e = load(spark, SF_DIR, "embeddings")
-        from pei_nwdaf_data_ingestion_spark.queries.llm import _vq_col
-
         vecs = e.filter(F.col("vec_id") != 0).select(
             "vec_id", _vq_col(F.col("embedding").cast("array<double>")).alias("vq")
         )
@@ -519,8 +525,33 @@ class TestRound6Plans:
         with contextlib.redirect_stdout(buf):
             _pq_codes_plan(spark, SF_DIR, vecs).explain("formatted")
         plan = buf.getvalue()
-        assert "BroadcastHashJoin" in plan
-        assert "SortMergeJoin" not in plan
+        assert "BroadcastNestedLoopJoin" in plan
+        assert_map_only(plan)
+
+    def test_ivf_assign_is_map_only(self, spark):
+        """The IVF nearest-centroid assignment over a built centroid frame
+        is map-only: the K centroids are one broadcast row, so no vector
+        row is shuffled to find its argmin."""
+        from pei_nwdaf_data_ingestion_spark.catalog import load
+        from pei_nwdaf_data_ingestion_spark.queries.llm import (
+            _ivf_assign,
+            _ivf_cents_df,
+            _ivf_centroid_rows,
+            _vq_col,
+        )
+
+        e = load(spark, SF_DIR, "embeddings")
+        v = F.col("embedding").cast("array<double>")
+        vecs = e.filter(F.col("vec_id") != 0).select(
+            "vec_id", "label", v.alias("v"), _vq_col(v).alias("vq")
+        )
+        cents = _ivf_cents_df(spark, _ivf_centroid_rows(spark, SF_DIR, vecs, 16))
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            _ivf_assign(vecs, cents).explain("formatted")
+        plan = buf.getvalue()
+        assert "LocalTableScan" in plan
+        assert_map_only(plan)
 
     def test_zorder_key_is_single_agg_shuffle(self, spark):
         """The Morton interleave is pure map-side arithmetic: the only
@@ -814,3 +845,31 @@ class TestMinhashPairRegimes:
         assert "BroadcastNestedLoopJoin" not in plan
         assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
         assert got == base and len(base) > 0
+
+
+class TestNoPythonStage:
+    """Driver-built tables are Arrow local relations: none of these builds
+    runs a stage over a PythonRDD, which createDataFrame(<list>) would
+    add (and with it a pyspark.daemon and its workers).  Each runs on a
+    cleared artifact store, so the cached k-means builds run too."""
+
+    @pytest.mark.parametrize(
+        "name",
+        [
+            "sim_ivf_topk",
+            "sim_pq_encode",
+            "time_cross_correlation",
+            "text_vocab_coverage_curve",
+            "pipeline_observe_metrics",
+            "sim_mmr_rerank",
+            "dedup_cluster_components",
+        ],
+    )
+    def test_build_runs_no_python_stage(self, spark, name):
+        from tests.conftest import in_group, python_stages_of
+
+        artifacts.clear()
+        _, group = in_group(
+            spark, lambda: registry.QUERIES[name](spark, SF_DIR).collect()
+        )
+        assert python_stages_of(spark, group) == 0

@@ -20,7 +20,6 @@ from pei_nwdaf_data_ingestion_spark.pipeline.nef import (
 )
 from pei_nwdaf_data_ingestion_spark.pipeline.subscriptions import SubscriptionStore
 from pei_nwdaf_data_ingestion_spark.streaming.ingest import (
-    DiscoveredFieldsAccumulator,
     build_ingest_stream,
     run_to_memory,
     write_notifications_json,
@@ -273,27 +272,6 @@ def test_malformed_subscription_dimension_fails_loudly(spark, subs, offending):
     notifs = spark.createDataFrame([PERF_NOTIF], NOTIFICATION)
     with pytest.raises(ValueError, match=offending):
         normalize_notifications(notifs, spark.createDataFrame(subs, SUBSCRIPTION))
-
-
-def test_discovered_fields_accumulator(spark):
-    """foreachBatch accumulator unions metric keys across micro-batches and
-    fires on growth (reference re-registers columns, receiver.py:399-410)."""
-    grow_events: list[set] = []
-    acc = DiscoveredFieldsAccumulator(on_grow=lambda s: grow_events.append(set(s)))
-    fn = acc.foreach_batch("keys")
-
-    b1 = spark.createDataFrame(
-        [(["thrputUl_mbps", "pdb_ms"],), (["thrputUl_mbps"],)], "keys array<string>"
-    )
-    b2 = spark.createDataFrame([(["thrputUl_mbps"],)], "keys array<string>")
-    b3 = spark.createDataFrame([(["plr_per_thousand"],)], "keys array<string>")
-
-    fn(b1, 0)
-    assert acc.fields == {"thrputUl_mbps", "pdb_ms"}
-    fn(b2, 1)  # no growth -> no event
-    fn(b3, 2)
-    assert acc.fields == {"thrputUl_mbps", "pdb_ms", "plr_per_thousand"}
-    assert len(grow_events) == 2
 
 
 def test_streaming_windowed_ingest_matches_batch(spark):
